@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark contract: run the query inventory on
   * SPARK_GRAFT_SF_DIR, print per-family JSON chunk lines plus ONE
   * final metric JSON line (total + family sums + slowest queries —
@@ -42,14 +40,7 @@ object Bench {
     val wall0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-bench")
     // Untimed warmup: JVM/codegen spin-up plus one scan per input table
     // (OS page cache) — otherwise the alphabetically-first query absorbs
     // all first-touch cost and per-query attribution is meaningless.

@@ -9,6 +9,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * built once per input fingerprint and read back from parquet
   * thereafter, across JVMs.
   *
+  * Two shapes share one publish path: a DataFrame artifact
+  * ([[getOrBuild]]) is one `data.parquet` dir read back as a
+  * DataFrame; a DIRECTORY artifact ([[getOrBuildDir]]) is whatever
+  * files its builder writes, returned as an absolute path — the
+  * streaming feeds (`StreamingQueries`, `<key>_feed_<fp>/`) are
+  * directory artifacts whose files carry pinned mtimes.
+  *
   * Contract, shared by every consumer:
   *
   *  - An artifact lives at `<spark.graft.artifacts.dir>/<name>_<fp>/`
@@ -162,23 +169,7 @@ object ArtifactStore {
       buildConf: Map[String, String] = Map.empty,
       buildMeta: Option[Seq[StageIO] => Seq[String]] = None)
       (build: SparkSession => DataFrame): DataFrame = {
-    val rootDir = root(spark)
-    val art = new java.io.File(rootDir, s"${name}_$fp")
-    val marker = new java.io.File(art, "_graft_done")
-    val data = new java.io.File(art, "data.parquet")
-    if (!marker.exists) {
-      builds.incrementAndGet()
-      // operational breadcrumb (stderr, never stdout — Bench's metric
-      // line owns stdout): which process paid which one-time build is
-      // the first question a cold-start investigation asks, and the
-      // two-JVM soak reads its build/read split from exactly this line
-      System.err.println(
-        s"[artifact] build ${name}_$fp pid=${ProcessHandle.current().pid()} scope=$scope")
-      // build into a process-unique temp dir: data, meta, then marker —
-      // a kill at any point leaves only unreferenced debris
-      val nonce = java.lang.Long.toHexString(System.nanoTime())
-      val tmp = new java.io.File(rootDir,
-        s".tmp_${name}_${fp}_${ProcessHandle.current().pid()}_$nonce")
+    val art = getOrBuildDirUnlocked(spark, name, fp, scope, builds) { tmp =>
       // build-scoped execution confs (see getOrBuild doc): the thunk
       // constructs its plan on a cloned session carrying buildConf —
       // the serving session's conf is never touched, so there is
@@ -207,31 +198,70 @@ object ArtifactStore {
       val tap = new StageIOTap
       spark.sparkContext.addSparkListener(tap)
       try {
-        try {
-          build(buildSession).write.mode("overwrite")
-            .parquet(new java.io.File(tmp, "data.parquet").getAbsolutePath)
-          org.apache.spark.sql.GraftShims.waitListenerBus(spark)
-          val stages = tap.stages
-          val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            buildSession.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-          val (profile, warn) = buildProfile(s"${name}_$fp", stages, advisory,
-            widthOverridden = buildConf.contains("spark.sql.shuffle.partitions"))
-          warn.foreach(System.err.println)
-          val extra = profile ++ buildMeta.map(_(stages)).getOrElse(Seq.empty)
-          writeMeta(new java.io.File(tmp, "_graft_meta"), scope, extra)
-          require(new java.io.File(tmp, "_graft_done").createNewFile(),
-            s"could not create done marker under $tmp")
-        } catch { case e: Throwable =>
-          // a FAILED build (not a kill) cleans its own debris — the
-          // dead-pid sweep can't reach a temp dir whose process lives on
-          deleteRec(tmp)
-          throw e
-        }
+        build(buildSession).write.mode("overwrite")
+          .parquet(new java.io.File(tmp, "data.parquet").getAbsolutePath)
+        org.apache.spark.sql.GraftShims.waitListenerBus(spark)
+        val stages = tap.stages
+        val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+          buildSession.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+        val (profile, warn) = buildProfile(s"${name}_$fp", stages, advisory,
+          widthOverridden = buildConf.contains("spark.sql.shuffle.partitions"))
+        warn.foreach(System.err.println)
+        profile ++ buildMeta.map(_(stages)).getOrElse(Seq.empty)
       } finally spark.sparkContext.removeSparkListener(tap)
+    }
+    spark.read.parquet(new java.io.File(art, "data.parquet").getAbsolutePath)
+  }
+
+  /** The directory-level get-or-build every artifact goes through:
+    * return the absolute path of `<name>_<fp>/` if its marker exists,
+    * else create a process-unique `.tmp_` dir, let `build` write the
+    * artifact's files into it (returning extra `_graft_meta` lines),
+    * write the meta and the marker, publish with one atomic rename and
+    * run retention. Builds are serialized per JVM by [[buildLock]].
+    * Files keep whatever mtimes `build` gives them (the rename moves
+    * the directory, not its files) — the streaming feeds rely on that,
+    * since FileStreamSource orders batches by (mtime, path). */
+  def getOrBuildDir(spark: SparkSession, name: String, fp: String, scope: String,
+      builds: java.util.concurrent.atomic.AtomicLong)
+      (build: java.io.File => Seq[String]): java.io.File =
+    buildLock.synchronized { getOrBuildDirUnlocked(spark, name, fp, scope, builds)(build) }
+
+  private def getOrBuildDirUnlocked(spark: SparkSession, name: String, fp: String,
+      scope: String, builds: java.util.concurrent.atomic.AtomicLong)
+      (build: java.io.File => Seq[String]): java.io.File = {
+    val rootDir = root(spark)
+    val art = new java.io.File(rootDir, s"${name}_$fp")
+    val marker = new java.io.File(art, "_graft_done")
+    if (!marker.exists) {
+      builds.incrementAndGet()
+      // operational breadcrumb (stderr, never stdout — Bench's metric
+      // line owns stdout): which process paid which one-time build is
+      // the first question a cold-start investigation asks, and the
+      // two-JVM soak reads its build/read split from exactly this line
+      System.err.println(
+        s"[artifact] build ${name}_$fp pid=${ProcessHandle.current().pid()} scope=$scope")
+      // build into a process-unique temp dir: data, meta, then marker —
+      // a kill at any point leaves only unreferenced debris
+      val nonce = java.lang.Long.toHexString(System.nanoTime())
+      val tmp = new java.io.File(rootDir,
+        s".tmp_${name}_${fp}_${ProcessHandle.current().pid()}_$nonce")
+      try {
+        require(tmp.mkdirs(), s"could not create build dir $tmp")
+        val extra = build(tmp)
+        writeMeta(new java.io.File(tmp, "_graft_meta"), scope, extra)
+        require(new java.io.File(tmp, "_graft_done").createNewFile(),
+          s"could not create done marker under $tmp")
+      } catch { case e: Throwable =>
+        // a FAILED build (not a kill) cleans its own debris — the
+        // dead-pid sweep can't reach a temp dir whose process lives on
+        deleteRec(tmp)
+        throw e
+      }
       publish(tmp, art, marker)
       if (marker.exists) retainOnly(rootDir, name, fp, scope)
     }
-    spark.read.parquet(data.getAbsolutePath)
+    art.getAbsoluteFile
   }
 
   /** Atomically move the fully-built `tmp` into place at `art`. The

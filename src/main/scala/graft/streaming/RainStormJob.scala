@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -131,11 +129,11 @@ object RainStormJob {
       .start()
   }
 
-  /** Convenience: run the bounded streaming job to completion. */
+  /** Convenience: run the bounded streaming job to completion on a
+    * temp checkpoint that is deleted afterwards. */
   def runStreamingToCompletion(spark: SparkSession, op1: String, op2: String,
-                               srcDir: String, dest: String): Unit = {
-    val ckpt = Files.createTempDirectory("rainstorm_ckpt").toString
-    val q = runStreaming(spark, op1, op2, srcDir, dest, ckpt)
-    q.awaitTermination()
-  }
+                               srcDir: String, dest: String): Unit =
+    StreamRun.withCheckpointDir("rainstorm_ckpt") { ckpt =>
+      runStreaming(spark, op1, op2, srcDir, dest, ckpt).awaitTermination()
+    }
 }

@@ -1,13 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
-import java.util.UUID
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.Tables
+import graft.core.{ArtifactStore, Tables}
 import graft.queries.FunctionQueries
 
 /** Streaming members of the declared inventory (SURVEY §2.4).
@@ -21,169 +20,71 @@ import graft.queries.FunctionQueries
   */
 object StreamingQueries {
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`. A streaming aggregation's STATE STORE partition count is
-    * pinned from this conf at query start, and every micro-batch
-    * commits one delta file per state partition — at the session's 32,
-    * commit overhead dwarfs these bounded demo feeds (measured at
-    * sf0.1: x27 6.9 s → 3.2 s, r9 2.5 s → 1.4 s when sized to 8).
-    * Sizing state partitions to the stream's volume is a per-deployment
-    * operator decision; at 100 TB ingest the right value is much
-    * larger, and this wrapper is where that knob lives.
-    *
-    * The STATE STORE PROVIDER is also chosen here, and the choice is
-    * scale-deliberate: RocksDB with changelog checkpointing. The
-    * default HDFS-backed provider keeps every key of every state
-    * partition in executor heap memory and snapshots whole maps per
-    * commit — at 100 TB ingest (stream-stream join buffers, dedup key
-    * sets, session state for every active user) that heap residency is
-    * THE streaming scale ceiling; RocksDB keeps state off-heap with
-    * disk spill, and changelog checkpointing uploads only each batch's
-    * delta instead of a full snapshot, making commit cost follow the
-    * CHANGE rate, not the state size. The provider's demo-feed price
-    * is now ATTRIBUTED, not just accepted (RocksDbStateSpec instruments
-    * the x31 shape): per batch, the dominant term is the CHANGELOG
-    * COMMIT FILE-SYNC — one fsync'd file per state store per batch
-    * (x31/x32 run FOUR stores per partition), plus a one-time ~18 ms
-    * open per store and 100–400 ms of per-trigger query re-planning.
-    * That fsync term is exactly the component that inflates under a
-    * loaded IO subsystem, which is why the round-5 driver bench (heavy
-    * co-tenant IO) measured these lines at 2–3× their quiet values
-    * while the non-streaming board stayed flat. Round-6 mitigations,
-    * measured quiet at sf0.1 (min of two passes, 8-query subset
-    * 19.5 → 17.0 s): checkpoint checksum SIDECAR files off (a 4.1
-    * default that doubles file creates/renames/syncs per commit),
-    * RocksDB put-path read-before-write off, and demo feeds sized to 4
-    * state partitions (x31 2.95 s, x32 3.87 s, x27 2.55 s, x33 1.96 s;
-    * 2 partitions was tried and is SLOWER quiet — per-store fsyncs run
-    * in parallel across tasks, so halving partitions serializes them).
-    * At demo scale the HDFS provider's in-memory maps remain
-    * unbeatable; at production state sizes they are the thing that
-    * falls over first. `spark.graft.streaming.stateStore=hdfs`
-    * restores the default provider (the conf escape hatch a deployment
-    * would use where RocksDB's native lib is unavailable). */
-  private def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val pairs =
-      Seq("spark.sql.shuffle.partitions" -> n.toString) ++
-        (if (spark.conf.getOption("spark.graft.streaming.stateStore").contains("hdfs")) Nil
-         else Seq(
-           "spark.sql.streaming.stateStore.providerClass" ->
-             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-           // skip the read-before-write RocksDB does per put to keep an
-           // exact key count (a METRICS nicety, not a semantics one):
-           // numRowsTotal reports -1 instead and every put saves a get
-           "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
-           // 4.1 writes a checksum SIDECAR next to every checkpoint
-           // file (default on) — for a RocksDB changelog commit that
-           // means 2x the file creates/renames/syncs per store per
-           // batch, and RocksDbStateSpec measured the changelog
-           // file-sync as THE dominant per-batch fixed cost. Integrity
-           // checking of throwaway demo checkpoints buys nothing;
-           // deployments pointing checkpoints at an object store can
-           // re-enable it per query
-           "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false"))
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+  /** Feed builds in this JVM — every feed is an [[ArtifactStore]]
+    * directory artifact, and this is its build counter. */
+  private[graft] val feedBuilds = new AtomicLong
 
-  /** Cache key for a per-SF-dir derived feed: the SOURCE TABLE's
-    * identity AND content fingerprint (length + mtime). The key is the
-    * source dir's (sanitized) basename plus a 128-bit SHA-256 prefix of
-    * the full identity string — collision-PROOF for any realistic set
-    * of feed dirs, not merely collision-unlikely (a 32-bit hash could
-    * silently alias two SF dirs and serve foreign data to a
-    * correctness harness). Callers must name the table their feed is
-    * actually derived from. */
-  private def feedKey(dir: String, table: String, version: String): String = {
-    val src = new java.io.File(dir, s"$table.parquet")
-    val identity = s"${new java.io.File(dir).getAbsolutePath}:$table:${src.length}:${src.lastModified}"
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(identity.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hex = sha.take(16).map(b => f"$b%02x").mkString
-    val base = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${base}_$hex$version"
+  /** Get-or-build the feed `<key>_feed` derived from `<dir>/<table>`:
+    * an [[ArtifactStore]] directory artifact under
+    * `spark.graft.artifacts.dir`, keyed by the source table's files
+    * plus `<key>_feed_<version>`, so a regenerated table or a bumped
+    * version rebuilds it and retention prunes the old one. `build`
+    * writes the feed's files into the directory it is given. Returns
+    * the absolute path, since chaos subprocesses read feeds from
+    * another working directory. */
+  private def feed(spark: SparkSession, dir: String, key: String, table: String,
+      version: String)(build: java.io.File => Unit): String = {
+    val fp = ArtifactStore.fingerprint(dir, Seq(s"$table.parquet"), Seq(s"${key}_feed_$version"))
+    ArtifactStore.getOrBuildDir(spark, s"${key}_feed", fp, dir, feedBuilds) { out =>
+      build(out)
+      Nil
+    }.toString
   }
-
-  /** Commit a built feed scratch dir to `root` (atomic rename). On a
-    * lost race the winner's feed is used; on a rename failure with NO
-    * winner present (cross-device move, permissions) we fail loudly
-    * instead of returning a path that doesn't exist. */
-  private def commitFeed(scratch: java.io.File, root: java.io.File): Unit =
-    if (!scratch.renameTo(root)) {
-      val winner = new java.io.File(root, "_FEED_READY").exists()
-      org.apache.commons.io.FileUtils.deleteDirectory(scratch)
-      if (!winner) throw new IllegalStateException(
-        s"feed commit failed: could not rename $scratch to $root and no " +
-          "completed feed exists there")
-    }
 
   /** The r9 feed (4 ts-range parquet files) is a pure function of the
     * source table, so it is written ONCE per SF dir and reused by every
     * later run in the container (Verify then Bench both pay it
     * otherwise — ~2 s of range-shuffle + write that measures the
-    * harness, not the streaming semantics). Commit protocol: build in a
-    * scratch dir (marker included), then one atomic directory rename —
-    * a concurrent loser just deletes its scratch and reads the
-    * winner's feed; a crashed build leaves no half-visible feed. */
-  private[graft] def feedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_r9_feed_${feedKey(dir, "events", "_v2")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_r9_build").toFile
+    * harness, not the streaming semantics). */
+  private[graft] def feedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "r9", "events", "v2") { out =>
       Tables.load(spark, dir, "events")
         .repartitionByRange(4, col("ts"))
-        .write.mode("overwrite").parquet(new java.io.File(scratch, "feed").toString)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
-    }
-    new java.io.File(root, "feed").toString
-  }
+        .write.mode("overwrite").parquet(new java.io.File(out, "feed").toString)
+    } + "/feed"
 
   /** R9 — running aggregate (O8, rainstorm.go:551-566): feed events in
     * ts-ordered chunks (repartitionByRange preserves global ts order
     * across files), `groupBy(event_type).count()` in complete mode;
     * return the final snapshot. */
   def r9StreamingAgg(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
-    val feed = feedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_r9").toString
-    val schema = spark.read.parquet(feed).schema
-    // 4 ts-range files fed 2 per trigger -> 2 genuine micro-batches:
-    // the minimum that still exercises cross-batch state merge (the
-    // semantics under test); per-trigger fixed cost (~1 s
-    // planning+commit each) is the whole runtime of this query, so
-    // batch count is the knob that matters.
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(feed)
-    val qname = "r9_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = stream.groupBy("event_type").agg(count(lit(1)).as("cnt"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(qname).orderBy("event_type")
-  }
+    StreamRun(spark, "r9", 4, "complete") {
+      // 4 ts-range files fed 2 per trigger -> 2 genuine micro-batches:
+      // the minimum that still exercises cross-batch state merge (the
+      // semantics under test); per-trigger fixed cost (~1 s
+      // planning+commit each) is the whole runtime of this query, so
+      // batch count is the knob that matters.
+      fileStream(spark, feedFor(spark, dir), 2)
+        .groupBy("event_type").agg(count(lit(1)).as("cnt"))
+    }.rows.orderBy("event_type")
 
-  /** Write `df` as ONE flat parquet file `<name>.parquet` in `scratch`
+  /** A file-source stream over the parquet `feed`, `maxFiles` files
+    * per trigger, with the schema read from the feed itself. */
+  private def fileStream(spark: SparkSession, feed: String, maxFiles: Int): DataFrame =
+    spark.readStream
+      .schema(spark.read.parquet(feed).schema)
+      .option("maxFilesPerTrigger", maxFiles.toString)
+      .parquet(feed)
+
+  /** Write `df` as ONE flat parquet file `<name>.parquet` in `out`
     * with an explicit mtime — FileStreamSource orders by (mtime, path),
     * so this pins the batch order of a multi-file feed. */
-  private def writeOne(scratch: java.io.File)(df: DataFrame, name: String, mtime: Long): Unit = {
-    val part = new java.io.File(scratch, s"build_$name")
+  private def writeOne(out: java.io.File)(df: DataFrame, name: String, mtime: Long): Unit = {
+    val part = new java.io.File(out, s"build_$name")
     df.coalesce(1).write.mode("overwrite").parquet(part.toString)
     val f = part.listFiles()
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    val dst = new java.io.File(scratch, s"$name.parquet")
+    val dst = new java.io.File(out, s"$name.parquet")
     require(f.renameTo(dst) && dst.setLastModified(mtime), s"feed commit failed for $name")
     org.apache.commons.io.FileUtils.deleteDirectory(part)
   }
@@ -210,51 +111,36 @@ object StreamingQueries {
     * batch — its checkpoints show 5 committed batches) emits every
     * closed window. 4 micro-batches instead of 5; admitted/dropped
     * sets and emission batch-relative timing identical by
-    * construction. Built once per SF dir with the same atomic-rename
-    * commit as the r9 feed. The mtime base is an arbitrary fixed
-    * epoch — only the ORDER matters. */
-  private def watermarkFeedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_x27_feed_${feedKey(dir, "events", "_v4")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_x27_build").toFile
+    * construction. Built once per SF dir, like the r9 feed. The mtime
+    * base is an arbitrary fixed epoch — only the ORDER matters. */
+  private def watermarkFeedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "x27", "events", "v4") { out =>
       val events = Tables.load(spark, dir, "events").select(col("event_id"), col("ts"))
-      val w = writeOne(scratch) _
+      val w = writeOne(out) _
       val t0 = 1600000000000L
       w(events.filter(col("event_id") % 4 =!= 0), "a", t0)
       w(events.filter(lit(false)), "b", t0 + 60000L)
       w(events.filter(col("event_id") % 4 === 0)
         .unionByName(events.agg(lit(-1L).as("event_id"),
           (max(col("ts")) + expr("INTERVAL 10 MINUTES")).as("ts"))), "c", t0 + 120000L)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
     }
-    root.toString
-  }
 
   /** x29's feed: the on-time batch, an empty bridge, then a batch that
     * RE-SENDS a third of the on-time rows verbatim (same event_id, same
     * ts — the at-least-once re-delivery a real ingest pipeline sees).
     * No flush sentinel: streaming dedup emits first arrivals
     * immediately, nothing waits on a window close. */
-  private def dedupFeedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_x29_feed_${feedKey(dir, "events", "_v2")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_x29_build").toFile
+  private def dedupFeedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "x29", "events", "v2") { out =>
       val events = Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"))
       val onTime = events.filter(col("event_id") % 4 =!= 0)
-      val w = writeOne(scratch) _
+      val w = writeOne(out) _
       val t0 = 1600000000000L
       w(onTime, "a", t0)
       w(events.filter(lit(false)), "b", t0 + 60000L)
       w(onTime.filter(col("event_id") % 3 === 0), "c", t0 + 120000L)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
     }
-    root.toString
-  }
 
   /** x29 — streaming DEDUPLICATION with bounded state:
     * `dropDuplicatesWithinWatermark(event_id)` under a 30 s watermark.
@@ -270,27 +156,11 @@ object StreamingQueries {
     * (plain dropDuplicates would). The oracle is the batch distinct
     * over the same on-time set. */
   def x29StreamDedup(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
-    val feed = dedupFeedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x29").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val qname = "x29_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = stream.withWatermark("ts", "30 seconds")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(qname).orderBy("event_id")
-  }
+    StreamRun(spark, "x29", 4, "append") {
+      fileStream(spark, dedupFeedFor(spark, dir), 1)
+        .withWatermark("ts", "30 seconds")
+        .dropDuplicatesWithinWatermark("event_id")
+    }.rows.orderBy("event_id")
 
   /** x27 — event-time WATERMARK semantics, oracle-checked: 1-minute
     * tumbling-window counts in append mode with a 30 s watermark over
@@ -306,29 +176,13 @@ object StreamingQueries {
     * relies on to bound state: without the watermark, every window
     * ever seen stays resident. */
   def x27StreamWatermark(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
-    val feed = watermarkFeedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x27").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val qname = "x27_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = stream.withWatermark("ts", "30 seconds")
-      .groupBy(window(col("ts"), "1 minute"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("wstart"), col("cnt"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(qname).orderBy("wstart")
-  }
+    StreamRun(spark, "x27", 4, "append") {
+      fileStream(spark, watermarkFeedFor(spark, dir), 1)
+        .withWatermark("ts", "30 seconds")
+        .groupBy(window(col("ts"), "1 minute"))
+        .agg(count(lit(1)).as("cnt"))
+        .select(col("window.start").as("wstart"), col("cnt"))
+    }.rows.orderBy("wstart")
 
   /** x31's feed: TWO file-source directories so the join's inputs are
     * separate streams — `views/a` (every view event) arrives in batch 1;
@@ -340,24 +194,23 @@ object StreamingQueries {
     * the join is exercised ACROSS batches (buffered state, not a
     * single-batch co-join) yet stays deterministic: every match is
     * emitted, and the batch inner join is an exact oracle. */
-  private[graft] def joinFeedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_x31_feed_${feedKey(dir, "events", "_v2")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_x31_build").toFile
-      val vDir = new java.io.File(scratch, "views")
-      val pDir = new java.io.File(scratch, "purchases")
-      require(vDir.mkdirs() && pDir.mkdirs(), s"cannot create feed dirs under $scratch")
+  private[graft] def joinFeedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "x31", "events", "v2") { out =>
+      val (vDir, pDir) = viewsAndPurchases(out)
       val events = Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val t0 = 1600000000000L
       writeOne(vDir)(events.filter(col("event_type") === "view"), "a", t0)
       writeOne(pDir)(events.filter(lit(false)), "e", t0)
       writeOne(pDir)(events.filter(col("event_type") === "purchase"), "b", t0 + 60000L)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
     }
-    root.toString
+
+  /** The two file-source dirs of a join feed, created under `out`. */
+  private def viewsAndPurchases(out: java.io.File): (java.io.File, java.io.File) = {
+    val vDir = new java.io.File(out, "views")
+    val pDir = new java.io.File(out, "purchases")
+    require(vDir.mkdirs() && pDir.mkdirs(), s"cannot create feed dirs under $out")
+    (vDir, pDir)
   }
 
   /** x31's feed at 10× volume — the stream-stream JOIN sibling of
@@ -373,14 +226,9 @@ object StreamingQueries {
     * (StreamingFloorProbe), x51 measures keyed-dedup state
     * throughput, and this feed completes the streaming cost model
     * with rows/s through the FOUR join state stores. */
-  private[graft] def joinThroughputFeedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_x31tp_feed_${feedKey(dir, "events", "_v1")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_x31tp_build").toFile
-      val vDir = new java.io.File(scratch, "views")
-      val pDir = new java.io.File(scratch, "purchases")
-      require(vDir.mkdirs() && pDir.mkdirs(), s"cannot create feed dirs under $scratch")
+  private[graft] def joinThroughputFeedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "x31tp", "events", "v1") { out =>
+      val (vDir, pDir) = viewsAndPurchases(out)
       val base = Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       // the r·10⁹ replica offset assumes every base id fits below it; on
@@ -403,11 +251,7 @@ object StreamingQueries {
       writeOne(vDir)(events.filter(col("event_type") === "view"), "a", t0)
       writeOne(pDir)(events.filter(lit(false)), "e", t0)
       writeOne(pDir)(events.filter(col("event_type") === "purchase"), "b", t0 + 60000L)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
     }
-    root.toString
-  }
 
   /** x31 — STREAM-STREAM inner join, the canonical hard streaming
     * operator: purchases joined to the same user's views from the
@@ -441,32 +285,14 @@ object StreamingQueries {
   }
 
   def x31StreamStreamJoin(spark: SparkSession, dir: String): DataFrame =
-      // 4, not 8: a stream-stream join runs FOUR state stores per
-      // partition (keyToNumValues + keyWithIndexToValue, each side) and
-      // commits every one per micro-batch — partition count is 4x the
-      // commit lever it is for a plain stateful agg
-      withShufflePartitions(spark, 4) {
-    val feed = joinFeedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x31").toString
-    val vPath = s"$feed/views"
-    val pPath = s"$feed/purchases"
-    val vSchema = spark.read.parquet(vPath).schema
-    val views = spark.readStream.schema(vSchema)
-      .option("maxFilesPerTrigger", "1").parquet(vPath)
-    val purchases = spark.readStream.schema(vSchema)
-      .option("maxFilesPerTrigger", "1").parquet(pPath)
-    val qname = "x31_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = x31Join(views, purchases)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(qname).orderBy("purchase_id", "view_id")
-  }
+    // 4, not 8: a stream-stream join runs FOUR state stores per
+    // partition (keyToNumValues + keyWithIndexToValue, each side) and
+    // commits every one per micro-batch — partition count is 4x the
+    // commit lever it is for a plain stateful agg
+    StreamRun(spark, "x31", 4, "append") {
+      val feed = joinFeedFor(spark, dir)
+      x31Join(fileStream(spark, s"$feed/views", 1), fileStream(spark, s"$feed/purchases", 1))
+    }.rows.orderBy("purchase_id", "view_id")
 
   /** x32's feed: x31's two-source layout plus one far-future SENTINEL
     * row per source (user_id = -1, ts = max + 10 min — matches nothing).
@@ -495,14 +321,9 @@ object StreamingQueries {
     * emission would need the watermark to pass their ts, which the 30 s
     * delay forbids. Measured quiet at sf0.1 (isolated, min of two):
     * see OPTIMIZATION_r18.md. */
-  private def outerJoinFeedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_x32_feed_${feedKey(dir, "events", "_v4")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_x32_build").toFile
-      val vDir = new java.io.File(scratch, "views")
-      val pDir = new java.io.File(scratch, "purchases")
-      require(vDir.mkdirs() && pDir.mkdirs(), s"cannot create feed dirs under $scratch")
+  private def outerJoinFeedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "x32", "events", "v4") { out =>
+      val (vDir, pDir) = viewsAndPurchases(out)
       val events = Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val sentinel = events.agg(lit(-1L).as("event_id"),
@@ -515,11 +336,7 @@ object StreamingQueries {
       writeOne(pDir)(events.filter(col("event_type") === "purchase")
         .unionByName(sentinel), "b", t0 + 60000L)
       writeOne(pDir)(events.filter(lit(false)), "z", t0 + 120000L)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
     }
-    root.toString
-  }
 
   /** x32 — stream-stream LEFT OUTER join: x31's purchases⋈views with
     * the unmatched purchases KEPT, null-padded. The semantics under
@@ -537,48 +354,33 @@ object StreamingQueries {
     * the unmatched rows surface with bounded delay instead of leaking
     * state or being dropped. Oracle: the batch LEFT JOIN. */
   def x32StreamOuterJoin(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
-    val feed = outerJoinFeedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x32").toString
-    val vPath = s"$feed/views"
-    val pPath = s"$feed/purchases"
-    val schema = spark.read.parquet(pPath).schema
-    val views = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(vPath)
-      .select(col("event_id").as("view_id"), col("user_id").as("v_uid"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "30 seconds")
-    val purchases = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(pPath)
-      .select(col("event_id").as("purchase_id"), col("user_id").as("user_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "30 seconds")
-    val qname = "x32_state_" + UUID.randomUUID().toString.replace("-", "")
-    // NO sentinel filter inside the streaming plan: Catalyst pushes a
-    // left-column filter through the left join all the way into the
-    // purchases SCAN, where parquet row-group pruning drops the
-    // sentinel file before the watermark operator ever sees it — the
-    // purchases watermark then never advances and the final purchase
-    // is never flushed. The sentinel cannot reach the sink anyway (its
-    // own emission would need the watermark to pass its ts, which the
-    // 30 s delay forbids); the batch-side filter below is a guard.
-    val q = purchases.join(views,
-        col("user_id") === col("v_uid") &&
-          expr("v_ts BETWEEN p_ts - INTERVAL 1 DAY AND p_ts"),
-        "left_outer")
-      .select(col("user_id"), col("purchase_id"), col("view_id"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // NULLS LAST to match DuckDB's ASC default (Spark defaults first)
-    spark.table(qname).filter(col("user_id") =!= -1L)
+    StreamRun(spark, "x32", 4, "append") {
+      val feed = outerJoinFeedFor(spark, dir)
+      val views = fileStream(spark, s"$feed/views", 1)
+        .select(col("event_id").as("view_id"), col("user_id").as("v_uid"),
+          col("ts").as("v_ts"))
+        .withWatermark("v_ts", "30 seconds")
+      val purchases = fileStream(spark, s"$feed/purchases", 1)
+        .select(col("event_id").as("purchase_id"), col("user_id").as("user_id"),
+          col("ts").as("p_ts"))
+        .withWatermark("p_ts", "30 seconds")
+      // NO sentinel filter inside the streaming plan: Catalyst pushes a
+      // left-column filter through the left join all the way into the
+      // purchases SCAN, where parquet row-group pruning drops the
+      // sentinel file before the watermark operator ever sees it — the
+      // purchases watermark then never advances and the final purchase
+      // is never flushed. The sentinel cannot reach the sink anyway (its
+      // own emission would need the watermark to pass its ts, which the
+      // 30 s delay forbids); the batch-side filter below is a guard.
+      purchases.join(views,
+          col("user_id") === col("v_uid") &&
+            expr("v_ts BETWEEN p_ts - INTERVAL 1 DAY AND p_ts"),
+          "left_outer")
+        .select(col("user_id"), col("purchase_id"), col("view_id"))
+    }.rows
+      .filter(col("user_id") =!= -1L)
+      // NULLS LAST to match DuckDB's ASC default (Spark defaults first)
       .orderBy(col("purchase_id"), col("view_id").asc_nulls_last)
-  }
 
   /** x33's feed: the events stream in TWO ts-ordered halves (split at
     * the time-range midpoint — batch 2 never delivers an event older
@@ -605,11 +407,8 @@ object StreamingQueries {
     * batch, exactly as when it arrived one batch earlier. The
     * sentinel's own session never emits (its timeout sits past the
     * final watermark). */
-  private[graft] def sessionFeedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_x33_feed_${feedKey(dir, "events", "_v3")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_x33_build").toFile
+  private[graft] def sessionFeedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "x33", "events", "v3") { out =>
       val events = Tables.load(spark, dir, "events")
         .select(col("user_id"), col("ts"), col("event_type"))
       // midpoint as a broadcast 1-row join, not a driver collect
@@ -619,17 +418,13 @@ object StreamingQueries {
       val sentinel = events.agg(lit(-1L).as("user_id"),
         (max(col("ts")) + expr("INTERVAL 100 MINUTES")).as("ts"),
         lit("sentinel").as("event_type"))
-      val w = writeOne(scratch) _
+      val w = writeOne(out) _
       val t0 = 1600000000000L
       w(withMid.filter(col("ts") <= col("mid")).drop("mid"), "a", t0)
       w(withMid.filter(col("ts") > col("mid")).drop("mid")
         .unionByName(sentinel), "b", t0 + 60000L)
       w(events.filter(lit(false)), "z", t0 + 120000L)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
     }
-    root.toString
-  }
 
   /** x33 — ARBITRARY per-key streaming state via
     * `flatMapGroupsWithState` ([[Sessionize]]): gap-based sessionization
@@ -646,31 +441,17 @@ object StreamingQueries {
     * [[Sessionize]]'s rule, deliberately distinct from x28's
     * `session_window` convention, and the oracle pins WHICH rule the
     * operator implements). */
-  def x33StatefulSessions(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
+  def x33StatefulSessions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feed = sessionFeedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x33").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val qname = "x33_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = Sessionize.sessions(spark, stream.as[Sessionize.Event], gapMinutes = 30)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // sentinel guard on the BATCH side (a filter inside the streaming
-    // plan could be pushed into the scan and starve the watermark —
-    // the x32 lesson); the sentinel's own session never emits anyway
-    // (its timeout sits past the final watermark)
-    spark.table(qname).filter(col("user_id") =!= -1L)
+    StreamRun(spark, "x33", 4, "append") {
+      val stream = fileStream(spark, sessionFeedFor(spark, dir), 1)
+      Sessionize.sessions(spark, stream.as[Sessionize.Event], gapMinutes = 30).toDF()
+    }.rows
+      // sentinel guard on the BATCH side (a filter inside the streaming
+      // plan could be pushed into the scan and starve the watermark —
+      // the x32 lesson); the sentinel's own session never emits anyway
+      // (its timeout sits past the final watermark)
+      .filter(col("user_id") =!= -1L)
       .select(col("user_id"), col("start").as("session_start"),
         col("end").as("session_end"), col("n_events"))
       .orderBy("user_id", "session_start")
@@ -684,27 +465,20 @@ object StreamingQueries {
     * third). Exists so the bench carries a THROUGHPUT number for the
     * stateful path, not just the per-trigger fixed-cost floor the
     * 4-batch demo feeds measure (VERDICT r5 task 6). */
-  private[graft] def throughputFeedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_x51_feed_${feedKey(dir, "events", "_v1")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_x51_build").toFile
+  private[graft] def throughputFeedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "x51", "events", "v1") { out =>
       val events = Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"))
         .crossJoin(broadcast(spark.range(10).toDF("r")))
         .select((col("event_id") + col("r") * 1000000000L).as("event_id"),
           col("ts"), col("event_type"))
       val onTime = events.filter(col("event_id") % 4 =!= 0)
-      val w = writeOne(scratch) _
+      val w = writeOne(out) _
       val t0 = 1600000000000L
       w(onTime, "a", t0)
       w(events.filter(lit(false)), "b", t0 + 60000L)
       w(onTime.filter(col("event_id") % 3 === 0), "c", t0 + 120000L)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
     }
-    root.toString
-  }
 
   /** x51 — streaming-dedup THROUGHPUT: x29's operator and watermark on
     * the 10× feed, with the sink aggregated to per-type counts so the
@@ -755,26 +529,9 @@ object StreamingQueries {
       .orderBy("k")
 
   def x60StreamHeavyHitters(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
-    val feed = feedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x60").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(feed)
-    val qname = "x60_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = x60Sketch(stream)
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    x60Recount(spark, dir, spark.table(qname))
-  }
+    x60Recount(spark, dir, StreamRun(spark, "x60", 4, "complete") {
+      x60Sketch(fileStream(spark, feedFor(spark, dir), 2))
+    }.rows)
 
   /** x66's stream transform — factored like [[p2Transform]] so the
     * semantics/chaos specs drive this exact definition. Hourly
@@ -809,25 +566,10 @@ object StreamingQueries {
     * exactly what the batch-restated oracle gates; the estimate's
     * ±1/√(k−1) error is against TRUE cardinality, not against the
     * oracle — both engines compute the identical estimator. */
-  def x66StreamRollingDistinct(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
-    val feed = feedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x66").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(feed)
-    val qname = "x66_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = x66Transform(stream)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def x66StreamRollingDistinct(spark: SparkSession, dir: String): DataFrame = {
+    val run = StreamRun(spark, "x66", 4, "update") {
+      x66Transform(fileStream(spark, feedFor(spark, dir), 2))
+    }
     // incremental-update attribution for PLANS.md: state rows UPDATED
     // per batch = windows the batch touched (numRowsTotal is
     // unavailable — this session's RocksDB stores run with
@@ -835,11 +577,11 @@ object StreamingQueries {
     // ts-ordered feed each batch touches only its own ts range's
     // windows — the update-mode dashboard contract the semantics spec
     // asserts on the sink itself.
-    val stateRows = q.recentProgress.toSeq
+    val stateRows = run.progress
       .flatMap(p => p.stateOperators.headOption.map(s =>
         s"b${p.batchId}=${s.numRowsUpdated}"))
     System.err.println(s"[x66] state rows updated per batch: ${stateRows.mkString(" ")}")
-    spark.table(qname)
+    run.rows
       .groupBy("wstart")
       .agg(max_by(col("est_users"), col("n")).as("est_users"), max(col("n")).as("n"))
       .orderBy("wstart")
@@ -884,26 +626,9 @@ object StreamingQueries {
     * gates. The final rank is a row_number over the recounted
     * manifest (windows × ≤64 rows — the ANSWER, not the corpus). */
   def x68ApproxTopkStream(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
-    val feed = feedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x68").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(feed)
-    val qname = "x68_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = x68Sketch(stream)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    x68Finalize(spark, dir, spark.table(qname))
-  }
+    x68Finalize(spark, dir, StreamRun(spark, "x68", 4, "update") {
+      x68Sketch(fileStream(spark, feedFor(spark, dir), 2))
+    }.rows)
 
   /** x68's post-drain step over the raw UPDATE-mode emission rows —
     * factored so the chaos spec can drive the identical finalize over
@@ -919,14 +644,12 @@ object StreamingQueries {
       .join(broadcast(cand), Seq("wstart", "k"))
       .groupBy("wstart", "n", "k").agg(count(lit(1)).as("cnt"))
       .where(col("cnt") * 20 > col("n"))
-    rec.createOrReplaceTempView("x68_rec")
-    spark.sql("""
-      SELECT wstart, rk, k, cnt FROM (
-        SELECT wstart, CAST(row_number() OVER (PARTITION BY wstart
-                 ORDER BY cnt DESC, k) AS BIGINT) AS rk, k, cnt
-        FROM x68_rec) t
-      WHERE rk <= 3
-      ORDER BY wstart, rk""")
+    rec.select(col("wstart"),
+        row_number().over(Window.partitionBy("wstart").orderBy(col("cnt").desc, col("k")))
+          .cast("bigint").as("rk"),
+        col("k"), col("cnt"))
+      .where(col("rk") <= 3)
+      .orderBy("wstart", "rk")
   }
 
   /** x51's watermark-bounded dedup transform — factored like
@@ -964,32 +687,17 @@ object StreamingQueries {
       case None => math.min(16, spark.sparkContext.defaultParallelism)
     }
 
-  def x51StreamThroughput(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, throughputPartitions(spark)) {
-    val feed = throughputFeedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x51").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val qname = "x51_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = x51Transform(stream)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val progs = q.recentProgress
+  def x51StreamThroughput(spark: SparkSession, dir: String): DataFrame = {
+    val run = StreamRun(spark, "x51", throughputPartitions(spark), "append") {
+      x51Transform(fileStream(spark, throughputFeedFor(spark, dir), 1))
+    }
+    val progs = run.progress
     val rows = progs.map(_.numInputRows).sum
     val ms = progs.map { p =>
       Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L) }.sum
     if (ms > 0) System.err.println(
       f"[x51] $rows rows through dropDuplicatesWithinWatermark in $ms ms = ${rows * 1000.0 / ms}%.0f rows/s")
-    spark.table(qname).groupBy("event_type")
+    run.rows.groupBy("event_type")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("event_type")
   }
@@ -998,26 +706,19 @@ object StreamingQueries {
     * doc_id seconds — deterministic, monotone in doc_id), the on-time
     * ¾, an empty bridge, then a re-delivery of a third of them — the
     * at-least-once document source a streaming curation job ingests. */
-  private[graft] def docFeedFor(spark: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_p2_feed_${feedKey(dir, "documents", "_v2")}")
-    if (!new java.io.File(root, "_FEED_READY").exists()) {
-      val scratch = Files.createTempDirectory("graft_p2_build").toFile
+  private[graft] def docFeedFor(spark: SparkSession, dir: String): String =
+    feed(spark, dir, "p2", "documents", "v2") { out =>
       val docs = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text"), col("n_chars"),
           expr("timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, doc_id)")
             .as("ts"))
       val onTime = docs.filter(col("doc_id") % 4 =!= 0)
-      val w = writeOne(scratch) _
+      val w = writeOne(out) _
       val t0 = 1600000000000L
       w(onTime, "a", t0)
       w(docs.filter(lit(false)), "b", t0 + 60000L)
       w(onTime.filter(col("doc_id") % 3 === 0), "c", t0 + 120000L)
-      new java.io.File(scratch, "_FEED_READY").createNewFile()
-      commitFeed(scratch, root)
     }
-    root.toString
-  }
 
   /** p2 — p1's curation pipeline as a STREAMING ingest job: documents
     * arrive at-least-once (the feed re-delivers a third of them),
@@ -1057,27 +758,10 @@ object StreamingQueries {
   }
 
   def p2StreamPipeline(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 4) {
-    graft.functions.GraftFunctions.register(spark)
-    val feed = docFeedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_p2").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    val qname = "p2_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = p2Transform(stream)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(qname).orderBy("doc_id")
-  }
+    StreamRun(spark, "p2", 4, "append") {
+      graft.functions.GraftFunctions.register(spark)
+      p2Transform(fileStream(spark, docFeedFor(spark, dir), 1))
+    }.rows.orderBy("doc_id")
 
   /** x36's TRANSFORM over any events stream: the two-hop dimension
     * enrichment (customer, then nation) as plain broadcast hash joins
@@ -1107,27 +791,10 @@ object StreamingQueries {
     * query. Every event's user_id resolves (user ids ⊂ customer keys),
     * so the batch inner join over the same tables is an exact oracle. */
   def x36StreamStaticJoin(spark: SparkSession, dir: String): DataFrame =
-      withShufflePartitions(spark, 8) {
-    val feed = feedFor(spark, dir)
-    val tmp = Files.createTempDirectory("graft_x36").toString
-    val schema = spark.read.parquet(feed).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(feed)
-    val qname = "x36_state_" + UUID.randomUUID().toString.replace("-", "")
-    val q = x36Transform(stream,
+    StreamRun(spark, "x36", 8, "append") {
+      x36Transform(fileStream(spark, feedFor(spark, dir), 2),
         Tables.load(spark, dir, "customer"), Tables.load(spark, dir, "nation"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(qname).orderBy("event_id")
-  }
+    }.rows.orderBy("event_id")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "r9_streaming_agg" -> (r9StreamingAgg _),

@@ -75,14 +75,18 @@ class RainStormJobSpec extends AnyFunSuite with SparkSuite {
       Seq("Other,1", "Regulatory,1", "Stop,1", "Warning,3"))
   }
 
-  /** Stage the reference's compiled op binaries the way its workers do
-    * (pull from DFS into exec/, chmod 0777 — rainstorm.go:364-394):
-    * copy into a temp dir and mark executable. */
+  /** Stage the op binaries the way the reference's workers do (pull
+    * from DFS into exec/, chmod 0777 — rainstorm.go:364-394): copy into
+    * a temp dir and mark executable. The reference's compiled binaries
+    * are used where its checkout is present; otherwise the committed
+    * POSIX stand-ins, which OperatorStandInSpec pins byte-for-byte to
+    * the binaries' recorded probe transcript (FIXTURES.md §3). */
   private lazy val refBin: Map[String, String] = {
     val d = tmpDir("rs_ops")
-    Seq("op1_t1", "op1_t2", "op2_t1", "op2_t2").map { name =>
+    OperatorStandIns.names.map { name =>
       val dst = d.resolve(name)
-      Files.copy(java.nio.file.Paths.get(s"/root/reference/$name"), dst)
+      val real = java.nio.file.Paths.get(s"/root/reference/$name")
+      if (Files.exists(real)) Files.copy(real, dst) else OperatorStandIns.copyTo(name, dst)
       dst.toFile.setExecutable(true)
       name -> dst.toString
     }.toMap

@@ -40,13 +40,10 @@ object StreamingFloorProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // mirror StreamingQueries.withShufflePartitions exactly
+    // mirror the demo-feed runs exactly: 4 state partitions plus the
+    // harness's state-store confs (graft.streaming.StreamRun.stateStoreConf)
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+    graft.streaming.StreamRun.stateStoreConf.foreach { case (k, v) => spark.conf.set(k, v) }
 
     def mkFeed(nFiles: Int): String = {
       import spark.implicits._

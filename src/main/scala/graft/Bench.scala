@@ -20,6 +20,10 @@ package graft
   * quiet rerun of the same binary measured 0.92 s). The first pass's
   * values are still reported verbatim under "queries_cold" so the
   * cold-path story stays auditable.
+  *
+  * A key that throws in either pass is left out of every total, listed
+  * under "failed" in the artifacts, and the main exits 1 after writing
+  * them: a failure is never credited with its time-to-failure.
   */
 object Bench {
   /** Weather stamp: steal ticks are captured around the whole run and
@@ -97,7 +101,7 @@ object Bench {
     // measured t2/t3/m2–m5 at 2–4× their r03 lines with identical query
     // code, purely from that residual pressure.
     var family: Char = 0
-    def timedPass(pass: Int): Seq[(String, Double)] =
+    def timedPass(pass: Int): Seq[(String, Double, Boolean)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
@@ -110,29 +114,23 @@ object Bench {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench] pass$pass $name%-22s $dt%8.2f s  (${if (ok) "ok" else "FAILED"})")
-        name -> dt
+        (name, dt, ok)
       }
     val cold = timedPass(1)
     releaseCaches()
     val second = timedPass(2)
-    val results = cold.zip(second).map { case ((name, c), (_, w)) =>
-      (name, math.min(c, w), c)
-    }
+    val (passed, failedKeys) = cold.zip(second).partition { case (c, w) => c._3 && w._3 }
+    val failed = failedKeys.map { case ((name, _, _), _) => name }
+    val results = passed.map { case ((name, c, _), (_, w, _)) => (name, math.min(c, w), c) }
     def num(v: Double, decimals: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
     def jsonMap(kvs: Seq[(String, Double)], decimals: Int): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + num(v, decimals) }
         .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    // Capture-proofing (round-5 lesson: the driver keeps only a bounded
-    // window of the line, and r5's 9-decimal doubles x 111 queries x 2
-    // maps overran it — 47 per-query values and the total were lost):
-    // the STDOUT line is the compact essentials only — 3-decimal
-    // per-query values (ms resolution; the instrument's noise floor is
-    // far above that), no cold map — and the total appears BOTH first
-    // and last so either a head- or tail-truncated capture still
-    // carries it. The full-precision artifact (both passes, 9 decimals)
-    // goes to target/bench_full.json for offline attribution.
+    // Only a bounded window of stdout is captured, so the stdout line
+    // keeps 3-decimal values, no cold map, and the total both first and
+    // last; both passes at 9 decimals go to target/bench_full.json.
     val totalR = num(total, 3)
     val qsCold = jsonMap(results.map(r => (r._1, r._3)), 9)
     // weather stamp: steal ticks stolen from this guest across the
@@ -148,12 +146,11 @@ object Bench {
     val stealJson =
       s""""steal_ticks":$stealDelta,"steal_pct":$stealPct,""" +
         s""""steal_tick_hz":${graft.core.Weather.stealTickHz}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonMap(results.map(r => (r._1, r._2)), 9)},"queries_cold":$qsCold,"passes":2,$stealJson,"sf":"$sfDir"}"""
-    // ...and since round 12 ALSO to bench/ (not gitignored): the
-    // committed per-round copy is what lets a later judge diff all 175
-    // per-query values across rounds — the compact stdout line carries
-    // only the slowest few (VERDICT r11 "what's wrong" #4).
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonMap(results.map(r => (r._1, r._2)), 9)},"queries_cold":$qsCold,"failed":$failedJson,"passes":2,$stealJson,"sf":"$sfDir"}"""
+    // ...and to bench/ (committed), so all 175 per-query values can be
+    // diffed across rounds; the stdout line carries only the slowest.
     for (path <- Seq("target/bench_full.json", "bench/bench_full_latest.json")) {
       try {
         val out = new java.io.File(path)
@@ -164,38 +161,31 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] could not write $path: ${e.getMessage}") }
     }
-    // The driver keeps only the last ~2000 chars of stdout and parses
-    // the metric line out of that window — a single 141-entry map line
-    // (~4.3 KB) can never survive it, and the r6/r7 rotations only
-    // chose WHICH families were lost. The per-family chunk lines below
-    // are BEST-EFFORT context for a human reading the raw log: the
-    // window keeps the TAIL of all stdout, so on capture everything
-    // before the final line is truncated anyway (and the x-family
-    // chunk alone already exceeds ~2 KB). target/bench_full.json is
-    // the ONLY complete per-query source. What the contract actually
-    // guarantees is the LAST line — the driver's parse target, the
-    // only one carrying "metric" — compact by construction: total +
-    // per-family sums + the slowest individual lines, sized to fit
-    // the window whole.
+    // Only the last ~2000 chars of stdout are kept and the LAST line,
+    // the only one carrying "metric", is parsed: it is compact by
+    // construction (total, family sums, the slowest lines). The family
+    // chunk lines before it are best-effort context for a human reader;
+    // target/bench_full.json is the only complete per-query source.
     val byFam = results.groupBy(_._1.head).toSeq.sortBy(_._1)
     byFam.foreach { case (fam, rs) =>
       println(s"""{"bench_chunk":"$fam","queries":${jsonMap(rs.sortBy(_._1).map(r => (r._1, r._2)), 3)}}""")
     }
     val famSums = byFam.map { case (f, rs) => (f.toString, rs.map(_._2).sum) }
     val slow = results.sortBy(-_._2).take(12).sortBy(_._1)
-    // Memoization honesty (VERDICT r9 item 5): the reported min-of-two
-    // numbers are WARM for queries whose trained artifacts memoize
-    // (s12, l19, d8's mining, p8's stored base manifest) — the compact
-    // line carries the pass-1 total and the 3 largest cold-vs-warm
-    // deltas so the cold-path story survives the driver's bounded tail
-    // capture without needing target/bench_full.json.
+    // min-of-two is WARM for keys whose artifacts memoize (s12, l19, d8,
+    // p8), so the line also carries the pass-1 total and the 3 largest
+    // cold-vs-warm deltas.
     val coldTotal = num(results.map(_._3).sum, 3)
     val coldTop = results.map(r => (r._1, r._3 - r._2)).sortBy(-_._2).take(3)
     // "queries" is the driver's contract key, but it carries only the
     // 12 slowest lines (the window can't fit all of them) — say so IN
     // the schema ("queries_partial") so a consumer can't mistake the
     // subset for the full per-query map (that lives in "full").
-    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":${jsonMap(slow.map(r => (r._1, r._2)), 3)},"queries_partial":"slowest ${slow.size} of ${results.size}","families":${jsonMap(famSums, 3)},"passes":2,"cold_total":$coldTotal,"cold_top_deltas":${jsonMap(coldTop, 3)},$stealJson,"sf":"$sfDir","full":"target/bench_full.json","total_sec":$totalR}""")
+    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":${jsonMap(slow.map(r => (r._1, r._2)), 3)},"queries_partial":"slowest ${slow.size} of ${results.size}","families":${jsonMap(famSums, 3)},"passes":2,"cold_total":$coldTotal,"cold_top_deltas":${jsonMap(coldTop, 3)},"failed":${failed.size},$stealJson,"sf":"$sfDir","full":"target/bench_full.json","total_sec":$totalR}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} key(s) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

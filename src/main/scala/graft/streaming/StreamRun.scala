@@ -110,8 +110,9 @@ object StreamRun {
   /** Set `pairs` around `body`, then put back exactly what was set
     * before: `getAll` lists only explicitly set keys, where `getOption`
     * would report a registered conf's default and the restore would
-    * then pin it explicitly. */
-  private def withConfs[T](spark: SparkSession, pairs: Seq[(String, String)])(body: => T): T = {
+    * then pin it explicitly. Two users: [[apply]] around a whole run,
+    * and [[RainStormJob.runStreaming]] around an aggregate's `start()`. */
+  private[streaming] def withConfs[T](spark: SparkSession, pairs: Seq[(String, String)])(body: => T): T = {
     val set = spark.conf.getAll
     val old = pairs.map { case (k, _) => k -> set.get(k) }
     try {

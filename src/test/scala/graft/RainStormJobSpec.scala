@@ -216,6 +216,71 @@ class RainStormJobSpec extends AnyFunSuite with SparkSuite {
       Seq("1001,Stop", "1003,Speed", "1004,Stop2", "1005,Warn", "1006,Warn2"))
   }
 
+  private def partFiles(dir: String): Seq[Path] =
+    Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+
+  test("aggregate restart keeps one state partition and one key-sorted snapshot") {
+    val src = tmpDir("rs_arsrc")
+    val dest = tmpDir("rs_ardest").toString + "/out"
+    val ckpt = tmpDir("rs_arckpt")
+    Files.write(src.resolve("a.txt"), rows.take(3).mkString("\n").getBytes)
+    RainStormJob.runStreaming(spark, "identity", "count:8", src.toString, dest, ckpt.toString)
+      .awaitTermination()
+    // second wave, restarted on the same checkpoint from a session of another width
+    Files.write(src.resolve("b.txt"), rows.drop(3).mkString("\n").getBytes)
+    withConfs("spark.sql.shuffle.partitions" -> "7") {
+      RainStormJob.runStreaming(spark, "identity", "count:8", src.toString, dest, ckpt.toString)
+        .awaitTermination()
+    }
+    val batchDest = tmpDir("rs_arbatch").toString + "/out"
+    RainStormJob.runBatch(spark, "identity", "count:8", src.toString, batchDest, numTasks = 3)
+    // every row counted exactly once: the snapshot is the batch answer over both waves
+    assert(readLines(batchDest) == Seq("Other,1", "Regulatory,1", "Stop,1", "Warning,3"))
+    assert(readLines(dest) == readLines(batchDest))
+    val statePartitions = Files.list(ckpt.resolve("state/0")).iterator().asScala
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.forall(_.isDigit)).toSeq
+    assert(statePartitions.map(_.getFileName.toString) == Seq("0"))
+    val parts = partFiles(dest)
+    assert(parts.size == 1, parts.mkString(", "))
+    val keys = Files.readAllLines(parts.head).asScala.toSeq.map(_.split(",")(0))
+    assert(keys == keys.sorted)
+  }
+
+  test("an aggregate micro-batch runs 1 job of 2 stages and leaves the session conf as it was") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    val src = tmpDir("rs_wsrc")
+    rows.grouped(2).zipWithIndex.foreach { case (rs, i) =>
+      Files.write(src.resolve(s"f$i.txt"), rs.mkString("\n").getBytes)
+    }
+    val dest = tmpDir("rs_wdest").toString + "/out"
+    val ckpt = tmpDir("rs_wckpt").toString
+    // job group per job and per submitted stage: a streaming query runs its jobs under its runId
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val stageGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    def group(props: java.util.Properties): String =
+      Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+    val tap = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobGroups.add(group(e.properties))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stageGroups.add(group(e.properties))
+    }
+    val conf0 = spark.conf.getAll
+    spark.sparkContext.addSparkListener(tap)
+    try {
+      val q = RainStormJob.runStreaming(spark, "identity", "count:8", src.toString, dest, ckpt)
+      assert(spark.conf.getAll == conf0, "runStreaming left the session conf changed")
+      q.awaitTermination()
+      org.apache.spark.sql.GraftShims.waitListenerBus(spark)
+      val run = q.runId.toString
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      assert(dataBatches >= 1)
+      assert(jobGroups.asScala.count(_ == run) == dataBatches)
+      assert(stageGroups.asScala.count(_ == run) == 2 * dataBatches)
+    } finally spark.sparkContext.removeSparkListener(tap)
+    assert(readLines(dest) == Seq("Other,1", "Regulatory,1", "Stop,1", "Warning,3"))
+  }
+
   test("continuous-trigger run with mid-run kill/restart (test_MP4 analogue)") {
     // The reference's test_MP4 launches RainStorm and kills worker VMs
     // 1.5 s into a running job (user/tests.go:152-191); the Spark

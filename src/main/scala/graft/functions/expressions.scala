@@ -9,13 +9,28 @@ import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions with whole-stage codegen — the
-  * preference-order step (b) of SURVEY §7: used where a builtin
-  * composition would either break semantics or cost too much.
+/** Native Catalyst kernels — the preference-order step (b) of SURVEY
+  * §7: used where a builtin composition would either break semantics or
+  * cost too much (a Scala UDF would box every row and block codegen).
   *
-  * Both expressions generate straight-line Java in `doGenCode`, so they
-  * stay inside WholeStageCodegen spans instead of falling back to
-  * interpreted eval (a Scala UDF would box every row and block codegen).
+  * Invariant: each kernel's per-row math is ONE function on its
+  * companion object. `nullSafeEval` calls that function, and
+  * `doGenCode` emits a single static call to the same function through
+  * the companion's static forwarder, so the kernel stays inside
+  * whole-stage codegen and the interpreted and generated paths cannot
+  * drift apart. Row-constant inputs (centroid matrices, plane weights,
+  * word sets) and task-reused scratch buffers are function arguments;
+  * generated code holds them in per-task fields. The static call costs
+  * no more per row than the same loop spelled inline as generated Java:
+  * in a 400k-row local[4] microbench (ns/row, best of 7, 7 alternating
+  * pairs) no kernel's median rose above the range of the inline
+  * spelling's runs.
+  *
+  * Spark's default `spark.sql.codegen.fallback=true` swaps in the
+  * interpreted path whenever generated code fails to compile, which
+  * would hide a broken kernel call: KernelParitySpec runs every
+  * registered kernel interpreted and codegen-only with fallback off and
+  * asserts identical rows.
   */
 
 /** FNV-1a 32-bit hash of a string's UTF-8 bytes — the reference's
@@ -38,19 +53,7 @@ case class Fnv1a32(child: Expression) extends UnaryExpression {
     Fnv1a32.hash(input.asInstanceOf[UTF8String].getBytes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      s"""
-        byte[] $bytes = $c.getBytes();
-        long $h = 2166136261L;
-        for (int $i = 0; $i < $bytes.length; $i++) {
-          $h = ($h ^ ($bytes[$i] & 0xffL)) * 16777619L & 0xffffffffL;
-        }
-        ${ev.value} = $h;
-      """
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.Fnv1a32.hash($c.getBytes())")
 
   override protected def withNewChildInternal(newChild: Expression): Fnv1a32 =
     copy(child = newChild)
@@ -87,12 +90,25 @@ case class CosineSimilarity(left: Expression, right: Expression)
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"cosine_similarity needs two array<float> arguments, got ${left.dataType}, ${right.dataType}")
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.CosineSimilarity.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimilarity =
+    copy(left = l, right = r)
+}
+
+object CosineSimilarity {
+  def apply(a: Column, b: Column): Column =
+    GraftShims.column(CosineSimilarity(
+      GraftShims.expression(a), GraftShims.expression(b)))
+
+  def cosine(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
     require(b.numElements() == n,
-      s"cosine_similarity: length mismatch ${n} vs ${b.numElements()}")
+      s"cosine_similarity: length mismatch $n vs ${b.numElements()}")
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -103,40 +119,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / math.sqrt(na) / math.sqrt(nb)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-        int $n = $a.numElements();
-        if ($b.numElements() != $n) {
-          throw new IllegalArgumentException(
-            "cosine_similarity: length mismatch " + $n + " vs " + $b.numElements());
-        }
-        double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $x = (double) $a.getFloat($i);
-          double $y = (double) $b.getFloat($i);
-          $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-        }
-        ${ev.value} = $dot / java.lang.Math.sqrt($na) / java.lang.Math.sqrt($nb);
-      """
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimilarity =
-    copy(left = l, right = r)
-}
-
-object CosineSimilarity {
-  def apply(a: Column, b: Column): Column =
-    GraftShims.column(CosineSimilarity(
-      GraftShims.expression(a), GraftShims.expression(b)))
 }
 
 /** Polynomial rolling hash over a string's code points:
@@ -158,22 +140,7 @@ case class PolyHash(child: Expression) extends UnaryExpression {
     PolyHash.hash(input.asInstanceOf[UTF8String].toString)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      val h = ctx.freshName("h")
-      s"""
-        java.lang.String $s = $c.toString();
-        long $h = 0L;
-        for (int $i = 0; $i < $s.length(); ) {
-          int $cp = $s.codePointAt($i);
-          $i += java.lang.Character.charCount($cp);
-          $h = ($h * 257L + $cp) % 1000000007L;
-        }
-        ${ev.value} = $h;
-      """
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.PolyHash.hash($c.toString())")
 
   override protected def withNewChildInternal(newChild: Expression): PolyHash =
     copy(child = newChild)
@@ -195,10 +162,9 @@ object PolyHash {
 
 /** 30-bit SimHash of an array<long> of feature hashes: bit j is set iff
   * a strict majority of features have bit j set. One fused loop with a
-  * counter array in generated Java, vs 30 interpreted ArrayFilter passes
-  * in the builtin spelling (which made the fingerprint ~1000× slower
-  * and dominated the whole benchmark). Output matches the SQL spec
-  * bit-for-bit.
+  * counter array, vs 30 interpreted ArrayFilter passes in the builtin
+  * spelling (which made the fingerprint ~1000× slower and dominated the
+  * whole benchmark). Output matches the SQL spec bit-for-bit.
   */
 case class SimHash30(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -208,8 +174,20 @@ case class SimHash30(child: Expression) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"simhash30 needs an array<bigint> argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHash30.fingerprint(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash30.fingerprint($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash30 =
+    copy(child = newChild)
+}
+
+object SimHash30 {
+  def apply(c: Column): Column = GraftShims.column(SimHash30(GraftShims.expression(c)))
+
+  def fingerprint(arr: ArrayData): Long = {
     val n = arr.numElements()
     val cnt = new Array[Int](30)
     var i = 0
@@ -224,38 +202,6 @@ case class SimHash30(child: Expression) extends UnaryExpression {
     while (j < 30) { if (2 * cnt(j) > n) sim |= (1L << j); j += 1 }
     sim
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val cnt = ctx.freshName("cnt")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val sim = ctx.freshName("sim")
-      s"""
-        int $n = $c.numElements();
-        int[] $cnt = new int[30];
-        for (int $i = 0; $i < $n; $i++) {
-          long $h = $c.getLong($i);
-          for (int $j = 0; $j < 30; $j++) {
-            if ((($h >> $j) & 1L) == 1L) $cnt[$j]++;
-          }
-        }
-        long $sim = 0L;
-        for (int $j = 0; $j < 30; $j++) {
-          if (2 * $cnt[$j] > $n) $sim |= (1L << $j);
-        }
-        ${ev.value} = $sim;
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash30 =
-    copy(child = newChild)
-}
-
-object SimHash30 {
-  def apply(c: Column): Column = GraftShims.column(SimHash30(GraftShims.expression(c)))
 }
 
 /** All distinct word-3-gram rolling hashes of a token array, fused:
@@ -274,8 +220,20 @@ case class ShingleHashes(child: Expression) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"shingle_hashes needs an array<string> argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    ShingleHashes.hashes(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleHashes.hashes($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
+    copy(child = newChild)
+}
+
+object ShingleHashes {
+  def apply(c: Column): Column = GraftShims.column(ShingleHashes(GraftShims.expression(c)))
+
+  def hashes(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val out = new java.util.LinkedHashSet[java.lang.Long]()
     var i = 0
@@ -289,25 +247,8 @@ case class ShingleHashes(child: Expression) extends UnaryExpression {
     val it = out.iterator()
     var j = 0
     while (it.hasNext) { res(j) = it.next(); j += 1 }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(res)
+    ArrayData.toArrayData(res)
   }
-
-  // One call into the interpreted eval per ROW (not per element) is
-  // already outside the hot loop; the win over the builtin spelling is
-  // the fused per-element work, which lives in nullSafeEval's tight
-  // Java loop either way.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val expr = ctx.addReferenceObj("shingleHashes", this, classOf[ShingleHashes].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $expr.nullSafeEval($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-}
-
-object ShingleHashes {
-  def apply(c: Column): Column = GraftShims.column(ShingleHashes(GraftShims.expression(c)))
 }
 
 /** POSITIONAL word-`width`-gram rolling hashes of a token array: one
@@ -331,8 +272,21 @@ case class GramHashes(child: Expression, width: Int) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"gram_hashes needs an array<string> argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    GramHashes.hashes(input.asInstanceOf[ArrayData], width)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.GramHashes.hashes($c, $width)")
+
+  override protected def withNewChildInternal(newChild: Expression): GramHashes =
+    copy(child = newChild)
+}
+
+object GramHashes {
+  def apply(c: Column, width: Int): Column =
+    GraftShims.column(GramHashes(GraftShims.expression(c), width))
+
+  def hashes(arr: ArrayData, width: Int): ArrayData = {
     val n = arr.numElements()
     val m = n - width + 1
     if (m <= 0) return ArrayData.toArrayData(Array.emptyLongArray)
@@ -351,20 +305,6 @@ case class GramHashes(child: Expression, width: Int) extends UnaryExpression {
     }
     ArrayData.toArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val expr = ctx.addReferenceObj("gramHashes", this, classOf[GramHashes].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $expr.nullSafeEval($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): GramHashes =
-    copy(child = newChild)
-}
-
-object GramHashes {
-  def apply(c: Column, width: Int): Column =
-    GraftShims.column(GramHashes(GraftShims.expression(c), width))
 }
 
 /** Apply a span MASK to a token array: given the tokens and the SORTED,
@@ -391,9 +331,23 @@ case class SpanCut(left: Expression, right: Expression, width: Int)
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"span_cut needs (array<string>, array<bigint>), got ${left.dataType}, ${right.dataType}")
 
-  override def nullSafeEval(tokens: Any, starts: Any): Any = {
-    val w = tokens.asInstanceOf[ArrayData]
-    val s = starts.asInstanceOf[ArrayData]
+  override def nullSafeEval(tokens: Any, starts: Any): Any =
+    SpanCut.cut(tokens.asInstanceOf[ArrayData], starts.asInstanceOf[ArrayData], width)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, s) => s"graft.functions.SpanCut.cut($t, $s, $width)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SpanCut =
+    copy(left = newLeft, right = newRight)
+}
+
+object SpanCut {
+  def apply(tokens: Column, starts: Column, width: Int): Column =
+    GraftShims.column(SpanCut(
+      GraftShims.expression(tokens), GraftShims.expression(starts), width))
+
+  def cut(w: ArrayData, s: ArrayData, width: Int): UTF8String = {
     val n = w.numElements()
     val m = s.numElements()
     val sb = new java.lang.StringBuilder()
@@ -416,22 +370,6 @@ case class SpanCut(left: Expression, right: Expression, width: Int)
     }
     UTF8String.fromString(sb.toString)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, s) => {
-      val expr = ctx.addReferenceObj("spanCut", this, classOf[SpanCut].getName)
-      s"${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $expr.nullSafeEval($t, $s);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SpanCut =
-    copy(left = newLeft, right = newRight)
-}
-
-object SpanCut {
-  def apply(tokens: Column, starts: Column, width: Int): Column =
-    GraftShims.column(SpanCut(
-      GraftShims.expression(tokens), GraftShims.expression(starts), width))
 }
 
 /** Morton (Z-order) key of two non-negative long columns: the low 16
@@ -485,13 +423,14 @@ object ZOrder2 {
 }
 
 /** All 16 MinHash signatures `min over ids of (a_k*x + b_k) mod P` in a
-  * single generated pass over the id array — vs 16 interpreted
+  * single pass over the id array — vs 16 interpreted
   * transform+array_min traversals. Constants are
-  * [[TextPrimitives.minhashAB]], baked into the generated code, so the
-  * DuckDB oracle regenerates identical signatures. Empty input → null
-  * (array_min of an empty array is null in the builtin spelling too). */
+  * [[TextPrimitives.minhashAB]], read from two `long[]` copies (not the
+  * `Seq` of pairs, which would be indexed once per element × hash), so
+  * the DuckDB oracle regenerates identical signatures. Empty input →
+  * null (array_min of an empty array is null in the builtin spelling
+  * too). */
 case class MinHash16(child: Expression) extends UnaryExpression {
-  import TextPrimitives.{minhashAB, P}
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def checkInputDataTypes() =
@@ -501,62 +440,13 @@ case class MinHash16(child: Expression) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"minhash16 needs an array<bigint> argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n == 0) return null
-    val mins = Array.fill(16)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val x = arr.getLong(i)
-      var k = 0
-      while (k < 16) {
-        val (a, b) = minhashAB(k)
-        val h = (a * x + b) % P
-        if (h < mins(k)) mins(k) = h
-        k += 1
-      }
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(mins)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHash16.signature(input.asInstanceOf[ArrayData])
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val as = minhashAB.map(_._1).mkString(", ")
-    val bs = minhashAB.map(_._2).mkString(", ")
-    val aArr = ctx.addMutableState("long[]", "mhA", v => s"$v = new long[]{$as};")
-    val bArr = ctx.addMutableState("long[]", "mhB", v => s"$v = new long[]{$bs};")
-    val n = ctx.freshName("n")
-    val mins = ctx.freshName("mins")
-    val i = ctx.freshName("i")
-    val k = ctx.freshName("k")
-    val x = ctx.freshName("x")
-    val h = ctx.freshName("h")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-        int $n = $c.numElements();
-        if ($n == 0) {
-          ${ev.isNull} = true;
-        } else {
-          long[] $mins = new long[16];
-          java.util.Arrays.fill($mins, Long.MAX_VALUE);
-          for (int $i = 0; $i < $n; $i++) {
-            long $x = $c.getLong($i);
-            for (int $k = 0; $k < 16; $k++) {
-              long $h = ($aArr[$k] * $x + $bArr[$k]) % ${P}L;
-              if ($h < $mins[$k]) $mins[$k] = $h;
-            }
-          }
-          ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($mins);
-        }
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.MinHash16.signature($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): MinHash16 =
     copy(child = newChild)
@@ -564,6 +454,33 @@ case class MinHash16(child: Expression) extends UnaryExpression {
 
 object MinHash16 {
   def apply(c: Column): Column = GraftShims.column(MinHash16(GraftShims.expression(c)))
+
+  private val coefA: Array[Long] = TextPrimitives.minhashAB.map(_._1).toArray
+  private val coefB: Array[Long] = TextPrimitives.minhashAB.map(_._2).toArray
+
+  /** Null for an empty array. The modulus is [[TextPrimitives.P]]
+    * spelled as a literal: a constant divisor lets the JIT replace the
+    * 64-bit division with a multiply. */
+  def signature(arr: ArrayData): ArrayData = {
+    val n = arr.numElements()
+    if (n == 0) return null
+    val a = coefA
+    val b = coefB
+    val mins = new Array[Long](16)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      val x = arr.getLong(i)
+      var k = 0
+      while (k < 16) {
+        val h = (a(k) * x + b(k)) % 1000000007L
+        if (h < mins(k)) mins(k) = h
+        k += 1
+      }
+      i += 1
+    }
+    ArrayData.toArrayData(mins)
+  }
 }
 
 /** Sign-random-projection LSH bucket (0..255) of an array<float>
@@ -582,8 +499,20 @@ case class LshBucket8(child: Expression) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"lsh_bucket8 needs an array<float> argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    LshBucket8.bucket(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.LshBucket8.bucket($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): LshBucket8 =
+    copy(child = newChild)
+}
+
+object LshBucket8 {
+  def apply(c: Column): Column = GraftShims.column(LshBucket8(GraftShims.expression(c)))
+
+  def bucket(arr: ArrayData): Long = {
     val n = arr.numElements()
     var bucket = 0L
     var p = 0
@@ -600,36 +529,6 @@ case class LshBucket8(child: Expression) extends UnaryExpression {
     }
     bucket
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val bucket = ctx.freshName("bucket")
-      val p = ctx.freshName("p")
-      val k = ctx.freshName("k")
-      val s = ctx.freshName("s")
-      val u = ctx.freshName("u")
-      s"""
-        int $n = $c.numElements();
-        long $bucket = 0L;
-        for (int $p = 0; $p < 8; $p++) {
-          double $s = 0.0;
-          for (int $k = 0; $k < $n; $k++) {
-            long $u = (1103515245L * ($p * 64 + $k) + 12345L) % 2147483648L;
-            $s += ((double) $u / 2147483648.0 - 0.5) * (double) $c.getFloat($k);
-          }
-          if ($s > 0.0) $bucket |= (1L << $p);
-        }
-        ${ev.value} = $bucket;
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): LshBucket8 =
-    copy(child = newChild)
-}
-
-object LshBucket8 {
-  def apply(c: Column): Column = GraftShims.column(LshBucket8(GraftShims.expression(c)))
 }
 
 /** Banded sign-random-projection signatures of an array<float>
@@ -652,11 +551,16 @@ object LshBucket8 {
   * collides with probability ≈ 1 − (1 − 2^−bits)^bands — `bits` buys
   * precision, `bands` buys recall back; the regime-specific tuning
   * table lives at the call site ([[graft.queries.AnnQueries]]'s
-  * s3Bands/s3Bits). One fused loop over all bands·bits planes in
-  * generated Java.
+  * s3Bands/s3Bits). One fused loop over all bands·bits planes.
   */
 case class LshBandSigs(child: Expression, bands: Int, bits: Int, dims: Int)
     extends UnaryExpression {
+  // bit j of a band is `1L << j`, which Java masks to `1L << (j & 63)`:
+  // a 65th plane would silently fold onto bit 0
+  require(bands >= 1 && bits >= 1 && bits <= 64 && dims >= 1,
+    s"lsh_band_sigs needs bands >= 1, 1 <= bits <= 64 and dims >= 1, got $bands, $bits, $dims")
+  require(bands.toLong * bits * dims <= Int.MaxValue,
+    s"lsh_band_sigs: $bands bands × $bits bits × $dims dims overflows the weight array")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def checkInputDataTypes() =
     if (child.dataType match {
@@ -665,106 +569,26 @@ case class LshBandSigs(child: Expression, bands: Int, bits: Int, dims: Int)
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"lsh_band_sigs needs an array<float> argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    // the weight formula strides by `dims`; an embedding of a different
-    // length would silently reuse LCG inputs across adjacent planes
-    // (re-correlating the hyperplanes), so a mismatch is an error
-    require(n == dims,
-      s"lsh_band_sigs: embedding has $n dims, expression built for $dims")
-    val w = LshBandSigs.weights(bands, bits, dims)
-    // hoist the embedding out of ArrayData ONCE: the plane loops read
-    // every element bands·bits times, and going through the ArrayData
-    // interface (virtual dispatch + float→double per read) on each of
-    // those reads dominates the kernel — a local double[] turns the
-    // inner loop into a pure array dot product the JIT can vectorize
-    val v = new Array[Double](n)
-    var k0 = 0
-    while (k0 < n) { v(k0) = arr.getFloat(k0).toDouble; k0 += 1 }
-    val sigs = new Array[Long](bands)
-    var g = 0
-    while (g < bands) {
-      var sig = 0L
-      var j = 0
-      while (j < bits) {
-        val p = g * bits + j
-        var s = 0.0
-        var k = 0
-        val base = p * n
-        while (k < n) {
-          s += w(base + k) * v(k)
-          k += 1
-        }
-        if (s > 0.0) sig |= (1L << j)
-        j += 1
-      }
-      sigs(g) = sig
-      g += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(sigs)
-  }
+  @transient private lazy val planeWeights = LshBandSigs.weights(bands, bits, dims)
+
+  override def nullSafeEval(input: Any): Any =
+    LshBandSigs.signatures(input.asInstanceOf[ArrayData], bands, bits,
+      planeWeights, new Array[Double](dims))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // The plane weights are row-constant: derive them ONCE per task via
-    // the shared memoizing helper (bands·bits·dims LCG evaluations),
-    // leaving a pure multiply-add dot product in the per-row loop —
-    // measured 20× on the s3 signature scan vs deriving weights inline.
-    val wField = ctx.addMutableState("double[]", "lshWeights", _ => "")
-    // Per-row input copy, reused across rows (one allocation per task):
-    // every element is read bands·bits times by the plane loops, and the
-    // ArrayData read (interface dispatch + float→double) per access was
-    // the kernel's real cost — with a plain double[] the innermost loop
-    // is a contiguous dot product HotSpot auto-vectorizes. Measured
-    // quiet at sf0.1 (isolated bench lines, min of two): s3
-    // 2.77 → 1.71 s, s5 1.24 → 0.99 s. Accumulation order is unchanged,
-    // so signatures stay bit-identical.
-    val vField = ctx.addMutableState("double[]", "lshVec", _ => "")
-    val n = ctx.freshName("n")
-    val sigs = ctx.freshName("sigs")
-    val g = ctx.freshName("g")
-    val j = ctx.freshName("j")
-    val p = ctx.freshName("p")
-    val k = ctx.freshName("k")
-    val s = ctx.freshName("s")
-    val sig = ctx.freshName("sig")
-    val base = ctx.freshName("base")
-    // top-level Scala object -> class with static forwarders, callable
-    // from generated Java by its plain name
-    val helper = "graft.functions.LshBandSigsHelper"
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-        int $n = $c.numElements();
-        if ($n != $dims) {
-          throw new IllegalArgumentException(
-            "lsh_band_sigs: embedding has " + $n + " dims, expression built for $dims");
-        }
-        if ($wField == null) {
-          $wField = $helper.weights($bands, $bits, $dims);
-        }
-        if ($vField == null) {
-          $vField = new double[$dims];
-        }
-        for (int $k = 0; $k < $n; $k++) {
-          $vField[$k] = (double) $c.getFloat($k);
-        }
-        long[] $sigs = new long[$bands];
-        for (int $g = 0; $g < $bands; $g++) {
-          long $sig = 0L;
-          for (int $j = 0; $j < $bits; $j++) {
-            int $p = $g * $bits + $j;
-            double $s = 0.0;
-            int $base = $p * $n;
-            for (int $k = 0; $k < $n; $k++) {
-              $s += $wField[$base + $k] * $vField[$k];
-            }
-            if ($s > 0.0) $sig |= (1L << $j);
-          }
-          $sigs[$g] = $sig;
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($sigs);
-      """
-    })
+    // The plane weights are row-constant: fetch them ONCE per task from
+    // the memoized matrix (bands·bits·dims LCG evaluations), leaving a
+    // pure multiply-add dot product in the per-row loop — measured 20×
+    // on the s3 signature scan vs deriving weights inline.
+    val wField = ctx.addMutableState("double[]", "lshWeights",
+      v => s"$v = graft.functions.LshBandSigs.weights($bands, $bits, $dims);")
+    // The embedding's double[] copy is reused across rows (one
+    // allocation per task). Measured quiet at sf0.1 (isolated bench
+    // lines, min of two) against a per-row ArrayData read: s3
+    // 2.77 → 1.71 s, s5 1.24 → 0.99 s.
+    val vField = ctx.addMutableState("double[]", "lshVec", v => s"$v = new double[$dims];")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.LshBandSigs.signatures($c, $bands, $bits, $wField, $vField)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): LshBandSigs =
@@ -798,13 +622,45 @@ object LshBandSigs {
       }
       w
     })
-}
 
-/** Java-callable twin for generated code (codegen cannot reference the
-  * Scala companion's tupled cache signature directly). */
-object LshBandSigsHelper {
-  def weights(bands: Int, bits: Int, n: Int): Array[Double] =
-    LshBandSigs.weights(bands, bits, n)
+  /** The `bands` signatures of one embedding. `w` is [[weights]] for
+    * this shape and `v` a scratch buffer of `dims` doubles. */
+  def signatures(arr: ArrayData, bands: Int, bits: Int,
+      w: Array[Double], v: Array[Double]): ArrayData = {
+    val n = arr.numElements()
+    // the weight formula strides by `dims`; an embedding of a different
+    // length would silently reuse LCG inputs across adjacent planes
+    // (re-correlating the hyperplanes), so a mismatch is an error
+    require(n == v.length,
+      s"lsh_band_sigs: embedding has $n dims, expression built for ${v.length}")
+    // hoist the embedding out of ArrayData ONCE: the plane loops read
+    // every element bands·bits times, and going through the ArrayData
+    // interface (virtual dispatch + float→double per read) on each of
+    // those reads dominates the kernel — a local double[] turns the
+    // inner loop into a pure array dot product the JIT can vectorize
+    var k0 = 0
+    while (k0 < n) { v(k0) = arr.getFloat(k0).toDouble; k0 += 1 }
+    val sigs = new Array[Long](bands)
+    var g = 0
+    while (g < bands) {
+      var sig = 0L
+      var j = 0
+      while (j < bits) {
+        val base = (g * bits + j) * n
+        var s = 0.0
+        var k = 0
+        while (k < n) {
+          s += w(base + k) * v(k)
+          k += 1
+        }
+        if (s > 0.0) sig |= (1L << j)
+        j += 1
+      }
+      sigs(g) = sig
+      g += 1
+    }
+    ArrayData.toArrayData(sigs)
+  }
 }
 
 /** Squared L2 distance between an array<double> column (an IVF
@@ -831,45 +687,14 @@ case class L2SquaredDistance(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    require(b.numElements() == n,
-      s"l2_sq: length mismatch $n vs ${b.numElements()}")
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      // a null ELEMENT yields a null distance, matching the builtin
-      // zip_with spelling ((cx - NULL) propagates NULL through the sum)
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val d = a.getDouble(i) - b.getFloat(i).toDouble
-      s += d * d
-      i += 1
-    }
-    s
+    val s = L2SquaredDistance.distance(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+    if (s < 0.0) null else s
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-        int $n = $a.numElements();
-        if ($b.numElements() != $n) {
-          throw new IllegalArgumentException(
-            "l2_sq: length mismatch " + $n + " vs " + $b.numElements());
-        }
-        double $s = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-          double $d = $a.getDouble($i) - (double) $b.getFloat($i);
-          $s += $d * $d;
-        }
-        if (!${ev.isNull}) { ${ev.value} = $s; }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.L2SquaredDistance.distance($a, $b);
+         |${ev.isNull} = ${ev.value} < 0.0;""".stripMargin)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): L2SquaredDistance =
     copy(left = l, right = r)
@@ -879,6 +704,26 @@ object L2SquaredDistance {
   def apply(a: Column, b: Column): Column =
     GraftShims.column(L2SquaredDistance(
       GraftShims.expression(a), GraftShims.expression(b)))
+
+  /** The distance, or -1.0 for a null element: a sum of squares is
+    * never negative (NaN compares false), so the sentinel carries the
+    * null without boxing the result. */
+  def distance(a: ArrayData, b: ArrayData): Double = {
+    val n = a.numElements()
+    require(b.numElements() == n,
+      s"l2_sq: length mismatch $n vs ${b.numElements()}")
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      // a null ELEMENT yields a null distance, matching the builtin
+      // zip_with spelling ((cx - NULL) propagates NULL through the sum)
+      if (a.isNullAt(i) || b.isNullAt(i)) return -1.0
+      val d = a.getDouble(i) - b.getFloat(i).toDouble
+      s += d * d
+      i += 1
+    }
+    s
+  }
 }
 
 /** Count of BPE-pretokenizer-shaped tokens — matches of
@@ -899,9 +744,7 @@ case class BpeTokenCount(child: Expression) extends UnaryExpression {
     BpeTokenCount.count(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.functions.BpeTokenCount.count($c);"
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.BpeTokenCount.count($c)")
 
   override protected def withNewChildInternal(newChild: Expression): BpeTokenCount =
     copy(child = newChild)
@@ -963,30 +806,11 @@ case class CharTrigrams(child: Expression) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"char_trigrams needs a string argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toLowerCase.toString
-    // code-point offsets (substring semantics are code-point-based in
-    // both engines; identical to char offsets on ASCII/BMP input)
-    val offs = new java.util.ArrayList[Integer]()
-    var i = 0
-    while (i < s.length) { offs.add(i); i += Character.charCount(s.codePointAt(i)) }
-    offs.add(s.length)
-    val n = offs.size - 1
-    if (n < 3) return org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.empty[UTF8String])
-    val out = new Array[UTF8String](n - 2)
-    var k = 0
-    while (k < n - 2) {
-      out(k) = UTF8String.fromString(s.substring(offs.get(k), offs.get(k + 3)))
-      k += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    CharTrigrams.trigrams(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val expr = ctx.addReferenceObj("charTrigrams", this, classOf[CharTrigrams].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $expr.nullSafeEval($c);"
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.CharTrigrams.trigrams($c)")
 
   override protected def withNewChildInternal(newChild: Expression): CharTrigrams =
     copy(child = newChild)
@@ -994,6 +818,25 @@ case class CharTrigrams(child: Expression) extends UnaryExpression {
 
 object CharTrigrams {
   def apply(c: Column): Column = GraftShims.column(CharTrigrams(GraftShims.expression(c)))
+
+  def trigrams(text: UTF8String): ArrayData = {
+    val s = text.toLowerCase.toString
+    // code-point offsets (substring semantics are code-point-based in
+    // both engines; identical to char offsets on ASCII/BMP input)
+    val offs = new java.util.ArrayList[Integer]()
+    var i = 0
+    while (i < s.length) { offs.add(i); i += Character.charCount(s.codePointAt(i)) }
+    offs.add(s.length)
+    val n = offs.size - 1
+    if (n < 3) return ArrayData.toArrayData(Array.empty[UTF8String])
+    val out = new Array[UTF8String](n - 2)
+    var k = 0
+    while (k < n - 2) {
+      out(k) = UTF8String.fromString(s.substring(offs.get(k), offs.get(k + 3)))
+      k += 1
+    }
+    ArrayData.toArrayData(out)
+  }
 }
 
 /** Count of tokens that belong to a literal word set — the kernel
@@ -1001,9 +844,8 @@ object CharTrigrams {
   * spelling `size(filter(w, t -> t IN (...)))` is a higher-order
   * function and therefore CodegenFallback: one interpreted lambda
   * dispatch per TOKEN per language. Here the set probe runs in a tight
-  * Java loop against a prebuilt HashSet (one virtual call per ROW via
-  * the ShingleHashes reference-object pattern), which cut t1's
-  * four-language scan ~3× at sf0.1. */
+  * loop against a prebuilt HashSet (one static call per ROW), which cut
+  * t1's four-language scan ~3× at sf0.1. */
 case class StopHits(child: Expression, words: Seq[String]) extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def checkInputDataTypes() =
@@ -1019,8 +861,20 @@ case class StopHits(child: Expression, words: Seq[String]) extends UnaryExpressi
     s
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    StopHits.hits(input.asInstanceOf[ArrayData], set)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val setRef = ctx.addReferenceObj("stopWords", set, "java.util.HashSet")
+    defineCodeGen(ctx, ev, c => s"graft.functions.StopHits.hits($c, $setRef)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): StopHits =
+    copy(child = newChild)
+}
+
+object StopHits {
+  def hits(arr: ArrayData, set: java.util.HashSet[UTF8String]): Int = {
     val n = arr.numElements()
     var hits = 0
     var i = 0
@@ -1030,15 +884,6 @@ case class StopHits(child: Expression, words: Seq[String]) extends UnaryExpressi
     }
     hits
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val expr = ctx.addReferenceObj("stopHits", this, classOf[StopHits].getName)
-      s"${ev.value} = (Integer) $expr.nullSafeEval($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): StopHits =
-    copy(child = newChild)
 }
 
 /** Every stride-th single-space-delimited token of a string, rejoined
@@ -1067,8 +912,7 @@ case class StrideSampleTokens(child: Expression, stride: Int) extends UnaryExpre
     StrideSampleTokens.sample(input.asInstanceOf[UTF8String], stride)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.StrideSampleTokens.sample($c, $stride);")
+    defineCodeGen(ctx, ev, c => s"graft.functions.StrideSampleTokens.sample($c, $stride)")
 
   override protected def withNewChildInternal(newChild: Expression): StrideSampleTokens =
     copy(child = newChild)
@@ -1124,8 +968,20 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"repeat_stats needs an array<string> argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    RepetitionStats.counts(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.RepetitionStats.counts($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
+    copy(child = newChild)
+}
+
+object RepetitionStats {
+  def apply(c: Column): Column = GraftShims.column(RepetitionStats(GraftShims.expression(c)))
+
+  def counts(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
     var top = 0L
@@ -1144,24 +1000,8 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
       bigrams.add(arr.getUTF8String(i).toString + " " + arr.getUTF8String(i + 1).toString)
       i += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      Array[Long](top, bigrams.size.toLong))
+    ArrayData.toArrayData(Array[Long](top, bigrams.size.toLong))
   }
-
-  // One interpreted call per ROW; the per-token work is the fused Java
-  // loop above either way (the ShingleHashes pattern).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val expr = ctx.addReferenceObj("repeatStats", this, classOf[RepetitionStats].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $expr.nullSafeEval($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
-    copy(child = newChild)
-}
-
-object RepetitionStats {
-  def apply(c: Column): Column = GraftShims.column(RepetitionStats(GraftShims.expression(c)))
 }
 
 /** Per-document CHARACTER-level statistics in one fused pass over the
@@ -1188,8 +1028,21 @@ case class CharStats(child: Expression) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"char_stats needs a string argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def nullSafeEval(input: Any): Any =
+    CharStats.counts(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.CharStats.counts($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): CharStats =
+    copy(child = newChild)
+}
+
+object CharStats {
+  def apply(c: Column): Column = GraftShims.column(CharStats(GraftShims.expression(c)))
+
+  def counts(text: UTF8String): ArrayData = {
+    val s = text.toString
     val counts = new java.util.HashMap[Integer, Integer](64)
     var n = 0L
     var i = 0
@@ -1207,24 +1060,8 @@ case class CharStats(child: Expression) extends UnaryExpression {
       if (c > top) top = c
       sumSq += c * c
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      Array[Long](n, counts.size.toLong, top, sumSq))
+    ArrayData.toArrayData(Array[Long](n, counts.size.toLong, top, sumSq))
   }
-
-  // One interpreted call per ROW (the RepetitionStats pattern); the
-  // per-character work is the fused Java loop either way.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val expr = ctx.addReferenceObj("charStats", this, classOf[CharStats].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $expr.nullSafeEval($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CharStats =
-    copy(child = newChild)
-}
-
-object CharStats {
-  def apply(c: Column): Column = GraftShims.column(CharStats(GraftShims.expression(c)))
 }
 
 /** Unicode NFC normalization — the canonicalization a multilingual
@@ -1247,14 +1084,10 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
       s"nfc_normalize needs a string argument, got ${child.dataType}")
 
   override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(java.text.Normalizer.normalize(
-      input.asInstanceOf[UTF8String].toString, java.text.Normalizer.Form.NFC))
+    NfcNormalize.normalize(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-         |  java.text.Normalizer.normalize($c.toString(), java.text.Normalizer.Form.NFC));
-         |""".stripMargin)
+    defineCodeGen(ctx, ev, c => s"graft.functions.NfcNormalize.normalize($c)")
 
   override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
     copy(child = newChild)
@@ -1262,6 +1095,9 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
 object NfcNormalize {
   def apply(c: Column): Column = GraftShims.column(NfcNormalize(GraftShims.expression(c)))
+
+  def normalize(s: UTF8String): UTF8String =
+    UTF8String.fromString(java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC))
 }
 
 /** Symmetric int8 quantization statistics for an embedding vector, in
@@ -1290,8 +1126,20 @@ case class Int8QuantStats(child: Expression) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"int8_quant_stats needs an array<float> argument, got ${child.dataType}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    Int8QuantStats.stats(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Int8QuantStats.stats($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): Int8QuantStats =
+    copy(child = newChild)
+}
+
+object Int8QuantStats {
+  def apply(c: Column): Column = GraftShims.column(Int8QuantStats(GraftShims.expression(c)))
+
+  def stats(arr: ArrayData): InternalRow = {
     val n = arr.numElements()
     var scale = 0.0
     var i = 0
@@ -1315,23 +1163,8 @@ case class Int8QuantStats(child: Expression) extends UnaryExpression {
         i += 1
       }
     }
-    org.apache.spark.sql.catalyst.InternalRow(scale, qsum, qmin, qmax, nsat)
+    InternalRow(scale, qsum, qmin, qmax, nsat)
   }
-
-  // One interpreted call per ROW; the per-element work is the fused
-  // Java loop above either way (the RepetitionStats pattern).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val expr = ctx.addReferenceObj("quantStats", this, classOf[Int8QuantStats].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $expr.nullSafeEval($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Int8QuantStats =
-    copy(child = newChild)
-}
-
-object Int8QuantStats {
-  def apply(c: Column): Column = GraftShims.column(Int8QuantStats(GraftShims.expression(c)))
 }
 
 /** Greedy longest-match subword token count over the fixed
@@ -1363,9 +1196,7 @@ case class SubwordCount(child: Expression) extends UnaryExpression {
     SubwordCount.count(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.functions.SubwordCount.count($c);"
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.SubwordCount.count($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SubwordCount =
     copy(child = newChild)
@@ -1450,9 +1281,7 @@ case class BpeApplyCount(child: Expression, merges: Seq[(String, String)])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("bpeMerges", mergeArr, "scala.Tuple2[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.functions.BpeApplyCount.count($c.toString(), $ref);"
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.BpeApplyCount.count($c.toString(), $ref)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeApplyCount =
@@ -1521,7 +1350,7 @@ object BpeApplyCount {
 object GraftFunctions {
   private def litInt(e: Expression, fn: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)  => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) if v.isValidInt => v.toInt
     case other => throw new IllegalArgumentException(
       s"$fn expects an integer literal argument, got $other")
   }
@@ -1627,16 +1456,10 @@ case class DeletionNbhHashes(child: Expression) extends UnaryExpression {
       s"deletion_nbh_hashes needs a string argument, got ${child.dataType}")
 
   override def nullSafeEval(input: Any): Any =
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      DeletionNbhHashes.hashes(input.asInstanceOf[UTF8String]))
+    DeletionNbhHashes.hashes(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-        ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-          graft.functions.DeletionNbhHashes.hashes($c));
-      """
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.DeletionNbhHashes.hashes($c)")
 
   override protected def withNewChildInternal(newChild: Expression): DeletionNbhHashes =
     copy(child = newChild)
@@ -1653,9 +1476,8 @@ object DeletionNbhHashes {
     org.apache.spark.sql.catalyst.expressions.XXH64
       .hashUnsafeBytes(buf, BYTE_OFF, len, SEED)
 
-  /** See the expression doc. Called from both the interpreted eval and
-    * the generated code (top-level object → static forwarder). */
-  def hashes(s: UTF8String): Array[Long] = {
+  /** See the expression doc. */
+  def hashes(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
     val len = bytes.length
     // code-point boundaries: a byte that is not a UTF-8 continuation
@@ -1704,27 +1526,100 @@ object DeletionNbhHashes {
       if (out(k) != out(d)) { d += 1; out(d) = out(k) }
       k += 1
     }
-    java.util.Arrays.copyOf(out, math.min(d + 1, m))
+    ArrayData.toArrayData(java.util.Arrays.copyOf(out, math.min(d + 1, m)))
   }
 }
 
-/** Shared selection kernel behind [[NearestCellLabel]] / [[NearestCells]]:
-  * squared-L2 distances of one extracted embedding against a flat
-  * centroid matrix, argmin / n-smallest by (distance, label). Distances
-  * accumulate left-to-right exactly like [[L2SquaredDistance]]
-  * (`cent[k] - (double) emb[k]`, `s += d·d`), so the selection is
-  * bit-identical to the retired `min_by(label, struct(dist, label))`
-  * aggregate and `TopKPerKey` orderings it replaced. Ties (equal
-  * distance) keep the SMALLER label: centroids are scanned in ascending
-  * label order and only a strictly smaller distance displaces a kept
-  * entry — the lexicographic (d, label) order of the old struct
+/** Common shape of the two nearest-cell expressions: an array<float>
+  * embedding scored against a LITERAL coarse-quantizer centroid matrix
+  * (driver-side data, KBs — the same payload the LocalRelation form of
+  * the quantizer already embeds in the plan). Round 18: these kernels
+  * replace the broadcast-crossJoin + min_by aggregate (one corpus-sized
+  * exchange per consumer) and the crossJoin + TopKPerKey probe-list
+  * spellings — cell assignment becomes a zero-shuffle projection over
+  * the scan, like a real IVF assign. A literal `array_min(array(struct(
+  * l2², label)...))` composition computes the same thing but pays for
+  * itself twice: ~650 literal nodes per call site bloat every optimizer
+  * pass, and ArrayMin/ArraySort are interpreted — measured +0.4 s on
+  * s15 at sf0.1 before this kernel replaced it.
+  *
+  * Selection semantics: distances accumulate left-to-right exactly like
+  * [[L2SquaredDistance]] (`cent[k] - (double) emb[k]`, `s += d·d`), so
+  * the selection is bit-identical to the retired `min_by(label,
+  * struct(dist, label))` aggregate and `TopKPerKey` orderings. Ties
+  * (equal distance) keep the SMALLER label: centroids are scanned in
+  * ascending label order and only a strictly smaller distance displaces
+  * a kept entry — the lexicographic (d, label) order of the old struct
   * spellings. NaN compares like Spark doubles (largest, equal to
-  * itself) via java.lang.Double.compare. Top-level object → static
-  * forwarders callable from generated Java. */
-object NearestCellsHelper {
-  /** Label of the nearest centroid. `v` has `dims` elements; `cents` is
-    * labels.length × dims, row-major, ascending-label order. */
-  def best1(v: Array[Double], cents: Array[Double], labels: Array[Long]): Long = {
+  * itself) via java.lang.Double.compare. A null embedding element makes
+  * every distance NULL, and the old struct orderings put (NULL, label)
+  * first with the label as tie-break — so the n smallest labels win.
+  * Equivalence to the retired spellings is pinned in AnnRecallSweepSpec
+  * + ExpressionsSpec.
+  *
+  * The embedding is copied into a `dims`-long double[] (task-reused in
+  * generated code, the LshBandSigs pattern) so the distance loops read
+  * contiguous doubles. */
+trait NearestCellsBase extends UnaryExpression {
+  def labels: Seq[Long]
+  def centroids: Seq[Seq[Double]]
+  require(labels.nonEmpty && labels.size == centroids.size,
+    s"nearest_cells: ${labels.size} labels vs ${centroids.size} centroids")
+  require(labels == labels.sorted && labels.distinct.size == labels.size,
+    "nearest_cells: labels must be ascending and distinct (the tie-break order)")
+  require(centroids.forall(_.size == centroids.head.size),
+    "nearest_cells: ragged centroid matrix")
+
+  protected val dims: Int = centroids.head.size
+  @transient protected lazy val flatCents: Array[Double] = centroids.flatten.toArray
+  @transient protected lazy val labelArr: Array[Long] = labels.toArray
+
+  override def checkInputDataTypes() =
+    if (child.dataType match {
+      case ArrayType(FloatType, _) => true; case _ => false })
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs an array<float> argument, got ${child.dataType}")
+
+  /** Generated-code names of the per-task scratch vector, the
+    * centroid matrix and the labels: "vec, cents, labels". */
+  protected def genArgs(ctx: CodegenContext): String = {
+    val vField = ctx.addMutableState("double[]", "ncVec", v => s"$v = new double[$dims];")
+    val cField = ctx.addReferenceObj("ncCents", flatCents, "double[]")
+    val lField = ctx.addReferenceObj("ncLabels", labelArr, "long[]")
+    s"$vField, $cField, $lField"
+  }
+}
+
+/** Nearest-cell LABEL (argmin by (l2² distance, label)) — the cell
+  * assignment of one embedding under a literal trained quantizer. */
+case class NearestCellLabel(child: Expression, labels: Seq[Long],
+    centroids: Seq[Seq[Double]]) extends NearestCellsBase {
+  override def dataType: DataType = LongType
+  override def prettyName: String = "nearest_cell_label"
+
+  override def nullSafeEval(input: Any): Any =
+    NearestCellLabel.label(input.asInstanceOf[ArrayData], new Array[Double](dims),
+      flatCents, labelArr)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val args = genArgs(ctx)
+    defineCodeGen(ctx, ev, c => s"graft.functions.NearestCellLabel.label($c, $args)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCellLabel =
+    copy(child = newChild)
+}
+
+object NearestCellLabel {
+  def apply(emb: Column, cent: Seq[(Long, Seq[Double])]): Column =
+    GraftShims.column(NearestCellLabel(GraftShims.expression(emb),
+      cent.map(_._1), cent.map(_._2)))
+
+  /** Label of the nearest centroid. `v` is scratch of `dims` doubles;
+    * `cents` is labels.length × dims, row-major, ascending-label order. */
+  def label(emb: ArrayData, v: Array[Double], cents: Array[Double], labels: Array[Long]): Long = {
+    if (!NearestCells.extract(emb, v, "nearest_cell_label")) return labels(0)
     val dims = v.length
     var bd = 0.0
     var bl = labels(0)
@@ -1744,13 +1639,57 @@ object NearestCellsHelper {
     }
     bl
   }
+}
+
+/** The `n` nearest cell labels ascending by (l2² distance, label) —
+  * an IVF query's probe list as a per-row expression. */
+case class NearestCells(child: Expression, labels: Seq[Long],
+    centroids: Seq[Seq[Double]], n: Int) extends NearestCellsBase {
+  require(n >= 1, s"nearest_cells: n must be positive, got $n")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "nearest_cells"
+
+  override def nullSafeEval(input: Any): Any =
+    NearestCells.cells(input.asInstanceOf[ArrayData], new Array[Double](dims),
+      flatCents, labelArr, n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val args = genArgs(ctx)
+    defineCodeGen(ctx, ev, c => s"graft.functions.NearestCells.cells($c, $args, $n)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCells =
+    copy(child = newChild)
+}
+
+object NearestCells {
+  def apply(emb: Column, cent: Seq[(Long, Seq[Double])], n: Int): Column =
+    GraftShims.column(NearestCells(GraftShims.expression(emb),
+      cent.map(_._1), cent.map(_._2), n))
+
+  /** Copy `emb` into `v` as doubles; false on a null element (the
+    * NULL-distance fallback). */
+  def extract(emb: ArrayData, v: Array[Double], name: String): Boolean = {
+    val n = emb.numElements()
+    require(n == v.length, s"$name: embedding has $n dims, centroids have ${v.length}")
+    var k = 0
+    while (k < n) {
+      if (emb.isNullAt(k)) return false
+      v(k) = emb.getFloat(k).toDouble
+      k += 1
+    }
+    true
+  }
 
   /** The `n` nearest labels ascending by (distance, label) — insertion
     * into n slots; the ascending-label scan keeps the smaller label on
-    * distance ties, as in best1. */
-  def bestN(v: Array[Double], cents: Array[Double], labels: Array[Long], n: Int): Array[Long] = {
-    val dims = v.length
+    * distance ties. */
+  def cells(emb: ArrayData, v: Array[Double], cents: Array[Double], labels: Array[Long],
+      n: Int): ArrayData = {
     val kept = math.min(n, labels.length)
+    if (!extract(emb, v, "nearest_cells"))
+      return ArrayData.toArrayData(java.util.Arrays.copyOf(labels, kept))
+    val dims = v.length
     val bd = new Array[Double](kept)
     val bl = new Array[Long](kept)
     var used = 0
@@ -1777,167 +1716,6 @@ object NearestCellsHelper {
       }
       c += 1
     }
-    if (used == kept) bl else java.util.Arrays.copyOf(bl, used)
+    ArrayData.toArrayData(if (used == kept) bl else java.util.Arrays.copyOf(bl, used))
   }
-
-  /** The null-embedding-element path: every centroid's distance is NULL
-    * (L2SquaredDistance's NULL propagation), and the old struct
-    * orderings put (NULL, label) before any non-NULL distance with the
-    * label as tie-break — so the n smallest are simply the n smallest
-    * labels. */
-  def nullFallback(labels: Array[Long], n: Int): Array[Long] =
-    java.util.Arrays.copyOf(labels, math.min(n, labels.length))
-}
-
-/** Common shape of the two nearest-cell expressions: an array<float>
-  * embedding scored against a LITERAL coarse-quantizer centroid matrix
-  * (driver-side data, KBs — the same payload the LocalRelation form of
-  * the quantizer already embeds in the plan). Round 18: these kernels
-  * replace the broadcast-crossJoin + min_by aggregate (one corpus-sized
-  * exchange per consumer) and the crossJoin + TopKPerKey probe-list
-  * spellings — cell assignment becomes a zero-shuffle projection over
-  * the scan, like a real IVF assign. A literal `array_min(array(struct(
-  * l2², label)...))` composition computes the same thing but pays for
-  * itself twice: ~650 literal nodes per call site bloat every optimizer
-  * pass, and ArrayMin/ArraySort are interpreted — measured +0.4 s on
-  * s15 at sf0.1 before this kernel replaced it. Selection semantics
-  * (including the all-NULL-distance fallback on a null embedding
-  * element) live in [[NearestCellsHelper]]; equivalence to the retired
-  * spellings is pinned in AnnRecallSweepSpec + ExpressionsSpec. */
-trait NearestCellsBase extends UnaryExpression {
-  def labels: Seq[Long]
-  def centroids: Seq[Seq[Double]]
-  require(labels.nonEmpty && labels.size == centroids.size,
-    s"nearest_cells: ${labels.size} labels vs ${centroids.size} centroids")
-  require(labels == labels.sorted && labels.distinct.size == labels.size,
-    "nearest_cells: labels must be ascending and distinct (the tie-break order)")
-  require(centroids.forall(_.size == centroids.head.size),
-    "nearest_cells: ragged centroid matrix")
-
-  protected val dims: Int = centroids.head.size
-  @transient protected lazy val flatCents: Array[Double] = centroids.flatten.toArray
-  @transient protected lazy val labelArr: Array[Long] = labels.toArray
-
-  override def checkInputDataTypes() =
-    if (child.dataType match {
-      case ArrayType(FloatType, _) => true; case _ => false })
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs an array<float> argument, got ${child.dataType}")
-
-  /** Extract to a double[]; null element → null (the caller branches to
-    * the NULL-distance fallback). */
-  protected def extract(input: Any): Array[Double] = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    require(n == dims, s"$prettyName: embedding has $n dims, centroids have $dims")
-    val v = new Array[Double](n)
-    var k = 0
-    while (k < n) {
-      if (arr.isNullAt(k)) return null
-      v(k) = arr.getFloat(k).toDouble
-      k += 1
-    }
-    v
-  }
-
-  /** Shared codegen: extract into a task-reused buffer (the LshBandSigs
-    * pattern — one allocation per task, contiguous reads for the
-    * distance loops), then one static helper call. `body(v, hasNull)`
-    * renders the result assignment. */
-  protected def genWith(ctx: CodegenContext, ev: ExprCode,
-      body: (String, String) => String): ExprCode = {
-    val vField = ctx.addMutableState("double[]", "ncVec", _ => "")
-    val hasNull = ctx.freshName("hasNull")
-    val n = ctx.freshName("n")
-    val k = ctx.freshName("k")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-        int $n = $c.numElements();
-        if ($n != $dims) {
-          throw new IllegalArgumentException(
-            "$prettyName: embedding has " + $n + " dims, centroids have $dims");
-        }
-        if ($vField == null) { $vField = new double[$dims]; }
-        boolean $hasNull = false;
-        for (int $k = 0; $k < $n; $k++) {
-          if ($c.isNullAt($k)) { $hasNull = true; break; }
-          $vField[$k] = (double) $c.getFloat($k);
-        }
-        ${body(vField, hasNull)}
-      """
-    })
-  }
-}
-
-/** Nearest-cell LABEL (argmin by (l2² distance, label)) — the cell
-  * assignment of one embedding under a literal trained quantizer. */
-case class NearestCellLabel(child: Expression, labels: Seq[Long],
-    centroids: Seq[Seq[Double]]) extends NearestCellsBase {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "nearest_cell_label"
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = extract(input)
-    if (v == null) labelArr(0)
-    else NearestCellsHelper.best1(v, flatCents, labelArr)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cField = ctx.addReferenceObj("ncCents", flatCents, "double[]")
-    val lField = ctx.addReferenceObj("ncLabels", labelArr, "long[]")
-    genWith(ctx, ev, (v, hasNull) =>
-      s"""
-        ${ev.value} = $hasNull
-          ? $lField[0]
-          : graft.functions.NearestCellsHelper.best1($v, $cField, $lField);
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCellLabel =
-    copy(child = newChild)
-}
-
-object NearestCellLabel {
-  def apply(emb: Column, cent: Seq[(Long, Seq[Double])]): Column =
-    GraftShims.column(NearestCellLabel(GraftShims.expression(emb),
-      cent.map(_._1), cent.map(_._2)))
-}
-
-/** The `n` nearest cell labels ascending by (l2² distance, label) —
-  * an IVF query's probe list as a per-row expression. */
-case class NearestCells(child: Expression, labels: Seq[Long],
-    centroids: Seq[Seq[Double]], n: Int) extends NearestCellsBase {
-  require(n >= 1, s"nearest_cells: n must be positive, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "nearest_cells"
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = extract(input)
-    val out =
-      if (v == null) NearestCellsHelper.nullFallback(labelArr, n)
-      else NearestCellsHelper.bestN(v, flatCents, labelArr, n)
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cField = ctx.addReferenceObj("ncCents", flatCents, "double[]")
-    val lField = ctx.addReferenceObj("ncLabels", labelArr, "long[]")
-    genWith(ctx, ev, (v, hasNull) =>
-      s"""
-        ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-          $hasNull
-            ? graft.functions.NearestCellsHelper.nullFallback($lField, $n)
-            : graft.functions.NearestCellsHelper.bestN($v, $cField, $lField, $n));
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCells =
-    copy(child = newChild)
-}
-
-object NearestCells {
-  def apply(emb: Column, cent: Seq[(Long, Seq[Double])], n: Int): Column =
-    GraftShims.column(NearestCells(GraftShims.expression(emb),
-      cent.map(_._1), cent.map(_._2), n))
 }

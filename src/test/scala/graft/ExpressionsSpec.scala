@@ -801,6 +801,37 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
     assert(nsigs == 8)
   }
 
+  test("LshBandSigs refuses a shape it cannot represent") {
+    import graft.functions.LshBandSigs
+    val emb = org.apache.spark.sql.catalyst.expressions.Literal.create(
+      Seq(1.0f, -2.0f), org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType))
+    // bits = 65 used to fold plane 64 onto bit 0 (Java masks 1L << 64);
+    // a negative band count only failed at run time; the last shape
+    // needs 2^32 weights
+    Seq((4, 65, 2), (4, 0, 2), (0, 4, 2), (-1, 4, 2), (4, 4, 0), (1 << 20, 64, 64))
+      .foreach { case (bands, bits, dims) =>
+        intercept[IllegalArgumentException](LshBandSigs(emb, bands, bits, dims))
+      }
+    assert(LshBandSigs(emb, 1, 64, 2).dataType != null)
+    GraftFunctions.register(spark)
+    val e = intercept[Throwable](spark.sql(
+      "SELECT lsh_band_sigs(CAST(array(1.0, -2.0) AS ARRAY<FLOAT>), 4, 65, 2)").collect())
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[IllegalArgumentException]), e)
+  }
+
+  test("integer literal arguments: a BIGINT outside the Int range is refused, not truncated") {
+    GraftFunctions.register(spark)
+    assert(spark.sql("SELECT kmv_distinct(id, 64L) FROM range(40)").head().getLong(0) == 40L)
+    // 4294967298 = 2^32 + 2 used to run as k = 2
+    val e = intercept[Throwable](
+      spark.sql("SELECT kmv_distinct(id, 4294967298) FROM range(40)").collect())
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
+      c.isInstanceOf[IllegalArgumentException] &&
+        String.valueOf(c.getMessage).contains("integer literal")), e)
+  }
+
   test("s2 ANN recall: LSH bucket top-5 ⊆ corpus, exact top-5 overlap measured") {
     val dir = "/root/testdata/sf0.001"
     val exact = graft.queries.LlmQueries.l3CosineTopk(spark, dir)

@@ -64,10 +64,6 @@ object Tables {
   /** [[load]] + [[spread]]. */
   def loadSpread(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spread(spark, load(spark, sfDir, name))
-
-  /** Register every table as a temp view so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }
 
 /** Session factory with the settings every entry point shares.

@@ -41,11 +41,4 @@ object Vectors {
   /** The builtin-composition spelling, kept for the equivalence test
     * pinning the codegen expression to the portable definition. */
   def cosineBuiltin(a: Column, b: Column): Column = dot(a, b) / norm(a) / norm(b)
-
-  /** Cosine given precomputed norms — at scale norms are computed once
-    * per vector (O(n·d)) instead of once per pair (O(n²·d)); bitwise
-    * identical to [[cosine]] because the per-row norm value is the same
-    * double either way. */
-  def cosineWithNorms(a: Column, b: Column, normA: Column, normB: Column): Column =
-    dot(a, b) / normA / normB
 }

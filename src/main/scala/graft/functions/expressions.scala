@@ -1355,60 +1355,63 @@ object GraftFunctions {
       s"$fn expects an integer literal argument, got $other")
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("poly_hash", exprs => PolyHash(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash30", exprs => SimHash30(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("fnv1a32", exprs => Fnv1a32(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes", exprs => ShingleHashes(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash16", exprs => MinHash16(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_similarity",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_band_sigs",
-      exprs => LshBandSigs(exprs(0),
-        litInt(exprs(1), "lsh_band_sigs"), litInt(exprs(2), "lsh_band_sigs"),
-        if (exprs.length > 3) litInt(exprs(3), "lsh_band_sigs") else 64), "scala_udf")
+  /** Every registered SQL function: name → (accepted argument counts,
+    * builder). [[register]] and [[graft.plans.GraftExtensions]] both
+    * read this table through [[checkedBuilder]]. */
+  private val builders: Map[String, (Range, Seq[Expression] => Expression)] = Map(
+    "poly_hash" -> (1 to 1, e => PolyHash(e(0))),
+    "simhash30" -> (1 to 1, e => SimHash30(e(0))),
+    "fnv1a32" -> (1 to 1, e => Fnv1a32(e(0))),
+    "shingle_hashes" -> (1 to 1, e => ShingleHashes(e(0))),
+    "minhash16" -> (1 to 1, e => MinHash16(e(0))),
+    "cosine_similarity" -> (2 to 2, e => CosineSimilarity(e(0), e(1))),
+    "lsh_band_sigs" -> (3 to 4, e => LshBandSigs(e(0),
+      litInt(e(1), "lsh_band_sigs"), litInt(e(2), "lsh_band_sigs"),
+      if (e.length > 3) litInt(e(3), "lsh_band_sigs") else 64)),
     // an AggregateFunction returned bare: the analyzer wraps it in the
     // AggregateExpression (Complete) when it resolves the call site
-    reg.createOrReplaceTempFunction("kmv_distinct",
-      exprs => KmvDistinct(exprs(0), litInt(exprs(1), "kmv_distinct")), "scala_udf")
-    reg.createOrReplaceTempFunction("misra_gries",
-      exprs => MisraGries(exprs(0), litInt(exprs(1), "misra_gries")), "scala_udf")
-    reg.createOrReplaceTempFunction("gram_hashes",
-      exprs => GramHashes(exprs(0), litInt(exprs(1), "gram_hashes")), "scala_udf")
-    reg.createOrReplaceTempFunction("span_cut",
-      exprs => SpanCut(exprs(0), exprs(1), litInt(exprs(2), "span_cut")), "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_agg",
-      exprs => BloomAgg(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_maybe",
-      exprs => BloomMaybe(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("stride_sample",
-      exprs => StrideSampleTokens(exprs(0), litInt(exprs(1), "stride_sample")), "scala_udf")
-    reg.createOrReplaceTempFunction("deletion_nbh_hashes",
-      exprs => DeletionNbhHashes(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_token_count",
-      exprs => BpeTokenCount(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("subword_count",
-      exprs => SubwordCount(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("char_trigrams",
-      exprs => CharTrigrams(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("repeat_stats",
-      exprs => RepetitionStats(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("char_stats",
-      exprs => CharStats(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      exprs => NfcNormalize(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("int8_quant_stats",
-      exprs => Int8QuantStats(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("stop_hits",
-      exprs => StopHits(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, StringType) =>
-          // filter(_.nonEmpty): ''.split(" ") is Seq(""), and an empty
-          // "word" would count every empty token split() emits
-          s.toString.split(" ").toSeq.filter(_.nonEmpty)
-        case other => throw new IllegalArgumentException(
-          s"stop_hits expects a string literal word list, got $other")
-      }), "scala_udf")
+    "kmv_distinct" -> (2 to 2, e => KmvDistinct(e(0), litInt(e(1), "kmv_distinct"))),
+    "misra_gries" -> (2 to 2, e => MisraGries(e(0), litInt(e(1), "misra_gries"))),
+    "gram_hashes" -> (2 to 2, e => GramHashes(e(0), litInt(e(1), "gram_hashes"))),
+    "span_cut" -> (3 to 3, e => SpanCut(e(0), e(1), litInt(e(2), "span_cut"))),
+    "bloom_agg" -> (1 to 1, e => BloomAgg(e(0))),
+    "bloom_maybe" -> (2 to 2, e => BloomMaybe(e(0), e(1))),
+    "stride_sample" -> (2 to 2, e => StrideSampleTokens(e(0), litInt(e(1), "stride_sample"))),
+    "deletion_nbh_hashes" -> (1 to 1, e => DeletionNbhHashes(e(0))),
+    "bpe_token_count" -> (1 to 1, e => BpeTokenCount(e(0))),
+    "subword_count" -> (1 to 1, e => SubwordCount(e(0))),
+    "char_trigrams" -> (1 to 1, e => CharTrigrams(e(0))),
+    "repeat_stats" -> (1 to 1, e => RepetitionStats(e(0))),
+    "char_stats" -> (1 to 1, e => CharStats(e(0))),
+    "nfc_normalize" -> (1 to 1, e => NfcNormalize(e(0))),
+    "int8_quant_stats" -> (1 to 1, e => Int8QuantStats(e(0))),
+    "stop_hits" -> (2 to 2, e => StopHits(e(0), e(1) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, StringType) =>
+        // filter(_.nonEmpty): ''.split(" ") is Seq(""), and an empty
+        // "word" would count every empty token split() emits
+        s.toString.split(" ").toSeq.filter(_.nonEmpty)
+      case other => throw new IllegalArgumentException(
+        s"stop_hits expects a string literal word list, got $other")
+    })),
+  )
+
+  /** `name`'s builder, refusing a call whose argument count the table
+    * does not accept — with the function, the expected and the given
+    * count in the message — instead of dropping extra arguments or
+    * failing on a missing one with a bare index error. */
+  private[graft] def checkedBuilder(name: String): Seq[Expression] => Expression = {
+    val (arity, build) = builders(name)
+    val expected = if (arity.size == 1) s"${arity.start}" else s"${arity.start} to ${arity.end}"
+    exprs => {
+      if (!arity.contains(exprs.length)) throw new IllegalArgumentException(
+        s"$name expects $expected argument(s), got ${exprs.length}")
+      build(exprs)
+    }
+  }
+
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    builders.keys.foreach(n => reg.createOrReplaceTempFunction(n, checkedBuilder(n), "scala_udf"))
   }
 }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-import graft.functions.{CosineSimilarity, Fnv1a32, PolyHash, SimHash30}
+import graft.functions.{CosineSimilarity, Fnv1a32, GraftFunctions, PolyHash, SimHash30}
 
 /** Catalyst extension layer (SURVEY §7 preference step (c), used where
   * it genuinely pays):
@@ -21,7 +21,8 @@ import graft.functions.{CosineSimilarity, Fnv1a32, PolyHash, SimHash30}
   *    CodegenFallback) become one codegen'd loop, ~10× on the pair-join
   *    hot path, with bit-identical results (same fold order).
   *  - function injection so plain SQL sees `poly_hash` / `simhash30` /
-  *    `fnv1a32` / `cosine_similarity` without per-session registration.
+  *    `fnv1a32` / `cosine_similarity` without per-session registration
+  *    (the builders of [[GraftFunctions.register]]'s table).
   *
   * Activate with
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
@@ -32,22 +33,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => FuseCosineSimilarity)
     ext.injectOptimizerRule(_ => RewriteRankLimitToTopK)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("poly_hash"),
-        new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-        (exprs: Seq[Expression]) => PolyHash(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("simhash30"),
-        new ExpressionInfo(classOf[SimHash30].getName, "simhash30"),
-        (exprs: Seq[Expression]) => SimHash30(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("fnv1a32"),
-        new ExpressionInfo(classOf[Fnv1a32].getName, "fnv1a32"),
-        (exprs: Seq[Expression]) => Fnv1a32(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_similarity"),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-        (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
+    Seq(classOf[PolyHash] -> "poly_hash", classOf[SimHash30] -> "simhash30",
+        classOf[Fnv1a32] -> "fnv1a32", classOf[CosineSimilarity] -> "cosine_similarity")
+      .foreach { case (cls, name) =>
+        ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+          new ExpressionInfo(cls.getName, name), GraftFunctions.checkedBuilder(name)))
+      }
   }
 }
 
@@ -109,7 +100,7 @@ object FuseCosineSimilarity extends Rule[LogicalPlan] {
   *    `row_number()` (any other window column must survive, so the
   *    Window node must stay);
   *  - the filter is a sole `rn <= k` / `rn < k` / `rn = 1` conjunct
-  *    with literal k in (0, spark.graft.topk.autoRewriteMaxK];
+  *    with literal k in (0, [[RewriteRankLimitToTopK.maxK]]];
   *  - the projection above drops `rn` (the operator does not emit
   *    ranks);
   *  - the rank's window spec matches the Window node's own
@@ -123,7 +114,9 @@ object FuseCosineSimilarity extends Rule[LogicalPlan] {
   */
 object RewriteRankLimitToTopK extends Rule[LogicalPlan] {
   val enabledKey = TopK.autoRewriteKey
-  val maxKKey = "spark.graft.topk.autoRewriteMaxK"
+  /** The largest k rewritten (the heap holds up to k rows per key);
+    * a larger k keeps the window plan. */
+  val maxK = 1000
 
   import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, Window}
 
@@ -141,7 +134,6 @@ object RewriteRankLimitToTopK extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.getConfString(enabledKey, "true").toBoolean) return plan
-    val maxK = conf.getConfString(maxKKey, "1000").toInt
     plan.transformUp {
       case Project(plist,
           Filter(RankLimit(rnId, k),

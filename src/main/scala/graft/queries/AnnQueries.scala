@@ -64,18 +64,24 @@ object AnnQueries {
     * ones), ranked by exact cosine (9dp-rounded like L3). At scale the
     * probe set is 9 bucket lookups against a bucket-partitioned corpus
     * — still a ~30× pruning vs the exact scan. */
-  def s2AnnLsh(spark: SparkSession, dir: String): DataFrame = {
+  def s2AnnLsh(spark: SparkSession, dir: String): DataFrame =
+    lshProbeScores(spark, dir, 1)
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(5)
+
+  /** (vec_id, sim) for every vector whose SRP bucket lies within
+    * Hamming `radius` of vec_id 0's: s2/s8's multi-probe prefilter,
+    * then exact cosine against the probe. */
+  private def lshProbeScores(spark: SparkSession, dir: String, radius: Int): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
       .withColumn("bucket", LshBucket8(col("embedding")))
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb"), col("bucket").as("q_bucket"))
     e.filter(col("vec_id") =!= 0)
       .join(broadcast(q),
-        bit_count(col("bucket").bitwiseXOR(col("q_bucket"))) <= 1)
+        bit_count(col("bucket").bitwiseXOR(col("q_bucket"))) <= radius)
       .select(col("vec_id"),
         round(Vectors.cosine(col("embedding"), col("q_emb")), 9).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(5)
   }
 
   /** s8 — RADIUS (range) similarity search: every vector within cosine
@@ -97,19 +103,10 @@ object AnnQueries {
     * expected distance (~1.4) and recall is high — the knob discussion
     * at [[s3Bands]] applies. At scale: broadcast 1-row probe against a
     * bucket-partitioned corpus = a 37-bucket lookup, never a scan. */
-  def s8RangeSearch(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(spark, dir, "embeddings")
-      .withColumn("bucket", LshBucket8(col("embedding")))
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q_emb"), col("bucket").as("q_bucket"))
-    e.filter(col("vec_id") =!= 0)
-      .join(broadcast(q),
-        bit_count(col("bucket").bitwiseXOR(col("q_bucket"))) <= 2)
-      .select(col("vec_id"),
-        round(Vectors.cosine(col("embedding"), col("q_emb")), 9).as("sim"))
+  def s8RangeSearch(spark: SparkSession, dir: String): DataFrame =
+    lshProbeScores(spark, dir, 2)
       .where(col("sim") >= 0.3)
       .orderBy(col("vec_id"))
-  }
 
   /** s3 band count / bits-per-band — the LSH S-curve knobs, set for the
     * test corpus's regime and documented so a user can retune:
@@ -309,7 +306,14 @@ object AnnQueries {
   private[graft] def assignCells(vectors: DataFrame, cent: Seq[(Long, Seq[Double])]): DataFrame =
     vectors.withColumn("clabel", nearestCellCol(cent, col("embedding")))
 
-  def s4AnnIvf(spark: SparkSession, dir: String): DataFrame = {
+  def s4AnnIvf(spark: SparkSession, dir: String): DataFrame =
+    ivfProbeScores(spark, dir)
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(5)
+
+  /** (vec_id, sim) for every vector in vec_id 0's [[ivfNprobe]]
+    * nearest trained cells: s4/s17's IVF probe, then exact cosine. */
+  private def ivfProbeScores(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
     // the TRAINED coarse quantizer (k-means, quantizerRounds Lloyd
     // rounds) — the label-derived seed shipped through round 8 and
@@ -334,8 +338,6 @@ object AnnQueries {
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
         round(Vectors.cosine(col("embedding"), col("q_emb")), 9).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(5)
   }
 
   /** s17 — IVF RADIUS search: every vector within a cosine threshold
@@ -357,22 +359,10 @@ object AnnQueries {
     * cache manager's plan dedup where they run together), a 10-row
     * broadcast probe list, no window, no global sort except the
     * presentation ORDER BY. */
-  def s17IvfRadius(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(spark, dir, "embeddings")
-    val cent = centroidSeq(spark, dir)
-    // expression-form quantizer (round 18) — same shape as s4
-    val assigned = assignCells(e.select(col("vec_id"), col("embedding")), cent)
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
-    val probes = q.select(explode(nearestCellsCol(cent, col("q_emb"), ivfNprobe)).as("pc"))
-      .select(col("pc").as("plabel"))
-    assigned.join(broadcast(probes), col("clabel") === col("plabel"))
-      .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(Vectors.cosine(col("embedding"), col("q_emb")), 9).as("sim"))
+  def s17IvfRadius(spark: SparkSession, dir: String): DataFrame =
+    ivfProbeScores(spark, dir)
       .filter(col("sim") >= 0.3)
       .orderBy("vec_id")
-  }
 
   /** s6 — batch kNN JOIN: exact top-3 cosine neighbors for EVERY probe
     * in a deterministic probe subset (vec_id ≡ 3 mod 20), in ONE corpus
@@ -393,15 +383,28 @@ object AnnQueries {
     * are the sub-linear alternatives when approximation is allowed. */
   def s6KnnJoin(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
-    val probes = e.filter(col("vec_id") % 20 === 3)
+    exactTop3(spark, e, probeSet(e, 3), "sim")(Vectors.cosine)
+      .orderBy(col("probe_id"), col("sim").desc, col("vec_id"))
+  }
+
+  /** Every 20th vector (vec_id ≡ `residue` mod 20) as (probe_id,
+    * q_emb): s6's and the recall evals' probe set (residue 3), s9's
+    * (residue 7). */
+  private def probeSet(e: DataFrame, residue: Int): DataFrame =
+    e.filter(col("vec_id") % 20 === residue)
       .select(col("vec_id").as("probe_id"), col("embedding").as("q_emb"))
+
+  /** Exact top-3 per probe by `score` (rounded to 9dp, as column
+    * `name`): the probes broadcast against a spread corpus scan into
+    * the TopKPerKey heap — s6, s9 and the recall evals' ground truth. */
+  private def exactTop3(spark: SparkSession, e: DataFrame, probes: DataFrame, name: String)(
+      score: (Column, Column) => Column): DataFrame = {
     val scored = Tables.spread(spark, e.select(col("vec_id"), col("embedding")))
       .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
-        round(Vectors.cosine(col("embedding"), col("q_emb")), 9).as("sim"))
+        round(score(col("embedding"), col("q_emb")), 9).as(name))
     graft.plans.TopK.perKey(scored, Seq(col("probe_id")),
-      Seq(col("sim").desc, col("vec_id")), k = 3)
-      .orderBy(col("probe_id"), col("sim").desc, col("vec_id"))
+      Seq(col(name).desc, col("vec_id")), k = 3)
   }
 
   /** s9 — batch MIPS (maximum INNER-PRODUCT search): top-3 by raw dot
@@ -422,14 +425,7 @@ object AnnQueries {
     * narrow rows — the scored stream never materializes. */
   def s9Mips(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
-    val probes = e.filter(col("vec_id") % 20 === 7)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("q_emb"))
-    val scored = Tables.spread(spark, e.select(col("vec_id"), col("embedding")))
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        round(Vectors.dot(col("embedding"), col("q_emb")), 9).as("ip"))
-    graft.plans.TopK.perKey(scored, Seq(col("probe_id")),
-      Seq(col("ip").desc, col("vec_id")), k = 3)
+    exactTop3(spark, e, probeSet(e, 7), "ip")(Vectors.dot)
       .orderBy(col("probe_id"), col("ip").desc, col("vec_id"))
   }
 
@@ -824,11 +820,8 @@ object AnnQueries {
       Seq(s"pq=v1:m=$pqSubspaces:subdim=$pqSubDim", quantizerParams))
     graft.core.ArtifactStore.getOrBuild(spark, "pq_codes_v1", fp, dir, pqCodesBuilds) { _ =>
       val e = Tables.load(spark, dir, "embeddings")
-      val parts = Tables.spread(spark, e.select(col("vec_id"), col("embedding")))
-        .select(col("vec_id"), explode(expr(
-          s"transform(sequence(0, ${pqSubspaces - 1}), m -> struct(m AS m, slice(embedding, m * $pqSubDim + 1, $pqSubDim) AS v))")).as("p"))
-        .select(col("vec_id"), col("p.m").as("m"), col("p.v").as("v"))
-      parts.join(broadcast(sub), "m")
+      subvectors(Tables.spread(spark, e.select(col("vec_id"), col("embedding"))), "vec_id", "embedding")
+        .join(broadcast(sub), "m")
         .select(col("vec_id"), col("m"), col("label"),
           L2SquaredDistance(col("c"), col("v")).as("d"))
         .groupBy("vec_id", "m")
@@ -836,24 +829,30 @@ object AnnQueries {
     }
   }
 
+  /** (`id`, m, v): each row's `emb` cut into its [[pqSubspaces]]
+    * subvectors v of [[pqSubDim]] dims. */
+  private def subvectors(df: DataFrame, id: String, emb: String): DataFrame =
+    df.select(col(id), explode(expr(
+        s"transform(sequence(0, ${pqSubspaces - 1}), m -> struct(m AS m, slice($emb, m * $pqSubDim + 1, $pqSubDim) AS v))")).as("p"))
+      .select(col(id), col("p.m").as("m"), col("p.v").as("v"))
+
+  /** s7/s16's ADC lookup entry: codeword `c`'s squared distance to
+    * query subvector `v` in integer micro-units, floor(d·1e6 + 0.5). */
+  private def adcMicros: Column =
+    floor(L2SquaredDistance(col("c"), col("v")) * lit(1000000L) + lit(0.5)).as("qd")
+
   def s7IvfPq(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
     // codebooks sliced from the TRAINED quantizer (round-9): real PQ
     // trains its codewords; the label-seed slices were the same
     // unfitted means s15 flagged on the IVF side
-    val cent = trainedCentroids(spark, dir)
-    def l2sq(c: Column, v: Column): Column = L2SquaredDistance(c, v)
-    val sub = pqCodebook(cent)
+    val sub = pqCodebook(trainedCentroids(spark, dir))
     val codes = pqCodesStored(spark, dir)
     // query subvectors for the ADC lookup table
-    val parts = Tables.spread(spark, e.select(col("vec_id"), col("embedding")))
-      .select(col("vec_id"), explode(expr(
-        s"transform(sequence(0, ${pqSubspaces - 1}), m -> struct(m AS m, slice(embedding, m * $pqSubDim + 1, $pqSubDim) AS v))")).as("p"))
-      .select(col("vec_id"), col("p.m").as("m"), col("p.v").as("v"))
+    val parts = subvectors(Tables.spread(spark, e.select(col("vec_id"), col("embedding"))), "vec_id", "embedding")
     // ADC lookup table: query distance to each codeword, integer micro-units
     val qtab = parts.filter(col("vec_id") === 0).join(broadcast(sub), "m")
-      .select(col("m").as("qm"), col("label"),
-        floor(l2sq(col("c"), col("v")) * lit(1000000L) + lit(0.5)).as("qd"))
+      .select(col("m").as("qm"), col("label"), adcMicros)
     val cand = codes.filter(col("vec_id") =!= 0)
       .join(broadcast(qtab), col("m") === col("qm") && col("code") === col("label"))
       .groupBy("vec_id").agg(sum(col("qd")).as("adist"))
@@ -1096,12 +1095,6 @@ object AnnQueries {
     * validate the index that then serves every query from the cheap
     * arm, and both arms here are the already-scale-argued s6/s4
     * plans. */
-  /** The recall-eval probe set shared by s15 and s16 (s6's
-    * convention): every 20th vector, as (probe_id, q_emb). */
-  private def recallProbes(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") % 20 === 3)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("q_emb"))
-
   /** The EXACT-kNN ground-truth manifest (probe_id, vec_id): top-3 by
     * exact cosine for every recall probe — the baseline BOTH index
     * evals (s15 IVF, s16 PQ) measure against. One brute-force
@@ -1117,13 +1110,7 @@ object AnnQueries {
     * exactly the real economics. */
   private def exactKnn3(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
-    val probes = recallProbes(e)
-    val scored = Tables.spread(spark, e.select(col("vec_id"), col("embedding")))
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        round(Vectors.cosine(col("embedding"), col("q_emb")), 9).as("sim"))
-    graft.plans.TopK.perKey(scored, Seq(col("probe_id")),
-      Seq(col("sim").desc, col("vec_id")), k = 3)
+    exactTop3(spark, e, probeSet(e, 3), "sim")(Vectors.cosine)
       .select("probe_id", "vec_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
@@ -1135,7 +1122,7 @@ object AnnQueries {
     // trained config measures 0.87/0.80 (sf0.01/sf0.1), the corpus's
     // swept ceiling (AnnRecallSweepSpec)
     val cent = centroidSeq(spark, dir)
-    val probes = recallProbes(e)
+    val probes = probeSet(e, 3)
     val exact = exactKnn3(spark, dir)
     // expression-form quantizer (round 18): assignment rides the corpus
     // scan with the embedding kept inline (no argmin shuffle, no
@@ -1160,6 +1147,12 @@ object AnnQueries {
     // both recall relations are probes×k ids — broadcast-class by the
     // family's own posture (probes themselves are broadcast above), so
     // neither tiny join may shuffle the other side (was 2 SortMergeJoins)
+    recallReport(probes, exact, ann)
+  }
+
+  /** s15/s16's recall report: per probe the ANN top-3 ids that are
+    * also exact top-3 (n_hit of n_total = 3), plus the -1 total row. */
+  private def recallReport(probes: DataFrame, exact: DataFrame, ann: DataFrame): DataFrame = {
     val hits = exact.join(ann, Seq("probe_id", "vec_id"))
       .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
     val perProbe = probes.select("probe_id")
@@ -1205,22 +1198,16 @@ object AnnQueries {
     * embedding. The exact arm is s6's one-scan heap. */
   def s16PqRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
-    val cent = trainedCentroids(spark, dir)
-    def l2sq(c: Column, v: Column): Column = L2SquaredDistance(c, v)
-    val sub = pqCodebook(cent)
+    val sub = pqCodebook(trainedCentroids(spark, dir))
     // the SHARED stored codes table — the eval scores the same index
     // artifact s7 serves from, encoded once per corpus fingerprint
     val codes = pqCodesStored(spark, dir)
-    val probes = recallProbes(e)
+    val probes = probeSet(e, 3)
     // per-probe ADC LUT: probes × pqSubspaces × k codewords, integer
     // micro-units (s7's floor(d·1e6 + 0.5) convention) — broadcast
-    val qtab = probes
-      .select(col("probe_id"), explode(expr(
-        s"transform(sequence(0, ${pqSubspaces - 1}), m -> struct(m AS m, slice(q_emb, m * $pqSubDim + 1, $pqSubDim) AS v))")).as("p"))
-      .select(col("probe_id"), col("p.m").as("m"), col("p.v").as("v"))
+    val qtab = subvectors(probes, "probe_id", "q_emb")
       .join(broadcast(sub), "m")
-      .select(col("probe_id"), col("m").as("qm"), col("label"),
-        floor(l2sq(col("c"), col("v")) * lit(1000000L) + lit(0.5)).as("qd"))
+      .select(col("probe_id"), col("m").as("qm"), col("label"), adcMicros)
     // (m, code) both in the join condition — each codes row matches
     // exactly one LUT entry per probe, never the whole m-slice.
     // NO spread on the codes scan, measured twice (r18): the scan keeps
@@ -1247,16 +1234,7 @@ object AnnQueries {
     // (canonicalized-plan cache dedup) as s15's baseline arm; recall
     // relations are probes×k ids — broadcast, as in s15
     val exact = exactKnn3(spark, dir)
-    val hits = exact.join(ann, Seq("probe_id", "vec_id"))
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
-    val perProbe = probes.select("probe_id")
-      .join(hits, Seq("probe_id"), "left")
-      .select(col("probe_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        lit(3L).as("n_total"))
-    val total = perProbe
-      .agg(sum("n_hit").as("n_hit"), sum("n_total").as("n_total"))
-      .select(lit(-1L).as("probe_id"), col("n_hit"), col("n_total"))
-    perProbe.unionByName(total).orderBy("probe_id")
+    recallReport(probes, exact, ann)
   }
 
   /** d17 — DEDUP EVALUATION: d8's semantic dedup measured against its
@@ -1407,17 +1385,95 @@ object AnnQueries {
     def l2sq(c: String, e: String) = l2sqDuck(c, e)
     val centCtes = centCtesDuck
     val tCtes = trainedCentCtesDuck
-    // the d8 pipeline (planted-twin corpus, trained-quantizer
-    // assignment, within-cluster victim mining) as ONE CTE chain
-    // shared by the d8 twin and d17's eval twin
-    val d8Ctes =
-      s"""corpus AS (
+    // the corpus plus one planted near-twin per vec_id ≡ 0 mod 10 (s5,
+    // d8, d17)
+    val twinCorpus =
+      """corpus AS (
           SELECT vec_id, embedding FROM embeddings
           UNION ALL
           SELECT vec_id + 1000000 AS vec_id,
             list_transform(embedding, (x, i) ->
               CAST(CAST(x AS DOUBLE) * (1.0 + 0.05 * ((i - 1) % 3 - 1)) AS FLOAT)) AS embedding
-          FROM embeddings WHERE vec_id % 10 = 0),
+          FROM embeddings WHERE vec_id % 10 = 0)"""
+    // every vector's nearest centroid of the `c` CTE, as the
+    // row_number argmin (s4, s11, s15, s17)
+    def assigned(c: String) =
+      s"""assigned AS (SELECT vec_id, clabel FROM (
+            SELECT e.vec_id, c.label AS clabel,
+              ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                ORDER BY ${l2sq("c.centroid", "e.embedding")}, c.label) AS rn
+            FROM embeddings e, $c c) WHERE rn = 1)"""
+    // s2/s8: vec_id 0 against every vector within SRP-bucket Hamming
+    // `radius`
+    def lshProbe(radius: Int) =
+      s"""WITH eb AS (SELECT vec_id, embedding, ${bucketDuck("embedding")} AS bucket FROM embeddings)
+        SELECT b.vec_id, ROUND($cos, 9) AS sim
+        FROM eb a JOIN eb b
+          ON bit_count(xor(a.bucket, b.bucket)) <= $radius AND a.vec_id = 0 AND b.vec_id <> 0"""
+    // s3/s5: the pairs of `eb` sharing any of `bands` band signatures
+    def bandPairs(bands: Int) =
+      s"""SELECT * FROM (
+          SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b, ROUND($cos, 9) AS sim
+          FROM eb a JOIN eb b
+            ON a.vec_id < b.vec_id
+            AND len(list_filter(range(1, ${bands + 1}), g -> a.sigs[g] = b.sigs[g])) > 0) t"""
+    // s4/s17: vec_id 0 scored against the vectors of its ivfNprobe
+    // nearest trained cells
+    val ivfProbe =
+      s"""WITH $tCtes,
+        ${assigned("tcent")},
+        q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
+        probes AS (SELECT c.label AS plabel FROM tcent c, q
+            ORDER BY ${l2sq("c.centroid", "q.q_emb")}, c.label LIMIT $ivfNprobe)
+        SELECT b.vec_id, ROUND($cos, 9) AS sim
+        FROM embeddings a, embeddings b
+        JOIN assigned s ON s.vec_id = b.vec_id
+        JOIN probes p ON p.plabel = s.clabel
+        WHERE a.vec_id = 0 AND b.vec_id <> 0"""
+    // s15/s16: the exact top-3 per s6 probe, and the recall report of
+    // an `ann` CTE against it
+    val exactKnn3 =
+      s"""exact AS (SELECT probe_id, vec_id FROM (
+            SELECT a.vec_id AS probe_id, b.vec_id AS vec_id,
+              ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                ORDER BY ROUND($cos, 9) DESC, b.vec_id) AS rn
+            FROM embeddings a, embeddings b
+            WHERE a.vec_id % 20 = 3 AND b.vec_id <> a.vec_id) t
+          WHERE rn <= 3)"""
+    val recallReport =
+      """hits AS (SELECT e.probe_id, CAST(COUNT(*) AS BIGINT) AS n_hit
+                 FROM exact e JOIN ann n
+                   ON e.probe_id = n.probe_id AND e.vec_id = n.vec_id
+                 GROUP BY e.probe_id),
+        per AS (SELECT p.probe_id,
+                  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
+                  CAST(3 AS BIGINT) AS n_total
+                FROM (SELECT vec_id AS probe_id FROM embeddings WHERE vec_id % 20 = 3) p
+                LEFT JOIN hits h ON h.probe_id = p.probe_id)
+        SELECT * FROM (
+          SELECT probe_id, n_hit, n_total FROM per
+          UNION ALL
+          SELECT CAST(-1 AS BIGINT), CAST(SUM(n_hit) AS BIGINT),
+                 CAST(SUM(n_total) AS BIGINT) FROM per)
+        ORDER BY probe_id"""
+    // s7/s16: the PQ subspace squared distance, and every vector's PQ
+    // codes (per-subspace nearest sliced centroid)
+    def l2sub(c: String, e: String) =
+      s"list_sum(list_transform(range(1, ${pqSubDim + 1}), j -> " +
+        s"($c[mm.m * $pqSubDim + j] - CAST($e[mm.m * $pqSubDim + j] AS DOUBLE)) * " +
+        s"($c[mm.m * $pqSubDim + j] - CAST($e[mm.m * $pqSubDim + j] AS DOUBLE))))"
+    val pqCodes =
+      s"""mm AS (SELECT unnest(range(0, $pqSubspaces)) AS m),
+        codes AS (SELECT vec_id, m, label AS code FROM (
+            SELECT e.vec_id, mm.m, c.label,
+              ROW_NUMBER() OVER (PARTITION BY e.vec_id, mm.m
+                ORDER BY ${l2sub("c.centroid", "e.embedding")}, c.label) AS rn
+            FROM embeddings e CROSS JOIN mm CROSS JOIN tcent c) WHERE rn = 1)"""
+    // the d8 pipeline (planted-twin corpus, trained-quantizer
+    // assignment, within-cluster victim mining) as ONE CTE chain
+    // shared by the d8 twin and d17's eval twin
+    val d8Ctes =
+      s"""$twinCorpus,
         $tCtes,
         assigned AS (SELECT vec_id, cluster FROM (
             SELECT e.vec_id, c.label AS cluster,
@@ -1431,17 +1487,11 @@ object AnnQueries {
           WHERE ROUND($cos, 9) >= 0.85)"""
     Map(
       "s8_range_search" ->
-        s"""WITH eb AS (SELECT vec_id, embedding, ${bucketDuck("embedding")} AS bucket FROM embeddings)
-        SELECT b.vec_id, ROUND($cos, 9) AS sim
-        FROM eb a JOIN eb b
-          ON bit_count(xor(a.bucket, b.bucket)) <= 2 AND a.vec_id = 0 AND b.vec_id <> 0
+        s"""${lshProbe(2)}
         WHERE ROUND($cos, 9) >= 0.3
         ORDER BY b.vec_id""",
       "s2_ann_lsh" ->
-        s"""WITH eb AS (SELECT vec_id, embedding, ${bucketDuck("embedding")} AS bucket FROM embeddings)
-        SELECT b.vec_id, ROUND($cos, 9) AS sim
-        FROM eb a JOIN eb b
-          ON bit_count(xor(a.bucket, b.bucket)) <= 1 AND a.vec_id = 0 AND b.vec_id <> 0
+        s"""${lshProbe(1)}
         ORDER BY sim DESC, b.vec_id LIMIT 5""",
       // brute-force form of the same deterministic spec: pairs sharing
       // any of the banded SRP signatures (regenerated from the same
@@ -1449,39 +1499,21 @@ object AnnQueries {
       // enough that candidate generation needn't be replicated)
       "s3_lsh_near_dup" ->
         s"""WITH eb AS (SELECT vec_id, embedding, ${sigListDuck(s3Bands, s3Bits)} AS sigs FROM embeddings)
-        SELECT * FROM (
-          SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b, ROUND($cos, 9) AS sim
-          FROM eb a JOIN eb b
-            ON a.vec_id < b.vec_id
-            AND len(list_filter(range(1, ${s3Bands + 1}), g -> a.sigs[g] = b.sigs[g])) > 0) t
+        ${bandPairs(s3Bands)}
         WHERE sim >= 0.45 ORDER BY vec_id_a, vec_id_b""",
       // s5: same spec at production knobs over the planted-twin corpus;
       // the twin arithmetic (double scale, float round) is restated
       // 1-based and must stay bit-identical to the Spark transform
       "s5_lsh_near_dup_prod" ->
-        s"""WITH corpus AS (
-          SELECT vec_id, embedding FROM embeddings
-          UNION ALL
-          SELECT vec_id + 1000000 AS vec_id,
-            list_transform(embedding, (x, i) ->
-              CAST(CAST(x AS DOUBLE) * (1.0 + 0.05 * ((i - 1) % 3 - 1)) AS FLOAT)) AS embedding
-          FROM embeddings WHERE vec_id % 10 = 0),
+        s"""WITH $twinCorpus,
         eb AS (SELECT vec_id, embedding, ${sigListDuck(s5Bands, s5Bits)} AS sigs FROM corpus)
-        SELECT * FROM (
-          SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b, ROUND($cos, 9) AS sim
-          FROM eb a JOIN eb b
-            ON a.vec_id < b.vec_id
-            AND len(list_filter(range(1, ${s5Bands + 1}), g -> a.sigs[g] = b.sigs[g])) > 0) t
+        ${bandPairs(s5Bands)}
         WHERE sim >= 0.85 ORDER BY vec_id_a, vec_id_b""",
       // s4's centroid + row_number assignment spellings feeding s10's
       // explode-mean spelling — the whole Lloyd step restated
       "s11_kmeans_step" ->
         s"""WITH $centCtes,
-        assigned AS (SELECT vec_id, clabel FROM (
-            SELECT e.vec_id, c.label AS clabel,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                ORDER BY ${l2sq("c.centroid", "e.embedding")}, c.label) AS rn
-            FROM embeddings e, cent c) WHERE rn = 1),
+        ${assigned("cent")},
         q AS (SELECT CAST(a.clabel AS BIGINT) AS cluster, k,
                 CAST(round(CAST(e.embedding[CAST(k AS INT)] AS DOUBLE) * 1000000) AS BIGINT) AS qv
               FROM assigned a, embeddings e, range(1, ${dims + 1}) t(k)
@@ -1555,18 +1587,8 @@ object AnnQueries {
       // JOIN tree's ON clauses.
       "s15_ann_recall" ->
         s"""WITH $tCtes,
-        exact AS (SELECT probe_id, vec_id FROM (
-            SELECT a.vec_id AS probe_id, b.vec_id AS vec_id,
-              ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY ROUND($cos, 9) DESC, b.vec_id) AS rn
-            FROM embeddings a, embeddings b
-            WHERE a.vec_id % 20 = 3 AND b.vec_id <> a.vec_id) t
-          WHERE rn <= 3),
-        assigned AS (SELECT vec_id, clabel FROM (
-            SELECT e.vec_id, c.label AS clabel,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                ORDER BY ${l2sq("c.centroid", "e.embedding")}, c.label) AS rn
-            FROM embeddings e, tcent c) WHERE rn = 1),
+        $exactKnn3,
+        ${assigned("tcent")},
         cells AS (SELECT probe_id, plabel FROM (
             SELECT a.vec_id AS probe_id, c.label AS plabel,
               ROW_NUMBER() OVER (PARTITION BY a.vec_id
@@ -1582,21 +1604,7 @@ object AnnQueries {
             WHERE a.vec_id % 20 = 3 AND p.probe_id = a.vec_id
               AND b.vec_id <> a.vec_id) t
           WHERE rn <= 3),
-        hits AS (SELECT e.probe_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-                 FROM exact e JOIN ann n
-                   ON e.probe_id = n.probe_id AND e.vec_id = n.vec_id
-                 GROUP BY e.probe_id),
-        per AS (SELECT p.probe_id,
-                  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-                  CAST(3 AS BIGINT) AS n_total
-                FROM (SELECT vec_id AS probe_id FROM embeddings WHERE vec_id % 20 = 3) p
-                LEFT JOIN hits h ON h.probe_id = p.probe_id)
-        SELECT * FROM (
-          SELECT probe_id, n_hit, n_total FROM per
-          UNION ALL
-          SELECT CAST(-1 AS BIGINT), CAST(SUM(n_hit) AS BIGINT),
-                 CAST(SUM(n_total) AS BIGINT) FROM per)
-        ORDER BY probe_id""",
+        $recallReport""",
       "s6_knn_join" ->
         s"""SELECT probe_id, vec_id, sim FROM (
           SELECT a.vec_id AS probe_id, b.vec_id AS vec_id, ROUND($cos, 9) AS sim,
@@ -1633,18 +1641,9 @@ object AnnQueries {
       // the row_number spelling, the same integer micro-unit LUT
       // (floor(d·1e6 + 0.5)), order-independent BIGINT ADC sums
       // (HUGEINT collapsed by the CAST), exact-cosine re-rank
-      "s7_ivf_pq" -> {
-        def l2sub(c: String, e: String) =
-          s"list_sum(list_transform(range(1, ${pqSubDim + 1}), j -> " +
-            s"($c[mm.m * $pqSubDim + j] - CAST($e[mm.m * $pqSubDim + j] AS DOUBLE)) * " +
-            s"($c[mm.m * $pqSubDim + j] - CAST($e[mm.m * $pqSubDim + j] AS DOUBLE))))"
+      "s7_ivf_pq" ->
         s"""WITH $tCtes,
-        mm AS (SELECT unnest(range(0, $pqSubspaces)) AS m),
-        codes AS (SELECT vec_id, m, label AS code FROM (
-            SELECT e.vec_id, mm.m, c.label,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id, mm.m
-                ORDER BY ${l2sub("c.centroid", "e.embedding")}, c.label) AS rn
-            FROM embeddings e CROSS JOIN mm CROSS JOIN tcent c) WHERE rn = 1),
+        $pqCodes,
         qtab AS (SELECT mm.m, c.label,
               CAST(floor(${l2sub("c.centroid", "q.embedding")} * 1000000 + 0.5) AS BIGINT) AS qd
             FROM (SELECT embedding FROM embeddings WHERE vec_id = 0) q
@@ -1656,23 +1655,13 @@ object AnnQueries {
         SELECT b.vec_id, cand.adist, ROUND($cos, 9) AS sim
         FROM embeddings a, embeddings b JOIN cand ON cand.vec_id = b.vec_id
         WHERE a.vec_id = 0
-        ORDER BY sim DESC, b.vec_id LIMIT 5"""
-      },
+        ORDER BY sim DESC, b.vec_id LIMIT 5""",
       // s16: the s7 twin's codes/LUT spellings generalized to the s6
       // probe set + the s15 recall scaffolding — ADC candidates at
       // rerankDepth, exact-cosine re-rank, integer hit counts
-      "s16_pq_recall" -> {
-        def l2sub(c: String, e: String) =
-          s"list_sum(list_transform(range(1, ${pqSubDim + 1}), j -> " +
-            s"($c[mm.m * $pqSubDim + j] - CAST($e[mm.m * $pqSubDim + j] AS DOUBLE)) * " +
-            s"($c[mm.m * $pqSubDim + j] - CAST($e[mm.m * $pqSubDim + j] AS DOUBLE))))"
+      "s16_pq_recall" ->
         s"""WITH $tCtes,
-        mm AS (SELECT unnest(range(0, $pqSubspaces)) AS m),
-        codes AS (SELECT vec_id, m, label AS code FROM (
-            SELECT e.vec_id, mm.m, c.label,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id, mm.m
-                ORDER BY ${l2sub("c.centroid", "e.embedding")}, c.label) AS rn
-            FROM embeddings e CROSS JOIN mm CROSS JOIN tcent c) WHERE rn = 1),
+        $pqCodes,
         qtab AS (SELECT a.vec_id AS probe_id, mm.m, c.label,
               CAST(floor(${l2sub("c.centroid", "a.embedding")} * 1000000 + 0.5) AS BIGINT) AS qd
             FROM embeddings a CROSS JOIN mm CROSS JOIN tcent c
@@ -1693,62 +1682,15 @@ object AnnQueries {
             WHERE a.vec_id % 20 = 3 AND ct.probe_id = a.vec_id
               AND b.vec_id <> a.vec_id) t
           WHERE rn <= 3),
-        exact AS (SELECT probe_id, vec_id FROM (
-            SELECT a.vec_id AS probe_id, b.vec_id AS vec_id,
-              ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY ROUND($cos, 9) DESC, b.vec_id) AS rn
-            FROM embeddings a, embeddings b
-            WHERE a.vec_id % 20 = 3 AND b.vec_id <> a.vec_id) t
-          WHERE rn <= 3),
-        hits AS (SELECT e.probe_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-                 FROM exact e JOIN ann n
-                   ON e.probe_id = n.probe_id AND e.vec_id = n.vec_id
-                 GROUP BY e.probe_id),
-        per AS (SELECT p.probe_id,
-                  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-                  CAST(3 AS BIGINT) AS n_total
-                FROM (SELECT vec_id AS probe_id FROM embeddings WHERE vec_id % 20 = 3) p
-                LEFT JOIN hits h ON h.probe_id = p.probe_id)
-        SELECT * FROM (
-          SELECT probe_id, n_hit, n_total FROM per
-          UNION ALL
-          SELECT CAST(-1 AS BIGINT), CAST(SUM(n_hit) AS BIGINT),
-                 CAST(SUM(n_total) AS BIGINT) FROM per)
-        ORDER BY probe_id"""
-      },
+        $exactKnn3,
+        $recallReport""",
       // s17: the s4 twin with the threshold gate in place of the
       // top-k cut — same tcent chain, same assignment spelling
       "s17_ivf_radius" ->
-        s"""WITH $tCtes,
-        assigned AS (SELECT vec_id, clabel FROM (
-            SELECT e.vec_id, c.label AS clabel,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                ORDER BY ${l2sq("c.centroid", "e.embedding")}, c.label) AS rn
-            FROM embeddings e, tcent c) WHERE rn = 1),
-        q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-        probes AS (SELECT c.label AS plabel FROM tcent c, q
-            ORDER BY ${l2sq("c.centroid", "q.q_emb")}, c.label LIMIT $ivfNprobe)
-        SELECT b.vec_id, ROUND($cos, 9) AS sim
-        FROM embeddings a, embeddings b
-        JOIN assigned s ON s.vec_id = b.vec_id
-        JOIN probes p ON p.plabel = s.clabel
-        WHERE a.vec_id = 0 AND b.vec_id <> 0 AND ROUND($cos, 9) >= 0.3
+        s"""$ivfProbe AND ROUND($cos, 9) >= 0.3
         ORDER BY b.vec_id""",
       "s4_ann_ivf" ->
-        s"""WITH $tCtes,
-        assigned AS (SELECT vec_id, clabel FROM (
-            SELECT e.vec_id, c.label AS clabel,
-              ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                ORDER BY ${l2sq("c.centroid", "e.embedding")}, c.label) AS rn
-            FROM embeddings e, tcent c) WHERE rn = 1),
-        q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-        probes AS (SELECT c.label AS plabel FROM tcent c, q
-            ORDER BY ${l2sq("c.centroid", "q.q_emb")}, c.label LIMIT $ivfNprobe)
-        SELECT b.vec_id, ROUND($cos, 9) AS sim
-        FROM embeddings a, embeddings b
-        JOIN assigned s ON s.vec_id = b.vec_id
-        JOIN probes p ON p.plabel = s.clabel
-        WHERE a.vec_id = 0 AND b.vec_id <> 0
+        s"""$ivfProbe
         ORDER BY sim DESC, b.vec_id LIMIT 5""",
       // BM25 twin: same tokenization convention as l15 (space split),
       // same stats CTE and the SAME rational score text — only the

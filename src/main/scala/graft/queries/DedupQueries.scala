@@ -35,11 +35,6 @@ object DedupQueries {
 
   // --- shared Spark SQL fragments -----------------------------------------
 
-  /** doc_id + distinct 3-gram shingle array (docs with >=3 tokens). */
-  private val shingleCteSpark: String =
-    s"""toks AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
-        sh AS (SELECT doc_id, ${shinglesSpark("w")} AS s FROM toks WHERE size(w) >= 3)"""
-
   /** doc_id + distinct rolling-hashed shingle ids, via the fused
     * codegen shingle_hashes (≡ array_distinct(transform(shingles,
     * poly_hash)) — equivalence pinned in ExpressionsSpec). */
@@ -50,11 +45,17 @@ object DedupQueries {
   private def jacSpark(a: String, b: String): String =
     s"CAST(size(array_intersect($a, $b)) AS DOUBLE) / size(array_union($a, $b))"
 
-  /** The 8 × 2-row LSH band structs over a `mh` minhash array — shared
-    * by d1 (intra-corpus pair mining) and d6 (incremental ingest). */
-  private val bandStructsSpark: String = (0 until 8).map(k =>
-    s"named_struct('bi', $k, 'bk', concat(CAST(mh[${2 * k}] AS STRING), '_', CAST(mh[${2 * k + 1}] AS STRING)))")
-    .mkString(", ")
+  /** `mh` (16 minhashes per doc of the `ids` table) and `eb`, its 8 ×
+    * 2-row LSH band keys — shared by d1 (intra-corpus pair mining) and
+    * d6 (incremental ingest). */
+  private val bandCteSpark: String = {
+    val bandStructs = (0 until 8).map(k =>
+      s"named_struct('bi', $k, 'bk', concat(CAST(mh[${2 * k}] AS STRING), '_', CAST(mh[${2 * k + 1}] AS STRING)))")
+      .mkString(", ")
+    s"""mh AS (SELECT doc_id, minhash16(ids) AS mh FROM ids),
+      eb AS (SELECT doc_id, band.bi AS bi, band.bk AS bk
+             FROM mh LATERAL VIEW explode(array($bandStructs)) AS band)"""
+  }
 
   // --- shared DuckDB fragments --------------------------------------------
 
@@ -183,9 +184,7 @@ object DedupQueries {
   private[graft] def resemblancePairsPlan(spark: SparkSession, dir: String): DataFrame = {
     registerIds(spark, dir)
     spark.sql(s"""
-      WITH mh AS (SELECT doc_id, minhash16(ids) AS mh FROM ids),
-      eb AS (SELECT doc_id, band.bi AS bi, band.bk AS bk
-             FROM mh LATERAL VIEW explode(array($bandStructsSpark)) AS band),
+      WITH $bandCteSpark,
       cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
                FROM eb a JOIN eb b ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id),
       ver AS (SELECT c.i AS doc_id_a, c.j AS doc_id_b,
@@ -250,11 +249,7 @@ object DedupQueries {
     * d14's merged clustering re-consumes them, and the prefix-filter
     * join now runs once per corpus fingerprint, not once per JVM. */
   private[queries] def containmentPairs(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(s"WITH $idsCteSpark SELECT * FROM ids")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .createOrReplaceTempView("ids")
+    registerIds(spark, dir)
     // v2 (round 12): rarest-first prefixes + hash-join verify — the
     // verified pair set is IDENTICAL to v1 (recall is 1 under any
     // prefix ordering), but the build algorithm changed, so the key
@@ -703,9 +698,7 @@ object DedupQueries {
         spark.sql(s"WITH $idsCteSpark SELECT * FROM ids"))
       .createOrReplaceTempView("ids")
     spark.sql(s"""
-      WITH mh AS (SELECT doc_id, minhash16(ids) AS mh FROM ids),
-      eb AS (SELECT doc_id, band.bi AS bi, band.bk AS bk
-             FROM mh LATERAL VIEW explode(array($bandStructsSpark)) AS band),
+      WITH $bandCteSpark,
       exact_dup AS (SELECT DISTINCT n.doc_id
                     FROM (SELECT doc_id, sha2(text, 256) AS h FROM documents
                           WHERE doc_id % 4 = 0) n
@@ -955,13 +948,48 @@ object DedupQueries {
   )
 
   val oracleSql: Map[String, String] = {
-    val mhDuck = minhashAB.zipWithIndex.map { case ((a, b), k) =>
-      s"list_min(list_transform(ids, x -> ($a*x + $b) % $P)) AS mh$k"
-    }.mkString(", ")
-    val bandList = (0 until 8).map(k =>
-      s"{'bi': $k, 'bk': CAST(mh${2 * k} AS VARCHAR) || '_' || CAST(mh${2 * k + 1} AS VARCHAR)}")
-      .mkString(", ")
+    // d1's candidate chain: minhashes, band keys, the pairs that share
+    // a band, and their Jaccard
+    val bandCteDuck = {
+      val mhDuck = minhashAB.zipWithIndex.map { case ((a, b), k) =>
+        s"list_min(list_transform(ids, x -> ($a*x + $b) % $P)) AS mh$k"
+      }.mkString(", ")
+      val bandList = (0 until 8).map(k =>
+        s"{'bi': $k, 'bk': CAST(mh${2 * k} AS VARCHAR) || '_' || CAST(mh${2 * k + 1} AS VARCHAR)}")
+        .mkString(", ")
+      s"""mh AS (SELECT doc_id, $mhDuck FROM ids),
+        eb AS (SELECT doc_id, u.bi AS bi, u.bk AS bk
+               FROM mh, UNNEST([$bandList]) t(u))"""
+    }
+    val candCteDuck =
+      """cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
+                 FROM eb a JOIN eb b ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id)"""
+    val verCteDuck =
+      s"""ver AS (SELECT c.i AS doc_id_a, c.j AS doc_id_b,
+                       ${jacDuck("ia.ids", "ib.ids")} AS jac
+                FROM cand c JOIN ids ia ON ia.doc_id = c.i JOIN ids ib ON ib.doc_id = c.j)"""
+    // d4's clusters: `name` holds the candidates that verify, `reach`
+    // the transitive closure over the undirected edges of `pairs`
+    def verifiedCteDuck(name: String) =
+      s"""$name AS (SELECT c.i AS pa, c.j AS pb
+                  FROM cand c JOIN ids ia ON ia.doc_id = c.i JOIN ids ib ON ib.doc_id = c.j
+                  WHERE ${jacDuck("ia.ids", "ib.ids")} >= $jacThreshold)"""
+    val closureCteDuck =
+      """edges AS (SELECT pa AS src, pb AS dst FROM pairs
+                  UNION ALL SELECT pb, pa FROM pairs),
+        reach AS (SELECT doc_id AS id, doc_id AS lab FROM documents
+                  UNION
+                  SELECT e.dst AS id, reach.lab
+                  FROM edges e JOIN reach ON reach.id = e.src)"""
+    def containDuck(a: String, b: String) =
+      s"round(CAST(length(list_intersect($a.ids, $b.ids)) AS DOUBLE) / least(length($a.ids), length($b.ids)), 6)"
     val gram5 = "w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]"
+    // d9/d11/d12's positional 5-gram hashes per doc (`gs`)
+    val spanCteDuck =
+      s"""toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        gr AS (SELECT doc_id, list_transform(range(1, length(w) - 3), i -> ($gram5)) AS grams
+               FROM toks WHERE length(w) >= 5),
+        g AS (SELECT doc_id, list_transform(grams, t -> ${rollingHashDuck("t")}) AS gs FROM gr)"""
     // d10's combo-key hash and the two bloom probe positions — same
     // constants as graft.functions.BloomSketch (m = 2^20, LCG mix)
     val d10key = rollingHashDuck(
@@ -990,10 +1018,7 @@ object DedupQueries {
       // (no manifest rows) keep every token. string_agg over zero kept
       // tokens is NULL -> coalesce to '' (a fully-masked doc)
       "d12_span_cut" ->
-        s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        gr AS (SELECT doc_id, list_transform(range(1, length(w) - 3), i -> ($gram5)) AS grams
-               FROM toks WHERE length(w) >= 5),
-        g AS (SELECT doc_id, list_transform(grams, t -> ${rollingHashDuck("t")}) AS gs FROM gr),
+        s"""WITH $spanCteDuck,
         p AS (SELECT doc_id, CAST(generate_subscripts(gs, 1) - 1 AS BIGINT) AS pos,
                      unnest(gs) AS h FROM g),
         d AS (SELECT h FROM p GROUP BY h HAVING COUNT(DISTINCT doc_id) > 1),
@@ -1012,10 +1037,7 @@ object DedupQueries {
       // d9's pipeline with the 0-based span position carried through
       // (DuckDB: generate_subscripts is 1-based, hence the -1)
       "d11_span_mask" ->
-        s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        gr AS (SELECT doc_id, list_transform(range(1, length(w) - 3), i -> ($gram5)) AS grams
-               FROM toks WHERE length(w) >= 5),
-        g AS (SELECT doc_id, list_transform(grams, t -> ${rollingHashDuck("t")}) AS gs FROM gr),
+        s"""WITH $spanCteDuck,
         p AS (SELECT doc_id, CAST(generate_subscripts(gs, 1) - 1 AS BIGINT) AS pos,
                      unnest(gs) AS h FROM g),
         d AS (SELECT h FROM p GROUP BY h HAVING COUNT(DISTINCT doc_id) > 1)
@@ -1030,10 +1052,7 @@ object DedupQueries {
       // `i`) inside it would capture the inner char index instead —
       // DuckDB resolves shadowed lambda names innermost-first.
       "d9_span_dedup" ->
-        s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        gr AS (SELECT doc_id, list_transform(range(1, length(w) - 3), i -> ($gram5)) AS grams
-               FROM toks WHERE length(w) >= 5),
-        g AS (SELECT doc_id, list_transform(grams, t -> ${rollingHashDuck("t")}) AS gs FROM gr),
+        s"""WITH $spanCteDuck,
         p AS (SELECT doc_id, unnest(gs) AS h FROM g),
         d AS (SELECT h FROM p GROUP BY h HAVING COUNT(DISTINCT doc_id) > 1)
         SELECT p.doc_id, COUNT(*) AS n_spans, COUNT(d.h) AS n_dup
@@ -1065,11 +1084,9 @@ object DedupQueries {
         s"""WITH $shingleCteDuck,
         $idsCteDuck
         SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-               round(CAST(length(list_intersect(a.ids, b.ids)) AS DOUBLE)
-                     / least(length(a.ids), length(b.ids)), 6) AS containment
+               ${containDuck("a", "b")} AS containment
         FROM ids a JOIN ids b ON a.doc_id < b.doc_id
-        WHERE round(CAST(length(list_intersect(a.ids, b.ids)) AS DOUBLE)
-                    / least(length(a.ids), length(b.ids)), 6) >= 0.6
+        WHERE ${containDuck("a", "b")} >= 0.6
         ORDER BY doc_id_a, doc_id_b""",
       // d16: d1's full pair derivation + the same 16 per-perm minhash
       // scalars joined per side; agreement is 16 integer equality
@@ -1080,14 +1097,9 @@ object DedupQueries {
           .mkString(" + ")
         s"""WITH $shingleCteDuck,
         $idsCteDuck,
-        mh AS (SELECT doc_id, $mhDuck FROM ids),
-        eb AS (SELECT doc_id, u.bi AS bi, u.bk AS bk
-               FROM mh, UNNEST([$bandList]) t(u)),
-        cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-                 FROM eb a JOIN eb b ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id),
-        ver AS (SELECT c.i AS doc_id_a, c.j AS doc_id_b,
-                       ${jacDuck("ia.ids", "ib.ids")} AS jac
-                FROM cand c JOIN ids ia ON ia.doc_id = c.i JOIN ids ib ON ib.doc_id = c.j)
+        $bandCteDuck,
+        $candCteDuck,
+        $verCteDuck
         SELECT v.doc_id_a, v.doc_id_b,
                CAST($matchSum AS BIGINT) AS n_match,
                CAST(CAST($matchSum AS BIGINT) * 1000 // 16 AS BIGINT) AS est_permille,
@@ -1100,14 +1112,9 @@ object DedupQueries {
       "d1_minhash_lsh" ->
         s"""WITH $shingleCteDuck,
         $idsCteDuck,
-        mh AS (SELECT doc_id, $mhDuck FROM ids),
-        eb AS (SELECT doc_id, u.bi AS bi, u.bk AS bk
-               FROM mh, UNNEST([$bandList]) t(u)),
-        cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-                 FROM eb a JOIN eb b ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id),
-        ver AS (SELECT c.i AS doc_id_a, c.j AS doc_id_b,
-                       ${jacDuck("ia.ids", "ib.ids")} AS jac
-                FROM cand c JOIN ids ia ON ia.doc_id = c.i JOIN ids ib ON ib.doc_id = c.j)
+        $bandCteDuck,
+        $candCteDuck,
+        $verCteDuck
         SELECT doc_id_a, doc_id_b, jac FROM ver WHERE jac >= $jacThreshold
         ORDER BY doc_id_a, doc_id_b""",
       "d2_simhash" ->
@@ -1126,20 +1133,10 @@ object DedupQueries {
       "d4_dedup_clusters" ->
         s"""WITH RECURSIVE $shingleCteDuck,
         $idsCteDuck,
-        mh AS (SELECT doc_id, $mhDuck FROM ids),
-        eb AS (SELECT doc_id, u.bi AS bi, u.bk AS bk
-               FROM mh, UNNEST([$bandList]) t(u)),
-        cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-                 FROM eb a JOIN eb b ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id),
-        pairs AS (SELECT c.i AS pa, c.j AS pb
-                  FROM cand c JOIN ids ia ON ia.doc_id = c.i JOIN ids ib ON ib.doc_id = c.j
-                  WHERE ${jacDuck("ia.ids", "ib.ids")} >= $jacThreshold),
-        edges AS (SELECT pa AS src, pb AS dst FROM pairs
-                  UNION ALL SELECT pb, pa FROM pairs),
-        reach AS (SELECT doc_id AS id, doc_id AS lab FROM documents
-                  UNION
-                  SELECT e.dst AS id, reach.lab
-                  FROM edges e JOIN reach ON reach.id = e.src)
+        $bandCteDuck,
+        $candCteDuck,
+        ${verifiedCteDuck("pairs")},
+        $closureCteDuck
         SELECT id AS doc_id, MIN(lab) AS cluster FROM reach
         GROUP BY id ORDER BY doc_id""",
       // d4's transitive closure over the MERGED edge set: the banded
@@ -1149,25 +1146,14 @@ object DedupQueries {
       "d14_full_dedup" ->
         s"""WITH RECURSIVE $shingleCteDuck,
         $idsCteDuck,
-        mh AS (SELECT doc_id, $mhDuck FROM ids),
-        eb AS (SELECT doc_id, u.bi AS bi, u.bk AS bk
-               FROM mh, UNNEST([$bandList]) t(u)),
-        cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-                 FROM eb a JOIN eb b ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id),
-        rpairs AS (SELECT c.i AS pa, c.j AS pb
-                   FROM cand c JOIN ids ia ON ia.doc_id = c.i JOIN ids ib ON ib.doc_id = c.j
-                   WHERE ${jacDuck("ia.ids", "ib.ids")} >= $jacThreshold),
+        $bandCteDuck,
+        $candCteDuck,
+        ${verifiedCteDuck("rpairs")},
         cpairs AS (SELECT a.doc_id AS pa, b.doc_id AS pb
                    FROM ids a JOIN ids b ON a.doc_id < b.doc_id
-                   WHERE round(CAST(length(list_intersect(a.ids, b.ids)) AS DOUBLE)
-                               / least(length(a.ids), length(b.ids)), 6) >= 0.6),
+                   WHERE ${containDuck("a", "b")} >= 0.6),
         pairs AS (SELECT pa, pb FROM rpairs UNION SELECT pa, pb FROM cpairs),
-        edges AS (SELECT pa AS src, pb AS dst FROM pairs
-                  UNION ALL SELECT pb, pa FROM pairs),
-        reach AS (SELECT doc_id AS id, doc_id AS lab FROM documents
-                  UNION
-                  SELECT e.dst AS id, reach.lab
-                  FROM edges e JOIN reach ON reach.id = e.src)
+        $closureCteDuck
         SELECT id AS doc_id, MIN(lab) AS cluster FROM reach
         GROUP BY id ORDER BY doc_id""",
       // d4's transitive clusters, reduced to the survivor manifest:
@@ -1175,20 +1161,10 @@ object DedupQueries {
       "d5_dedup_survivors" ->
         s"""WITH RECURSIVE $shingleCteDuck,
         $idsCteDuck,
-        mh AS (SELECT doc_id, $mhDuck FROM ids),
-        eb AS (SELECT doc_id, u.bi AS bi, u.bk AS bk
-               FROM mh, UNNEST([$bandList]) t(u)),
-        cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-                 FROM eb a JOIN eb b ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id),
-        pairs AS (SELECT c.i AS pa, c.j AS pb
-                  FROM cand c JOIN ids ia ON ia.doc_id = c.i JOIN ids ib ON ib.doc_id = c.j
-                  WHERE ${jacDuck("ia.ids", "ib.ids")} >= $jacThreshold),
-        edges AS (SELECT pa AS src, pb AS dst FROM pairs
-                  UNION ALL SELECT pb, pa FROM pairs),
-        reach AS (SELECT doc_id AS id, doc_id AS lab FROM documents
-                  UNION
-                  SELECT e.dst AS id, reach.lab
-                  FROM edges e JOIN reach ON reach.id = e.src),
+        $bandCteDuck,
+        $candCteDuck,
+        ${verifiedCteDuck("pairs")},
+        $closureCteDuck,
         labels AS (SELECT id AS doc_id, MIN(lab) AS cluster FROM reach GROUP BY id)
         SELECT d.doc_id, d.n_chars FROM documents d
         JOIN labels l ON l.doc_id = d.doc_id
@@ -1199,20 +1175,10 @@ object DedupQueries {
       "d7_canonical_docs" ->
         s"""WITH RECURSIVE $shingleCteDuck,
         $idsCteDuck,
-        mh AS (SELECT doc_id, $mhDuck FROM ids),
-        eb AS (SELECT doc_id, u.bi AS bi, u.bk AS bk
-               FROM mh, UNNEST([$bandList]) t(u)),
-        cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-                 FROM eb a JOIN eb b ON a.bi = b.bi AND a.bk = b.bk AND a.doc_id < b.doc_id),
-        pairs AS (SELECT c.i AS pa, c.j AS pb
-                  FROM cand c JOIN ids ia ON ia.doc_id = c.i JOIN ids ib ON ib.doc_id = c.j
-                  WHERE ${jacDuck("ia.ids", "ib.ids")} >= $jacThreshold),
-        edges AS (SELECT pa AS src, pb AS dst FROM pairs
-                  UNION ALL SELECT pb, pa FROM pairs),
-        reach AS (SELECT doc_id AS id, doc_id AS lab FROM documents
-                  UNION
-                  SELECT e.dst AS id, reach.lab
-                  FROM edges e JOIN reach ON reach.id = e.src),
+        $bandCteDuck,
+        $candCteDuck,
+        ${verifiedCteDuck("pairs")},
+        $closureCteDuck,
         labels AS (SELECT id AS doc_id, MIN(lab) AS cluster FROM reach GROUP BY id)
         SELECT cluster, doc_id, n_chars FROM (
           SELECT l.cluster, d.doc_id, d.n_chars,
@@ -1228,9 +1194,7 @@ object DedupQueries {
       "d6_incremental_dedup" ->
         s"""WITH $shingleCteDuck,
         $idsCteDuck,
-        mh AS (SELECT doc_id, $mhDuck FROM ids),
-        eb AS (SELECT doc_id, u.bi AS bi, u.bk AS bk
-               FROM mh, UNNEST([$bandList]) t(u)),
+        $bandCteDuck,
         exact_dup AS (SELECT DISTINCT n.doc_id FROM documents n JOIN documents b
                       ON n.doc_id % 4 = 0 AND b.doc_id % 4 <> 0 AND n.text = b.text),
         cand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j

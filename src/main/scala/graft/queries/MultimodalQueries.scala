@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -8,7 +8,7 @@ import graft.core.Tables
 /** Multimodal-column plumbing for the training-data pipeline: media
   * (image/audio/video) is carried as opaque `binary` columns with typed
   * metadata, and decode / feature-extraction runs as an imperative
-  * per-partition kernel over batches — the shape a real pipeline uses
+  * per-partition kernel over rows — the shape a real pipeline uses
   * for libjpeg/ffmpeg-style libraries that can't be expressed as
   * Catalyst expressions.
   *
@@ -36,6 +36,41 @@ object MultimodalQueries {
       .as[(Long, Array[Byte])]
   }
 
+  /** One output row per payload: `decode` runs on each (doc_id,
+    * payload) inside one mapPartitions node — the per-partition kernel
+    * seam every m key shares. */
+  private def decodeEach[T: Encoder](spark: SparkSession, dir: String)(
+      decode: (Long, Array[Byte]) => T): Dataset[T] =
+    binaryPayloads(spark, dir).mapPartitions(_.map { case (id, bytes) => decode(id, bytes) })
+
+  /** m1/m13's mixed media column: the payload encoded as PNG, WAV,
+    * JPEG or GIF by doc_id mod 4. */
+  private def encodeByDocId(id: Long, bytes: Array[Byte]): Array[Byte] = (id % 4) match {
+    case 0 => MultimodalKernels.encodePng(bytes)
+    case 1 => MultimodalKernels.encodeWav(bytes)
+    case 2 => MultimodalKernels.encodeJpeg(bytes)
+    case _ => MultimodalKernels.encodeGif(bytes)
+  }
+
+  /** m3/m8's video pass: the payload's MJPEG stream demuxed into
+    * frames, with `height` summed over every `step`-th frame →
+    * (n_frames, n_sampled, h_sum). */
+  private def sampledFrameHeights(bytes: Array[Byte], step: Int)(
+      height: Array[Byte] => Long): (Long, Long, Long) = {
+    val frames = MultimodalKernels.demuxMjpeg(MultimodalKernels.encodeMjpeg(bytes))
+    var hSum = 0L
+    var sampled = 0L
+    var k = 0
+    while (k < frames.length) {
+      if (k % step == 0) {
+        hSum += height(frames(k))
+        sampled += 1
+      }
+      k += 1
+    }
+    (frames.length.toLong, sampled, hSum)
+  }
+
   /** m1 — GENERIC decode of a binary media column to the typed
     * metadata record a lake catalog stores: (kind, width, height,
     * channels, px_check), over REAL containers (round 10; the
@@ -48,26 +83,14 @@ object MultimodalQueries {
     * while the oracle reconstructs every field independently from the
     * encoding assignment and each codec's established geometry
     * contract, so a mis-sniff, stride bug, or channel mixup
-    * hash-fails. `mapPartitions` processes rows in batches of 64, the
-    * batch shape a vectorized decode uses (amortizing per-call setup
-    * such as decoder contexts); scale shape is scan-speed like the
-    * rest of the media suite. */
+    * hash-fails. Each row is decoded on its own: the JDK codecs keep
+    * no per-call context that a batch could share. Scale shape is
+    * scan-speed like the rest of the media suite. */
   def m1MultimodalDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val container = (id % 4) match {
-            case 0 => MultimodalKernels.encodePng(bytes)
-            case 1 => MultimodalKernels.encodeWav(bytes)
-            case 2 => MultimodalKernels.encodeJpeg(bytes)
-            case _ => MultimodalKernels.encodeGif(bytes)
-          }
-          val (kind, w, h, ch, px) = MultimodalKernels.describeMedia(container)
-          (id, kind, w, h, ch, px)
-        }
-      }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val (kind, w, h, ch, px) = MultimodalKernels.describeMedia(encodeByDocId(id, bytes))
+      (id, kind, w, h, ch, px)
     }.toDF("doc_id", "kind", "width", "height", "channels", "px_check")
       .orderBy("doc_id")
   }
@@ -81,15 +104,14 @@ object MultimodalQueries {
     * weight matrix W(j,b) = ((7j + 3b + 1) mod 13) − 6. This is the
     * deterministic stand-in for a learned projection head with every
     * piece of the production shape real: the binary column, the real
-    * codec in the decode slot, the batched per-partition invocation
-    * (one "model call" per 64-row batch), and a broadcast-sized weight
-    * matrix entering the task closure once — only the weight VALUES
-    * are synthetic, and swapping them for a trained head changes no
-    * plumbing. All-integer arithmetic over a lossless codec: every
-    * feature is exactly recomputable from the source text (zero-padded
-    * tail pixels contribute 0·w), so the oracle gates the codec
-    * roundtrip AND the projection in one hash. ASCII corpus: ord ==
-    * byte (the shared m-suite invariant).
+    * codec in the decode slot, the per-partition invocation, and a
+    * broadcast-sized weight matrix entering the task closure once —
+    * only the weight VALUES are synthetic, and swapping them for a
+    * trained head changes no plumbing. All-integer arithmetic over a
+    * lossless codec: every feature is exactly recomputable from the
+    * source text (zero-padded tail pixels contribute 0·w), so the
+    * oracle gates the codec roundtrip AND the projection in one hash.
+    * ASCII corpus: ord == byte (the shared m-suite invariant).
     *
     * Output shape is long (one row per (doc_id, dim)) rather than an
     * array column: per-row scalars are hashable by any oracle harness
@@ -97,29 +119,24 @@ object MultimodalQueries {
     * stores, per-dimension stats) want. */
   def m2FeatureExtract(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
     val dims = m2Dims
     val period = m2Period
     // the "model": a fixed integer projection matrix, materialized
     // once on the driver and shipped to tasks like a broadcast head
     val w = m2Weights
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.flatMap { case (id, bytes) =>
-          val png = MultimodalKernels.encodePng(bytes)
-          val (_, _, px) = MultimodalKernels.decodePngPixels(png)
-          val acc = new Array[Long](dims)
-          var i = 0
-          while (i < px.length) {
-            val b = i % period
-            var j = 0
-            while (j < dims) { acc(j) += w(j)(b).toLong * px(i); j += 1 }
-            i += 1
-          }
-          acc.iterator.zipWithIndex.map { case (v, j) => (id, j.toLong, v) }
-        }
+    binaryPayloads(spark, dir).mapPartitions(_.flatMap { case (id, bytes) =>
+      val png = MultimodalKernels.encodePng(bytes)
+      val (_, _, px) = MultimodalKernels.decodePngPixels(png)
+      val acc = new Array[Long](dims)
+      var i = 0
+      while (i < px.length) {
+        val b = i % period
+        var j = 0
+        while (j < dims) { acc(j) += w(j)(b).toLong * px(i); j += 1 }
+        i += 1
       }
-    }.toDF("doc_id", "dim", "value")
+      acc.iterator.zipWithIndex.map { case (v, j) => (id, j.toLong, v) }
+    }).toDF("doc_id", "dim", "value")
       .orderBy("doc_id", "dim")
   }
 
@@ -147,15 +164,10 @@ object MultimodalQueries {
     * clipping, denominator) breaks the hash. */
   def m4Resize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val png = MultimodalKernels.encodePng(bytes)
-          val (w, h, rw, rh, rsum) = MultimodalKernels.resizePngAreaAvg(png)
-          (id, w, h, rw, rh, rsum)
-        }
-      }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val png = MultimodalKernels.encodePng(bytes)
+      val (w, h, rw, rh, rsum) = MultimodalKernels.resizePngAreaAvg(png)
+      (id, w, h, rw, rh, rsum)
     }.toDF("doc_id", "width", "height", "r_width", "r_height", "r_px_sum")
       .orderBy("doc_id")
   }
@@ -177,15 +189,10 @@ object MultimodalQueries {
     * MultimodalKernelSpec asserts the PNG signature instead. */
   def m5ImageDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val png = MultimodalKernels.encodePng(bytes)
-          val (w, h, sum) = MultimodalKernels.decodePng(png)
-          (id, w, h, sum)
-        }
-      }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val png = MultimodalKernels.encodePng(bytes)
+      val (w, h, sum) = MultimodalKernels.decodePng(png)
+      (id, w, h, sum)
     }.toDF("doc_id", "width", "height", "px_sum")
       .orderBy("doc_id")
   }
@@ -201,15 +208,10 @@ object MultimodalQueries {
     * source text. */
   def m10TiffDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val tiff = MultimodalKernels.encodeTiff16(bytes)
-          val (w, h, depth, sum) = MultimodalKernels.decodeTiff16(tiff)
-          (id, w, h, depth, sum)
-        }
-      }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val tiff = MultimodalKernels.encodeTiff16(bytes)
+      val (w, h, depth, sum) = MultimodalKernels.decodeTiff16(tiff)
+      (id, w, h, depth, sum)
     }.toDF("doc_id", "width", "height", "bit_depth", "px_sum")
       .orderBy("doc_id")
   }
@@ -222,15 +224,10 @@ object MultimodalQueries {
     * the oracle recomputes everything from the source text. */
   def m6AudioDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val wav = MultimodalKernels.encodeWav(bytes)
-          val (rate, channels, frames, sum) = MultimodalKernels.decodeWav(wav)
-          (id, rate, channels, frames, sum)
-        }
-      }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val wav = MultimodalKernels.encodeWav(bytes)
+      val (rate, channels, frames, sum) = MultimodalKernels.decodeWav(wav)
+      (id, rate, channels, frames, sum)
     }.toDF("doc_id", "sample_rate", "channels", "n_samples", "sample_sum")
       .orderBy("doc_id")
   }
@@ -250,22 +247,17 @@ object MultimodalQueries {
     * bytes → BufferedImage → typed metadata + quality gate. */
   def m7JpegDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val jpg = MultimodalKernels.encodeJpeg(bytes)
-          val (w, h, px) = MultimodalKernels.decodeJpeg(jpg)
-          var i = 0
-          var err = 0L
-          while (i < bytes.length) {
-            err += math.abs(px(i) - (bytes(i) & 0xff))
-            i += 1
-          }
-          val mae = if (bytes.isEmpty) 0.0 else err.toDouble / bytes.length
-          (id, w, h, w * h, if (mae <= 8.0) 1L else 0L)
-        }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val jpg = MultimodalKernels.encodeJpeg(bytes)
+      val (w, h, px) = MultimodalKernels.decodeJpeg(jpg)
+      var i = 0
+      var err = 0L
+      while (i < bytes.length) {
+        err += math.abs(px(i) - (bytes(i) & 0xff))
+        i += 1
       }
+      val mae = if (bytes.isEmpty) 0.0 else err.toDouble / bytes.length
+      (id, w, h, w * h, if (mae <= 8.0) 1L else 0L)
     }.toDF("doc_id", "width", "height", "n_px", "within_tol")
       .orderBy("doc_id")
   }
@@ -283,26 +275,10 @@ object MultimodalQueries {
     * oracle-exact. */
   def m8MjpegFrames(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val frames = MultimodalKernels.demuxMjpeg(
-            MultimodalKernels.encodeMjpeg(bytes))
-          var hSum = 0L
-          var sampled = 0L
-          var k = 0
-          while (k < frames.length) {
-            if (k % 2 == 0) {
-              val (_, h, _) = MultimodalKernels.decodeJpeg(frames(k))
-              hSum += h
-              sampled += 1
-            }
-            k += 1
-          }
-          (id, frames.length.toLong, sampled, hSum)
-        }
-      }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val (n, sampled, hSum) =
+        sampledFrameHeights(bytes, 2)(f => MultimodalKernels.decodeJpeg(f)._2)
+      (id, n, sampled, hSum)
     }.toDF("doc_id", "n_frames", "n_sampled", "h_sum")
       .orderBy("doc_id")
   }
@@ -328,27 +304,13 @@ object MultimodalQueries {
     * equivalence-pinned in ExpressionsSpec.) */
   def m3FrameSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val frames = MultimodalKernels.demuxMjpeg(
-            MultimodalKernels.encodeMjpeg(bytes))
-          var hSum = 0L
-          var sampled = 0L
-          var k = 0
-          while (k < frames.length) {
-            if (k % 3 == 0) {
-              val (w, h) = MultimodalKernels.probeJpegDims(frames(k))
-              require(w == 32, s"header width $w diverged from the 32-wide layout")
-              hSum += h
-              sampled += 1
-            }
-            k += 1
-          }
-          (id, frames.length.toLong, sampled, hSum)
-        }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val (n, sampled, hSum) = sampledFrameHeights(bytes, 3) { f =>
+        val (w, h) = MultimodalKernels.probeJpegDims(f)
+        require(w == 32, s"header width $w diverged from the 32-wide layout")
+        h
       }
+      (id, n, sampled, hSum)
     }.toDF("doc_id", "n_frames", "n_sampled", "h_sum")
       .orderBy("doc_id")
   }
@@ -365,15 +327,10 @@ object MultimodalQueries {
     * supports geometry + tolerance). */
   def m9GifFrames(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val (nf, ns, hs, ps) = MultimodalKernels.decodeGifFrames(
-            MultimodalKernels.encodeGif(bytes))
-          (id, nf, ns, hs, ps)
-        }
-      }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val (nf, ns, hs, ps) = MultimodalKernels.decodeGifFrames(
+        MultimodalKernels.encodeGif(bytes))
+      (id, nf, ns, hs, ps)
     }.toDF("doc_id", "n_frames", "n_sampled", "h_sum", "px_sum")
       .orderBy("doc_id")
   }
@@ -405,28 +362,23 @@ object MultimodalQueries {
     * one-pass-per-asset shape. */
   def m11SceneCut(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val sums = MultimodalKernels.decodeGifFrameSums(
-            MultimodalKernels.encodeGif(bytes))
-          var cuts = 0L
-          var maxDiff = 0L
-          var firstCut = -1L
-          var k = 1
-          while (k < sums.length) {
-            val d = math.abs(sums(k) - sums(k - 1))
-            if (d > sceneCutThreshold) {
-              cuts += 1
-              if (firstCut < 0) firstCut = k
-            }
-            if (d > maxDiff) maxDiff = d
-            k += 1
-          }
-          (id, sums.length.toLong, cuts, maxDiff, firstCut)
+    decodeEach(spark, dir) { (id, bytes) =>
+      val sums = MultimodalKernels.decodeGifFrameSums(
+        MultimodalKernels.encodeGif(bytes))
+      var cuts = 0L
+      var maxDiff = 0L
+      var firstCut = -1L
+      var k = 1
+      while (k < sums.length) {
+        val d = math.abs(sums(k) - sums(k - 1))
+        if (d > sceneCutThreshold) {
+          cuts += 1
+          if (firstCut < 0) firstCut = k
         }
+        if (d > maxDiff) maxDiff = d
+        k += 1
       }
+      (id, sums.length.toLong, cuts, maxDiff, firstCut)
     }.toDF("doc_id", "n_frames", "n_cuts", "max_diff", "first_cut")
       .orderBy("doc_id")
   }
@@ -451,27 +403,22 @@ object MultimodalQueries {
     * before the presentation sort. */
   def m12AudioSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val energies = MultimodalKernels.decodeWavWindowEnergies(
-            MultimodalKernels.encodeWav(bytes))
-          var active = 0L
-          var maxE = 0L
-          var firstActive = -1L
-          var k = 0
-          while (k < energies.length) {
-            if (energies(k) > activityThreshold) {
-              active += 1
-              if (firstActive < 0) firstActive = k
-            }
-            if (energies(k) > maxE) maxE = energies(k)
-            k += 1
-          }
-          (id, energies.length.toLong, active, maxE, firstActive)
+    decodeEach(spark, dir) { (id, bytes) =>
+      val energies = MultimodalKernels.decodeWavWindowEnergies(
+        MultimodalKernels.encodeWav(bytes))
+      var active = 0L
+      var maxE = 0L
+      var firstActive = -1L
+      var k = 0
+      while (k < energies.length) {
+        if (energies(k) > activityThreshold) {
+          active += 1
+          if (firstActive < 0) firstActive = k
         }
+        if (energies(k) > maxE) maxE = energies(k)
+        k += 1
       }
+      (id, energies.length.toLong, active, maxE, firstActive)
     }.toDF("doc_id", "n_windows", "n_active", "max_energy", "first_active")
       .orderBy("doc_id")
   }
@@ -485,24 +432,13 @@ object MultimodalQueries {
     * oracle reconstructs kind + geometry + lossless pixel checks
     * INDEPENDENTLY from the encoding assignment, so a wrong sniff,
     * a magic collision, or a mis-dispatch all fail the gate. Same
-    * batched mapPartitions seam and scan-speed scale shape as the
+    * mapPartitions seam and scan-speed scale shape as the
     * rest of the media suite. */
   def m13ModalityRouter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bin = binaryPayloads(spark, dir)
-    bin.mapPartitions { rows =>
-      rows.grouped(64).flatMap { batch =>
-        batch.map { case (id, bytes) =>
-          val container = (id % 4) match {
-            case 0 => MultimodalKernels.encodePng(bytes)
-            case 1 => MultimodalKernels.encodeWav(bytes)
-            case 2 => MultimodalKernels.encodeJpeg(bytes)
-            case _ => MultimodalKernels.encodeGif(bytes)
-          }
-          val (kind, geom, px) = MultimodalKernels.routeDecode(container)
-          (id, kind, geom, px)
-        }
-      }
+    decodeEach(spark, dir) { (id, bytes) =>
+      val (kind, geom, px) = MultimodalKernels.routeDecode(encodeByDocId(id, bytes))
+      (id, kind, geom, px)
     }.toDF("doc_id", "kind", "geom", "px_check")
       .orderBy("doc_id")
   }
@@ -522,6 +458,15 @@ object MultimodalQueries {
     "m8_mjpeg_frames"      -> (m8MjpegFrames _),
     "m10_tiff_decode"      -> (m10TiffDecode _),
   )
+
+  /** The m-suite's 128-byte frame geometry over `documents.text`: nf
+    * frames (an empty doc is one empty frame) and hl, the last frame's
+    * height in 32-wide rows. */
+  private val frameGeomDuck =
+    """CAST(greatest(1, ceil(length(text) / 128.0)) AS BIGINT) AS nf,
+       CAST(greatest(1, ceil((CASE WHEN length(text) = 0 THEN 0
+              WHEN length(text) % 128 = 0 THEN 128
+              ELSE length(text) % 128 END) / 32.0)) AS BIGINT) AS hl"""
 
   val oracleSql: Map[String, String] = Map(
     // m13: kind + geometry + checks derived from the ENCODING
@@ -598,7 +543,7 @@ object MultimodalQueries {
     // modulus the kernel reduces by — so a plain SUM matches. ASCII
     // corpus: ord == byte (the m2 contract).
     "m9_gif_frames" ->
-      """SELECT doc_id, nf AS n_frames,
+      s"""SELECT doc_id, nf AS n_frames,
            CAST(ceil(nf / 2.0) AS BIGINT) AS n_sampled,
            CAST(CASE WHEN (nf - 1) % 2 = 0
                 THEN (CAST(ceil(nf / 2.0) AS BIGINT) - 1) * 4 + hl
@@ -607,10 +552,7 @@ object MultimodalQueries {
                 CASE WHEN ((i - 1) // 128) % 2 = 0 THEN ord(text[i]) ELSE 0 END)), 0)
              AS BIGINT) AS px_sum
       FROM (SELECT doc_id, text,
-              CAST(greatest(1, ceil(length(text) / 128.0)) AS BIGINT) AS nf,
-              CAST(greatest(1, ceil((CASE WHEN length(text) = 0 THEN 0
-                     WHEN length(text) % 128 = 0 THEN 128
-                     ELSE length(text) % 128 END) / 32.0)) AS BIGINT) AS hl
+              $frameGeomDuck
             FROM documents) t
       ORDER BY doc_id""",
     // m1: the generic metadata record reconstructed INDEPENDENTLY
@@ -628,7 +570,7 @@ object MultimodalQueries {
     // a non-ASCII regeneration would fail this oracle loudly, not
     // silently).
     "m1_multimodal_decode" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
            CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'png' WHEN 1 THEN 'wav'
                 WHEN 2 THEN 'jpeg' ELSE 'gif' END AS kind,
            CAST(CASE WHEN doc_id % 4 = 1 THEN length(text) ELSE 32 END AS BIGINT) AS width,
@@ -642,10 +584,7 @@ object MultimodalQueries {
                             i -> ord(text[i]))), 0) % 1000000007
                 END AS BIGINT) AS px_check
       FROM (SELECT doc_id, text,
-              CAST(greatest(1, ceil(length(text) / 128.0)) AS BIGINT) AS nf,
-              CAST(greatest(1, ceil((CASE WHEN length(text) = 0 THEN 0
-                     WHEN length(text) % 128 = 0 THEN 128
-                     ELSE length(text) % 128 END) / 32.0)) AS BIGINT) AS hl
+              $frameGeomDuck
             FROM documents) t
       ORDER BY doc_id""",
     // m2 runs the real PNG roundtrip + the fixed integer projection on
@@ -666,16 +605,13 @@ object MultimodalQueries {
     // chunk; every 3rd frame (0, 3, ...) is sampled, so the last frame
     // contributes hl iff its index (nf-1) is divisible by 3
     "m3_frame_sample" ->
-      """SELECT doc_id, nf AS n_frames,
+      s"""SELECT doc_id, nf AS n_frames,
            CAST((nf - 1) // 3 + 1 AS BIGINT) AS n_sampled,
            CAST(CASE WHEN (nf - 1) % 3 = 0
                 THEN ((nf - 1) // 3) * 4 + hl
                 ELSE ((nf - 1) // 3 + 1) * 4 END AS BIGINT) AS h_sum
       FROM (SELECT doc_id,
-              CAST(greatest(1, ceil(length(text) / 128.0)) AS BIGINT) AS nf,
-              CAST(greatest(1, ceil((CASE WHEN length(text) = 0 THEN 0
-                     WHEN length(text) % 128 = 0 THEN 128
-                     ELSE length(text) % 128 END) / 32.0)) AS BIGINT) AS hl
+              $frameGeomDuck
             FROM documents) t
       ORDER BY doc_id""",
     // m4 runs the real PNG roundtrip + 2×2 floor-mean downsample on
@@ -751,16 +687,13 @@ object MultimodalQueries {
     // the LAST frame's height follows its residual size, and the last
     // frame is sampled iff its index (nf-1) is even
     "m8_mjpeg_frames" ->
-      """SELECT doc_id, nf AS n_frames,
+      s"""SELECT doc_id, nf AS n_frames,
            CAST(ceil(nf / 2.0) AS BIGINT) AS n_sampled,
            CAST(CASE WHEN (nf - 1) % 2 = 0
                 THEN (CAST(ceil(nf / 2.0) AS BIGINT) - 1) * 4 + hl
                 ELSE CAST(ceil(nf / 2.0) AS BIGINT) * 4 END AS BIGINT) AS h_sum
       FROM (SELECT doc_id,
-              CAST(greatest(1, ceil(length(text) / 128.0)) AS BIGINT) AS nf,
-              CAST(greatest(1, ceil((CASE WHEN length(text) = 0 THEN 0
-                     WHEN length(text) % 128 = 0 THEN 128
-                     ELSE length(text) % 128 END) / 32.0)) AS BIGINT) AS hl
+              $frameGeomDuck
             FROM documents) t
       ORDER BY doc_id""",
   )
@@ -778,19 +711,85 @@ object MultimodalKernels {
   // the sf0.1 corpus). JVM-global, set once on first kernel use.
   javax.imageio.ImageIO.setUseCache(false)
 
-  /** bytes → real PNG: 32-wide, 8-bit grayscale, row-major pixels,
-    * zero-padded final row. */
-  def encodePng(bytes: Array[Byte]): Array[Byte] = {
+  /** The 32-wide grayscale raster every image codec here encodes:
+    * pixel i = byte i × `scale` in row-major order, zero-padded final
+    * row, at least one row. */
+  private def gray32(bytes: Array[Byte], imageType: Int, scale: Int): java.awt.image.BufferedImage = {
     val w = 32
     val h = math.max(1, (bytes.length + w - 1) / w)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val img = new java.awt.image.BufferedImage(w, h, imageType)
     val raster = img.getRaster
     var i = 0
     while (i < bytes.length) {
-      raster.setSample(i % w, i / w, 0, bytes(i) & 0xff)
+      raster.setSample(i % w, i / w, 0, (bytes(i) & 0xff) * scale)
       i += 1
     }
+    img
+  }
+
+  /** Band-0 samples of a decoded raster, row-major. */
+  private def samples(img: java.awt.image.BufferedImage): Array[Int] = {
+    val r = img.getRaster
+    val w = img.getWidth
+    val h = img.getHeight
+    val px = new Array[Int](w * h)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { px(y * w + x) = r.getSample(x, y, 0); x += 1 }
+      y += 1
+    }
+    px
+  }
+
+  /** Band-0 sample sum of a decoded raster, mod P. */
+  private def sampleSum(img: java.awt.image.BufferedImage): Long = {
+    val r = img.getRaster
+    var sum = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) { sum = (sum + r.getSample(x, y, 0)) % P; x += 1 }
+      y += 1
+    }
+    sum
+  }
+
+  /** A decoded GIF frame's gray-level sum (no modulus: a frame is at
+    * most 128 pixels of at most 255). Pixels are read through
+    * `getRGB & 0xff`, NOT `raster.getSample`: the decoded frames are
+    * palette-INDEXED images, and the writer owes no particular palette
+    * order — the resolved color is the contract, the index is not. */
+  private def grayRgbSum(img: java.awt.image.BufferedImage): Long = {
+    var s = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) { s += (img.getRGB(x, y) & 0xff); x += 1 }
+      y += 1
+    }
+    s
+  }
+
+  /** Runs `f(reader, frameCount)` over a GIF through the JDK reader's
+    * multi-image API, disposing the reader and stream after. */
+  private def readGif[T](gif: Array[Byte])(f: (javax.imageio.ImageReader, Int) => T): T = {
+    val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+    val iis = javax.imageio.ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(gif))
+    try {
+      reader.setInput(iis)
+      f(reader, reader.getNumImages(true))
+    } finally {
+      reader.dispose()
+      iis.close()
+    }
+  }
+
+  /** bytes → real PNG: 32-wide, 8-bit grayscale, row-major pixels,
+    * zero-padded final row. */
+  def encodePng(bytes: Array[Byte]): Array[Byte] = {
+    val img = gray32(bytes, java.awt.image.BufferedImage.TYPE_BYTE_GRAY, 1)
     val baos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", baos)
     baos.toByteArray
@@ -802,32 +801,14 @@ object MultimodalKernels {
   def decodePngPixels(png: Array[Byte]): (Long, Long, Array[Int]) = {
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
     require(img != null, s"payload (${png.length} bytes) is not a decodable PNG")
-    val r = img.getRaster
-    val w = img.getWidth
-    val h = img.getHeight
-    val px = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { px(y * w + x) = r.getSample(x, y, 0); x += 1 }
-      y += 1
-    }
-    (w.toLong, h.toLong, px)
+    (img.getWidth.toLong, img.getHeight.toLong, samples(img))
   }
 
   /** PNG → (width, height, pixel-sum mod P) via the decoded raster
     * ONLY — the production decode contract. */
   def decodePng(png: Array[Byte]): (Long, Long, Long) = {
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
-    val r = img.getRaster
-    var sum = 0L
-    var y = 0
-    while (y < img.getHeight) {
-      var x = 0
-      while (x < img.getWidth) { sum = (sum + r.getSample(x, y, 0)) % P; x += 1 }
-      y += 1
-    }
-    (img.getWidth.toLong, img.getHeight.toLong, sum)
+    (img.getWidth.toLong, img.getHeight.toLong, sampleSum(img))
   }
 
   /** PNG → decoded BufferedImage → 2×2 AREA-AVERAGE downsample (the
@@ -877,16 +858,7 @@ object MultimodalKernels {
     * ImageWriter is stateful and NOT thread-safe across the 32 decode
     * tasks. */
   def encodeJpeg(bytes: Array[Byte]): Array[Byte] = {
-    val w = 32
-    val h = math.max(1, (bytes.length + w - 1) / w)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var i = 0
-    while (i < bytes.length) {
-      raster.setSample(i % w, i / w, 0, bytes(i) & 0xff)
-      i += 1
-    }
+    val img = gray32(bytes, java.awt.image.BufferedImage.TYPE_BYTE_GRAY, 1)
     val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
     val param = writer.getDefaultWriteParam
     param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
@@ -910,17 +882,7 @@ object MultimodalKernels {
     // ImageIO.read signals an undecodable payload with null, not an
     // exception — turn it into a diagnosable error, not a bare NPE
     require(img != null, s"payload (${jpeg.length} bytes) is not a decodable JPEG")
-    val r = img.getRaster
-    val w = img.getWidth
-    val h = img.getHeight
-    val px = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { px(y * w + x) = r.getSample(x, y, 0); x += 1 }
-      y += 1
-    }
-    (w.toLong, h.toLong, px)
+    (img.getWidth.toLong, img.getHeight.toLong, samples(img))
   }
 
   /** bytes → a real MJPEG-style stream: the payload chunked into
@@ -1062,18 +1024,10 @@ object MultimodalKernels {
   }
 
   /** GIF → (frame count, sampled count, height sum, pixel sum mod P
-    * over every 2nd frame) via the JDK reader's multi-image API ONLY.
-    * Pixels are read through `getRGB & 0xff`, NOT `raster.getSample`:
-    * the decoded frames are palette-INDEXED images, and the writer owes
-    * no particular palette order — the resolved color is the contract,
-    * the index is not. */
-  def decodeGifFrames(gif: Array[Byte]): (Long, Long, Long, Long) = {
-    val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(gif))
-    try {
-      reader.setInput(iis)
-      val n = reader.getNumImages(true)
+    * over every 2nd frame) via the JDK reader's multi-image API ONLY
+    * (pixels via [[grayRgbSum]]). */
+  def decodeGifFrames(gif: Array[Byte]): (Long, Long, Long, Long) =
+    readGif(gif) { (reader, n) =>
       var hSum = 0L
       var pxSum = 0L
       var sampled = 0L
@@ -1083,61 +1037,21 @@ object MultimodalKernels {
           val img = reader.read(k)
           hSum += img.getHeight
           sampled += 1
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              pxSum = (pxSum + (img.getRGB(x, y) & 0xff)) % P
-              x += 1
-            }
-            y += 1
-          }
+          pxSum = (pxSum + grayRgbSum(img)) % P
         }
         k += 1
       }
       (n.toLong, sampled, hSum, pxSum)
-    } finally {
-      reader.dispose()
-      iis.close()
     }
-  }
 
   /** GIF → per-frame pixel sums over ALL frames (no sampling, no
     * modulus — a frame is ≤ 128 pixels of ≤ 255, so the sum fits a
     * Long with ten orders of magnitude to spare). Same reader
     * discipline as [[decodeGifFrames]]: multi-image API, pixels via
-    * `getRGB & 0xff` because palette order is not a contract. Feeds
+    * [[grayRgbSum]]. Feeds
     * m11's temporal frame-difference analysis. */
-  def decodeGifFrameSums(gif: Array[Byte]): Array[Long] = {
-    val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(gif))
-    try {
-      reader.setInput(iis)
-      val n = reader.getNumImages(true)
-      val sums = new Array[Long](n)
-      var k = 0
-      while (k < n) {
-        val img = reader.read(k)
-        var s = 0L
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            s += (img.getRGB(x, y) & 0xff)
-            x += 1
-          }
-          y += 1
-        }
-        sums(k) = s
-        k += 1
-      }
-      sums
-    } finally {
-      reader.dispose()
-      iis.close()
-    }
-  }
+  def decodeGifFrameSums(gif: Array[Byte]): Array[Long] =
+    readGif(gif)((reader, n) => Array.tabulate(n)(k => grayRgbSum(reader.read(k))))
 
   /** WAV → per-window signal energy over ALL 256-sample windows:
     * Σ (s−128)² per window (8-bit PCM is unsigned with midpoint 128 =
@@ -1168,22 +1082,28 @@ object MultimodalKernels {
     * height, WAV frames, GIF frame count), the check the lossless
     * kinds' decoded sample sum (−1 for the lossy JPEG, whose gate is
     * geometry + the m7 tolerance). */
-  def routeDecode(c: Array[Byte]): (String, Long, Long) = {
-    def b(i: Int) = c(i) & 0xff
-    if (c.length >= 8 && b(0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G') {
-      val (_, h, sum) = decodePng(c); ("png", h, sum)
-    } else if (c.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F'
-        && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E') {
-      val (_, _, frames, sum) = decodeWav(c); ("wav", frames, sum)
-    } else if (c.length >= 2 && b(0) == 0xff && b(1) == 0xd8) {
-      val (_, h, _) = decodeJpeg(c); ("jpeg", h, -1L)
-    } else if (c.length >= 4 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8') {
-      val sums = decodeGifFrameSums(c); ("gif", sums.length.toLong, sums.sum)
-    } else ("unknown", -1L, -1L)
+  def routeDecode(c: Array[Byte]): (String, Long, Long) = sniff(c) match {
+    case "png" => val (_, h, sum) = decodePng(c); ("png", h, sum)
+    case "wav" => val (_, _, frames, sum) = decodeWav(c); ("wav", frames, sum)
+    case "jpeg" => val (_, h, _) = decodeJpeg(c); ("jpeg", h, -1L)
+    case "gif" => val sums = decodeGifFrameSums(c); ("gif", sums.length.toLong, sums.sum)
+    case _ => ("unknown", -1L, -1L)
   }
 
-  /** m1's generic DESCRIBE: sniff the container (the [[routeDecode]]
-    * magic table) and decode it to the media-metadata record a lake
+  /** The container kind from its magic bytes alone: png, wav, jpeg,
+    * gif or unknown. */
+  private def sniff(c: Array[Byte]): String = {
+    def b(i: Int) = c(i) & 0xff
+    if (c.length >= 8 && b(0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G') "png"
+    else if (c.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F'
+        && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E') "wav"
+    else if (c.length >= 2 && b(0) == 0xff && b(1) == 0xd8) "jpeg"
+    else if (c.length >= 4 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8') "gif"
+    else "unknown"
+  }
+
+  /** m1's generic DESCRIBE: sniff the container ([[sniff]]'s magic
+    * table) and decode it to the media-metadata record a lake
     * catalog stores — (kind, width, height, channels, px_check).
     * Every field comes from the DECODED object only (raster dims and
     * band count, parsed audio frames/channels, the reader's frame
@@ -1196,41 +1116,20 @@ object MultimodalKernels {
     * px_check is the lossless kinds' decoded sample sum mod P and −1
     * for the lossy JPEG (whose signal gate is m7's tolerance line —
     * geometry still checks exactly). */
-  def describeMedia(c: Array[Byte]): (String, Long, Long, Long, Long) = {
-    def b(i: Int) = c(i) & 0xff
-    def rasterDescribe(kind: String): (String, Long, Long, Long, Long) = {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(c))
-      require(img != null, s"payload (${c.length} bytes) is not a decodable $kind")
-      val r = img.getRaster
-      var sum = 0L
-      if (kind != "jpeg") {
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) { sum = (sum + r.getSample(x, y, 0)) % P; x += 1 }
-          y += 1
-        }
-      } else sum = -1L
-      (kind, img.getWidth.toLong, img.getHeight.toLong, r.getNumBands.toLong, sum)
-    }
-    if (c.length >= 8 && b(0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G')
-      rasterDescribe("png")
-    else if (c.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F'
-        && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E') {
-      val (_, ch, frames, sum) = decodeWav(c)
-      ("wav", frames, 1L, ch, sum)
-    } else if (c.length >= 2 && b(0) == 0xff && b(1) == 0xd8)
-      rasterDescribe("jpeg")
-    else if (c.length >= 4 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8') {
+  def describeMedia(c: Array[Byte]): (String, Long, Long, Long, Long) =
+    sniff(c) match {
+      case kind @ ("png" | "jpeg") =>
+        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(c))
+        require(img != null, s"payload (${c.length} bytes) is not a decodable $kind")
+        val sum = if (kind != "jpeg") sampleSum(img) else -1L
+        (kind, img.getWidth.toLong, img.getHeight.toLong, img.getRaster.getNumBands.toLong, sum)
+      case "wav" =>
+        val (_, ch, frames, sum) = decodeWav(c)
+        ("wav", frames, 1L, ch, sum)
       // frame walk through the multi-image reader: width from the
       // first frame, height = Σ frame heights, pixels via getRGB
-      // (palette order is not a contract — see decodeGifFrames)
-      val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(c))
-      try {
-        reader.setInput(iis)
-        val n = reader.getNumImages(true)
+      // (palette order is not a contract — see grayRgbSum)
+      case "gif" => readGif(c) { (reader, n) =>
         var w = 0L
         var hSum = 0L
         var pxSum = 0L
@@ -1239,24 +1138,13 @@ object MultimodalKernels {
           val img = reader.read(k)
           if (k == 0) w = img.getWidth.toLong
           hSum += img.getHeight
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              pxSum = (pxSum + (img.getRGB(x, y) & 0xff)) % P
-              x += 1
-            }
-            y += 1
-          }
+          pxSum = (pxSum + grayRgbSum(img)) % P
           k += 1
         }
         ("gif", w, hSum, 1L, pxSum)
-      } finally {
-        reader.dispose()
-        iis.close()
       }
-    } else ("unknown", -1L, -1L, -1L, -1L)
-  }
+      case _ => ("unknown", -1L, -1L, -1L, -1L)
+    }
 
   /** The JDK's RIFF/WAVE codec, resolved ONCE per JVM.
     * `AudioSystem.write`/`getAudioInputStream` route every call through
@@ -1317,16 +1205,7 @@ object MultimodalKernels {
     * here are all 8-bit paths; a stride or byte-order bug in 16-bit
     * little/big-endian sample handling is invisible to them. */
   def encodeTiff16(bytes: Array[Byte]): Array[Byte] = {
-    val w = 32
-    val h = math.max(1, (bytes.length + w - 1) / w)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_USHORT_GRAY)
-    val raster = img.getRaster
-    var i = 0
-    while (i < bytes.length) {
-      raster.setSample(i % w, i / w, 0, (bytes(i) & 0xff) * 257)
-      i += 1
-    }
+    val img = gray32(bytes, java.awt.image.BufferedImage.TYPE_USHORT_GRAY, 257)
     val baos = new java.io.ByteArrayOutputStream()
     require(javax.imageio.ImageIO.write(img, "tiff", baos),
       "JDK TIFF writer unavailable")
@@ -1339,15 +1218,7 @@ object MultimodalKernels {
   def decodeTiff16(tiff: Array[Byte]): (Long, Long, Long, Long) = {
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(tiff))
     require(img != null, "JDK TIFF reader returned null")
-    val r = img.getRaster
-    val depth = r.getSampleModel.getSampleSize(0).toLong
-    var sum = 0L
-    var y = 0
-    while (y < img.getHeight) {
-      var x = 0
-      while (x < img.getWidth) { sum = (sum + r.getSample(x, y, 0)) % P; x += 1 }
-      y += 1
-    }
-    (img.getWidth.toLong, img.getHeight.toLong, depth, sum)
+    val depth = img.getRaster.getSampleModel.getSampleSize(0).toLong
+    (img.getWidth.toLong, img.getHeight.toLong, depth, sampleSum(img))
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.functions.GraftFunctions
@@ -16,6 +17,47 @@ import graft.functions.TextPrimitives._
 object PipelineQueries {
 
   private val qualityThreshold = "0.5"
+
+  /** t7's repetition gate over (n_tokens, rs = repeat_stats(w)): top
+    * word share and duplicate-bigram share both at most 0.2 (p3/p4). */
+  private val repGateSpark =
+    """n_tokens >= 2
+                AND round(rs[0] / CAST(n_tokens AS DOUBLE), 6) <= 0.2
+                AND round(1.0 - rs[1] / CAST(n_tokens - 1 AS DOUBLE), 6) <= 0.2"""
+
+  /** The same gate in DuckDB: `bg` (token and distinct-bigram counts)
+    * and `topw` (top word count) over `toks`, then the gate on b/t. */
+  private val repCountsDuck =
+    """bg AS (SELECT doc_id, CAST(length(w) AS BIGINT) AS n_tokens,
+                 CAST(length(list_distinct(list_transform(range(1, length(w)),
+                   i -> w[i] || ' ' || w[i + 1]))) AS BIGINT) AS n_distinct_bg
+               FROM toks WHERE length(w) >= 2),
+        topw AS (SELECT doc_id, MAX(c) AS top_cnt FROM (
+                   SELECT doc_id, COUNT(*) AS c
+                   FROM (SELECT doc_id, unnest(w) AS wd FROM toks)
+                   GROUP BY doc_id, wd)
+                 GROUP BY doc_id)"""
+  private val repGateDuck =
+    """round(t.top_cnt / CAST(b.n_tokens AS DOUBLE), 6) <= 0.2
+                  AND round(1.0 - b.n_distinct_bg / CAST(b.n_tokens - 1 AS DOUBLE), 6) <= 0.2"""
+
+  /** p6/p8's manifest rows (kind, key, n1, n2): term (df, cf) rows of
+    * a (term, df, cf) aggregate, per-cell vector counts under the
+    * trained quantizer `cent`, and the corpus (N, Σdl) row. */
+  private def termRows(terms: DataFrame): DataFrame =
+    terms.select(lit("term").as("kind"), col("term").as("key"),
+      col("df").as("n1"), col("cf").as("n2"))
+
+  private def cellRows(vectors: DataFrame, cent: Seq[(Long, Seq[Double])]): DataFrame =
+    AnnQueries.assignCells(vectors.select(col("vec_id"), col("embedding")), cent)
+      .groupBy("clabel").agg(count(lit(1)).as("n1"))
+      .select(lit("cluster").as("kind"), col("clabel").cast("string").as("key"),
+        col("n1"), lit(0L).as("n2"))
+
+  private def corpusRow(docs: DataFrame): DataFrame =
+    docs.select(size(split(col("text"), " ")).cast("long").as("dl"))
+      .agg(count(lit(1)).as("n1"), sum("dl").as("n2"))
+      .select(lit("corpus").as("kind"), lit("all").as("key"), col("n1"), col("n2"))
 
   def p1TrainingPipeline(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
@@ -91,9 +133,7 @@ object PipelineQueries {
                 FROM documents
                 LATERAL VIEW explode(array(split(text, ' '))) tw AS w
                 LATERAL VIEW explode(array(repeat_stats(w))) tr AS rs)
-              WHERE n_tokens >= 2
-                AND round(rs[0] / CAST(n_tokens AS DOUBLE), 6) <= 0.2
-                AND round(1.0 - rs[1] / CAST(n_tokens - 1 AS DOUBLE), 6) <= 0.2),
+              WHERE $repGateSpark),
       rel AS (SELECT s.doc_id, s.stratum FROM sampled s
               JOIN survivors USING (doc_id) JOIN rep USING (doc_id))
       SELECT d.source, r.stratum, COUNT(*) AS n_docs,
@@ -122,9 +162,7 @@ object PipelineQueries {
                 SELECT doc_id, CAST(size(w) AS BIGINT) AS n_tokens, rs
                 FROM toks
                 LATERAL VIEW explode(array(repeat_stats(w))) tr AS rs)
-              WHERE n_tokens >= 2
-                AND round(rs[0] / CAST(n_tokens AS DOUBLE), 6) <= 0.2
-                AND round(1.0 - rs[1] / CAST(n_tokens - 1 AS DOUBLE), 6) <= 0.2),
+              WHERE $repGateSpark),
       eval_g AS (SELECT DISTINCT explode(shingle_hashes(w)) AS g FROM toks
                  WHERE size(w) >= 3 AND doc_id % 97 = 0),
       contaminated AS (SELECT /*+ BROADCAST(e) */ DISTINCT c.doc_id
@@ -134,13 +172,8 @@ object PipelineQueries {
       clean AS (SELECT r.doc_id, r.n_tokens FROM rep r
                 ANTI JOIN contaminated c ON r.doc_id = c.doc_id
                 WHERE r.doc_id % 97 <> 0)
-      SELECT shard, doc_id, n_tokens,
-        CAST(coalesce(sum(n_tokens) OVER (
-               PARTITION BY shard ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             DIV 2048 AS BIGINT) AS pack_id
-      FROM (SELECT doc_id, n_tokens,
-              CAST(${FunctionQueries.kmvHashSpark("doc_id")} % 8 AS BIGINT) AS shard
+      SELECT shard, doc_id, n_tokens, ${LlmQueries.packIdSpark("n_tokens")}
+      FROM (SELECT doc_id, n_tokens, ${LlmQueries.shardSpark("doc_id")}
             FROM clean)
       ORDER BY shard, doc_id""")
   }
@@ -162,7 +195,6 @@ object PipelineQueries {
     * column is read once and never shuffles — every join in the
     * composition carries ids. */
   def p5RefreshPacks(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
     GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     val scored = spark.sql(s"""
@@ -177,14 +209,10 @@ object PipelineQueries {
       .select(col("doc_id"))
       .createOrReplaceTempView("p5_kept")
     spark.sql(s"""
-      SELECT shard, doc_id, n_tokens,
-        CAST(coalesce(sum(n_tokens) OVER (
-               PARTITION BY shard ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             DIV 2048 AS BIGINT) AS pack_id
+      SELECT shard, doc_id, n_tokens, ${LlmQueries.packIdSpark("n_tokens")}
       FROM (SELECT d.doc_id,
               subword_count(lower(d.text)) AS n_tokens,
-              CAST(${FunctionQueries.kmvHashSpark("d.doc_id")} % 8 AS BIGINT) AS shard
+              ${LlmQueries.shardSpark("d.doc_id")}
             FROM documents d JOIN p5_kept USING (doc_id))
       ORDER BY shard, doc_id""")
   }
@@ -211,32 +239,14 @@ object PipelineQueries {
     * is one corpus scan + one embedding scan — the index build IS the
     * bottleneck-shaped job the posture arguments exist for. */
   def p6HybridIndex(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val docs = Tables.loadSpread(spark, dir, "documents")
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val topTerms = tf.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      .orderBy(col("df").desc, col("term")).limit(20)
-      .select(lit("term").as("kind"), col("term").as("key"),
-        col("df").as("n1"), col("cf").as("n2"))
+    val topTerms = termRows(termAgg(docs).orderBy(col("df").desc, col("term")).limit(20))
     val e = Tables.load(spark, dir, "embeddings")
     // the manifest describes the SHIPPED index: cell sizes under the
     // trained quantizer s4/s15 actually serve from (round-9; the
     // label-seed cells were the unfitted config s15 flagged)
-    val cent = AnnQueries.centroidSeq(spark, dir)
-    val clusters = AnnQueries
-      .assignCells(e.select(col("vec_id"), col("embedding")), cent)
-      .groupBy("clabel").agg(count(lit(1)).as("n1"))
-      .select(lit("cluster").as("kind"), col("clabel").cast("string").as("key"),
-        col("n1"), lit(0L).as("n2"))
-    val corpus = docs
-      .select(size(split(col("text"), " ")).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n1"), sum("dl").as("n2"))
-      .select(lit("corpus").as("kind"), lit("all").as("key"), col("n1"), col("n2"))
-    topTerms.unionByName(clusters).unionByName(corpus)
+    val clusters = cellRows(e, AnnQueries.centroidSeq(spark, dir))
+    topTerms.unionByName(clusters).unionByName(corpusRow(docs))
       .orderBy("kind", "key")
   }
 
@@ -259,7 +269,6 @@ object PipelineQueries {
     * the SAME shared texts: the l19 twin's m0–m7 chain, the l22
     * twin's apply-count select, the l18 twin's window arithmetic. */
   def p7TokenizerRelease(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val merges = LlmQueries.learnedMerges(spark, dir).map { case (_, l, r, _) => (l, r) }
     Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"),
@@ -295,25 +304,14 @@ object PipelineQueries {
     * the operator exists for (round 9 shipped both arms recomputing,
     * VERDICT r9 "what's wrong" #1). */
   def p8IndexRefresh(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val docs = Tables.loadSpread(spark, dir, "documents")
     val deltaDocs = docs.filter(col("doc_id") % 5 === 4)
-    val deltaTerms = p8TermAgg(deltaDocs)
-      .select(lit("term").as("kind"), col("term").as("key"),
-        col("df").as("n1"), col("cf").as("n2"))
+    val deltaTerms = termRows(termAgg(deltaDocs))
     val e = Tables.load(spark, dir, "embeddings")
     // a refresh assigns the delta to the EXISTING quantizer — the
     // session-memoized trained centroids; it never retrains
-    val cent = AnnQueries.centroidSeq(spark, dir)
-    val deltaCells = AnnQueries.assignCells(
-        e.filter(col("vec_id") % 5 === 4).select(col("vec_id"), col("embedding")), cent)
-      .groupBy("clabel").agg(count(lit(1)).as("n1"))
-      .select(lit("cluster").as("kind"), col("clabel").cast("string").as("key"),
-        col("n1"), lit(0L).as("n2"))
-    val deltaCorpus = deltaDocs
-      .select(size(split(col("text"), " ")).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n1"), sum("dl").as("n2"))
-      .select(lit("corpus").as("kind"), lit("all").as("key"), col("n1"), col("n2"))
+    val deltaCells = cellRows(e.filter(col("vec_id") % 5 === 4), AnnQueries.centroidSeq(spark, dir))
+    val deltaCorpus = corpusRow(deltaDocs)
     // per-key integer sums over (stored base ∪ delta) — the mergeable
     // algebra; the head cut runs AFTER the merge (a head cut is not
     // mergeable: the maintained state is the FULL term aggregate, the
@@ -328,11 +326,10 @@ object PipelineQueries {
       .orderBy("kind", "key")
   }
 
-  /** The full (doc, term) → (df, cf) aggregate — p8's term algebra,
-    * shared by the base build and the delta arm so the two sides
-    * cannot diverge. */
-  private def p8TermAgg(side: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
+  /** The full (doc, term) → (df, cf) aggregate — p6's term rows and
+    * p8's term algebra, shared by p8's base build and delta arm so the
+    * two sides cannot diverge. */
+  private def termAgg(side: DataFrame): DataFrame = {
     side.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -365,7 +362,6 @@ object PipelineQueries {
     * embeds trained-quantizer cell counts, so a changed quantizer knob
     * must change the KEY — the `v1` tag alone relied on a hand bump). */
   private def p8BaseManifest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     // trained quantizer materialized BEFORE the store's build lock —
     // the trainLock-before-buildLock order (ADVICE r11: a thunk-internal
     // trainedCentroids call inverts the order kmeansState establishes
@@ -377,20 +373,9 @@ object PipelineQueries {
     graft.core.ArtifactStore.getOrBuild(spark, "p8_base_v1", fp, dir, p8BaseBuilds) { _ =>
       val docs = Tables.loadSpread(spark, dir, "documents")
         .filter(col("doc_id") % 5 =!= 4)
-      val terms = p8TermAgg(docs)
-        .select(lit("term").as("kind"), col("term").as("key"),
-          col("df").as("n1"), col("cf").as("n2"))
       val e = Tables.load(spark, dir, "embeddings")
-      val cells = AnnQueries.assignCells(
-          e.filter(col("vec_id") % 5 =!= 4).select(col("vec_id"), col("embedding")), cent)
-        .groupBy("clabel").agg(count(lit(1)).as("n1"))
-        .select(lit("cluster").as("kind"), col("clabel").cast("string").as("key"),
-          col("n1"), lit(0L).as("n2"))
-      val corpus = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(count(lit(1)).as("n1"), sum("dl").as("n2"))
-        .select(lit("corpus").as("kind"), lit("all").as("key"), col("n1"), col("n2"))
-      terms.unionByName(cells).unionByName(corpus).coalesce(1)
+      val cells = cellRows(e.filter(col("vec_id") % 5 =!= 4), cent)
+      termRows(termAgg(docs)).unionByName(cells).unionByName(corpusRow(docs)).coalesce(1)
     }
   }
 
@@ -476,18 +461,9 @@ object PipelineQueries {
         s"""WITH ${LlmQueries.curriculumCtes(sparkDialect = false)},
         survivors AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text),
         toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        bg AS (SELECT doc_id, CAST(length(w) AS BIGINT) AS n_tokens,
-                 CAST(length(list_distinct(list_transform(range(1, length(w)),
-                   i -> w[i] || ' ' || w[i + 1]))) AS BIGINT) AS n_distinct_bg
-               FROM toks WHERE length(w) >= 2),
-        topw AS (SELECT doc_id, MAX(c) AS top_cnt FROM (
-                   SELECT doc_id, COUNT(*) AS c
-                   FROM (SELECT doc_id, unnest(w) AS wd FROM toks)
-                   GROUP BY doc_id, wd)
-                 GROUP BY doc_id),
+        $repCountsDuck,
         rep AS (SELECT b.doc_id FROM bg b JOIN topw t USING (doc_id)
-                WHERE round(t.top_cnt / CAST(b.n_tokens AS DOUBLE), 6) <= 0.2
-                  AND round(1.0 - b.n_distinct_bg / CAST(b.n_tokens - 1 AS DOUBLE), 6) <= 0.2),
+                WHERE $repGateDuck),
         rel AS (SELECT s.doc_id, s.stratum FROM sampled s
                 JOIN survivors USING (doc_id) JOIN rep USING (doc_id))
         SELECT d.source, r.stratum, COUNT(*) AS n_docs,
@@ -503,18 +479,9 @@ object PipelineQueries {
         s"""WITH survivors AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text),
         d AS (SELECT documents.* FROM documents JOIN survivors USING (doc_id)),
         toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM d),
-        bg AS (SELECT doc_id, CAST(length(w) AS BIGINT) AS n_tokens,
-                 CAST(length(list_distinct(list_transform(range(1, length(w)),
-                   i -> w[i] || ' ' || w[i + 1]))) AS BIGINT) AS n_distinct_bg
-               FROM toks WHERE length(w) >= 2),
-        topw AS (SELECT doc_id, MAX(c) AS top_cnt FROM (
-                   SELECT doc_id, COUNT(*) AS c
-                   FROM (SELECT doc_id, unnest(w) AS wd FROM toks)
-                   GROUP BY doc_id, wd)
-                 GROUP BY doc_id),
+        $repCountsDuck,
         rep AS (SELECT b.doc_id, b.n_tokens FROM bg b JOIN topw t USING (doc_id)
-                WHERE round(t.top_cnt / CAST(b.n_tokens AS DOUBLE), 6) <= 0.2
-                  AND round(1.0 - b.n_distinct_bg / CAST(b.n_tokens - 1 AS DOUBLE), 6) <= 0.2),
+                WHERE $repGateDuck),
         sh AS (SELECT doc_id, ${graft.functions.TextPrimitives.shinglesDuck("w")} AS s
                FROM toks WHERE length(w) >= 3),
         ids AS (SELECT doc_id, list_distinct(list_transform(s,
@@ -527,11 +494,8 @@ object PipelineQueries {
         clean AS (SELECT r.doc_id, r.n_tokens FROM rep r
                   ANTI JOIN contaminated c ON r.doc_id = c.doc_id
                   WHERE r.doc_id % 97 <> 0)
-        SELECT shard, doc_id, n_tokens,
-          CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS BIGINT) AS pack_id
-        FROM (SELECT doc_id, n_tokens,
-                CAST((${FunctionQueries.kmvHashDuck("doc_id")}) % 8 AS BIGINT) AS shard
+        SELECT shard, doc_id, n_tokens, ${LlmQueries.packIdDuck("n_tokens")}
+        FROM (SELECT doc_id, n_tokens, ${LlmQueries.shardDuck("doc_id")}
               FROM clean)
         ORDER BY shard, doc_id""",
       // every round-8 stage restated from its own oracle spelling:
@@ -550,12 +514,9 @@ object PipelineQueries {
               ORDER BY s.score DESC, s.doc_id) AS rn
           FROM scored s JOIN survivors USING (doc_id)),
         kept AS (SELECT doc_id FROM ranked WHERE rn <= 15),
-        t AS (SELECT w.doc_id, w.n_subword AS n_tokens,
-            CAST((${FunctionQueries.kmvHashDuck("w.doc_id")}) % 8 AS BIGINT) AS shard
+        t AS (SELECT w.doc_id, w.n_subword AS n_tokens, ${LlmQueries.shardDuck("w.doc_id")}
           FROM swc w JOIN kept USING (doc_id))
-        SELECT shard, doc_id, n_tokens,
-          CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2048 AS BIGINT) AS pack_id
+        SELECT shard, doc_id, n_tokens, ${LlmQueries.packIdDuck("n_tokens")}
         FROM t ORDER BY shard, doc_id"""),
     )
   }

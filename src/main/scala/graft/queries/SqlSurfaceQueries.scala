@@ -765,6 +765,15 @@ object SqlSurfaceQueries {
     "x44_listagg"       -> (x44Listagg _),
   )
 
+  /** x61/x69's snapshot of one changelog half (event_id % 2 =
+    * `parity`): each user's latest (event_type, value), as CTE `name`. */
+  private def latestOfHalfDuck(name: String, parity: Int): String =
+    s"""$name AS (SELECT user_id, event_type AS t, round(value, 4) AS v
+            FROM (SELECT *, row_number() OVER
+                    (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+                  FROM events WHERE event_id % 2 = $parity)
+            WHERE rn = 1)"""
+
   val oracleSql: Map[String, String] = Map(
     // x73's oracle is the from-scratch JOIN — a wrong delta
     // decomposition (double-counted ΔA⋈ΔB, a dropped term, a split
@@ -814,16 +823,8 @@ object SqlSurfaceQueries {
     // x61's row_number snapshot spelling per half, the same merge
     // rule: change row wins, base survives, provenance tagged
     "x69_upsert_apply" ->
-      """WITH base AS (SELECT user_id, event_type AS t, round(value, 4) AS v
-                 FROM (SELECT *, row_number() OVER
-                         (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-                       FROM events WHERE event_id % 2 = 0)
-                 WHERE rn = 1),
-      chg AS (SELECT user_id, event_type AS t, round(value, 4) AS v
-            FROM (SELECT *, row_number() OVER
-                    (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-                  FROM events WHERE event_id % 2 = 1)
-            WHERE rn = 1)
+      s"""WITH ${latestOfHalfDuck("base", 0)},
+      ${latestOfHalfDuck("chg", 1)}
       SELECT coalesce(c.user_id, b.user_id) AS user_id,
              coalesce(c.t, b.t) AS t,
              coalesce(c.v, b.v) AS v,
@@ -835,16 +836,8 @@ object SqlSurfaceQueries {
     // snapshots restated through the row_number spelling (the x46
     // oracle pattern) per changelog half; same diff classification
     "x61_snapshot_diff" ->
-      """WITH a AS (SELECT user_id, event_type AS t, round(value, 4) AS v
-                 FROM (SELECT *, row_number() OVER
-                         (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-                       FROM events WHERE event_id % 2 = 0)
-                 WHERE rn = 1),
-      b AS (SELECT user_id, event_type AS t, round(value, 4) AS v
-            FROM (SELECT *, row_number() OVER
-                    (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-                  FROM events WHERE event_id % 2 = 1)
-            WHERE rn = 1)
+      s"""WITH ${latestOfHalfDuck("a", 0)},
+      ${latestOfHalfDuck("b", 1)}
       SELECT user_id, diff, type_old, type_new FROM (
         SELECT coalesce(a.user_id, b.user_id) AS user_id,
                CASE WHEN a.user_id IS NULL THEN 'added'

@@ -132,15 +132,20 @@ object StreamingQueries {
     * immediately, nothing waits on a window close. */
   private def dedupFeedFor(spark: SparkSession, dir: String): String =
     feed(spark, dir, "x29", "events", "v2") { out =>
-      val events = Tables.load(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("event_type"))
-      val onTime = events.filter(col("event_id") % 4 =!= 0)
-      val w = writeOne(out) _
-      val t0 = 1600000000000L
-      w(onTime, "a", t0)
-      w(events.filter(lit(false)), "b", t0 + 60000L)
-      w(onTime.filter(col("event_id") % 3 === 0), "c", t0 + 120000L)
+      writeRedeliveries(out, Tables.load(spark, dir, "events")
+        .select(col("event_id"), col("ts"), col("event_type")))
     }
+
+  /** x29/x51's batches: the on-time rows (event_id % 4 ≠ 0), an empty
+    * bridge, then a third of the on-time rows re-sent verbatim. */
+  private def writeRedeliveries(out: java.io.File, events: DataFrame): Unit = {
+    val onTime = events.filter(col("event_id") % 4 =!= 0)
+    val w = writeOne(out) _
+    val t0 = 1600000000000L
+    w(onTime, "a", t0)
+    w(events.filter(lit(false)), "b", t0 + 60000L)
+    w(onTime.filter(col("event_id") % 3 === 0), "c", t0 + 120000L)
+  }
 
   /** x29 — streaming DEDUPLICATION with bounded state:
     * `dropDuplicatesWithinWatermark(event_id)` under a 30 s watermark.
@@ -196,14 +201,20 @@ object StreamingQueries {
     * emitted, and the batch inner join is an exact oracle. */
   private[graft] def joinFeedFor(spark: SparkSession, dir: String): String =
     feed(spark, dir, "x31", "events", "v2") { out =>
-      val (vDir, pDir) = viewsAndPurchases(out)
-      val events = Tables.load(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val t0 = 1600000000000L
-      writeOne(vDir)(events.filter(col("event_type") === "view"), "a", t0)
-      writeOne(pDir)(events.filter(lit(false)), "e", t0)
-      writeOne(pDir)(events.filter(col("event_type") === "purchase"), "b", t0 + 60000L)
+      writeViewsThenPurchases(out, Tables.load(spark, dir, "events")
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type")))
     }
+
+  /** A join feed's two file-source dirs under `out`: the views land
+    * first (with an empty purchases batch), the purchases one trigger
+    * later. */
+  private def writeViewsThenPurchases(out: java.io.File, events: DataFrame): Unit = {
+    val (vDir, pDir) = viewsAndPurchases(out)
+    val t0 = 1600000000000L
+    writeOne(vDir)(events.filter(col("event_type") === "view"), "a", t0)
+    writeOne(pDir)(events.filter(lit(false)), "e", t0)
+    writeOne(pDir)(events.filter(col("event_type") === "purchase"), "b", t0 + 60000L)
+  }
 
   /** The two file-source dirs of a join feed, created under `out`. */
   private def viewsAndPurchases(out: java.io.File): (java.io.File, java.io.File) = {
@@ -228,7 +239,6 @@ object StreamingQueries {
     * with rows/s through the FOUR join state stores. */
   private[graft] def joinThroughputFeedFor(spark: SparkSession, dir: String): String =
     feed(spark, dir, "x31tp", "events", "v1") { out =>
-      val (vDir, pDir) = viewsAndPurchases(out)
       val base = Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       // the r·10⁹ replica offset assumes every base id fits below it; on
@@ -241,16 +251,12 @@ object StreamingQueries {
         s"joinThroughputFeedFor: max base id $maxId >= 1e9 — the per-replica " +
           "offset would collide across replicas and change the join graph; " +
           "widen the offset before trusting the throughput number")
-      val events = base
+      writeViewsThenPurchases(out, base
         .crossJoin(broadcast(spark.range(10).toDF("r")))
         .select((col("event_id") + col("r") * 1000000000L).as("event_id"),
           col("ts"),
           (col("user_id") + col("r") * 1000000000L).as("user_id"),
-          col("event_type"))
-      val t0 = 1600000000000L
-      writeOne(vDir)(events.filter(col("event_type") === "view"), "a", t0)
-      writeOne(pDir)(events.filter(lit(false)), "e", t0)
-      writeOne(pDir)(events.filter(col("event_type") === "purchase"), "b", t0 + 60000L)
+          col("event_type")))
     }
 
   /** x31 — STREAM-STREAM inner join, the canonical hard streaming
@@ -467,17 +473,11 @@ object StreamingQueries {
     * 4-batch demo feeds measure (VERDICT r5 task 6). */
   private[graft] def throughputFeedFor(spark: SparkSession, dir: String): String =
     feed(spark, dir, "x51", "events", "v1") { out =>
-      val events = Tables.load(spark, dir, "events")
+      writeRedeliveries(out, Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"))
         .crossJoin(broadcast(spark.range(10).toDF("r")))
         .select((col("event_id") + col("r") * 1000000000L).as("event_id"),
-          col("ts"), col("event_type"))
-      val onTime = events.filter(col("event_id") % 4 =!= 0)
-      val w = writeOne(out) _
-      val t0 = 1600000000000L
-      w(onTime, "a", t0)
-      w(events.filter(lit(false)), "b", t0 + 60000L)
-      w(onTime.filter(col("event_id") % 3 === 0), "c", t0 + 120000L)
+          col("ts"), col("event_type")))
     }
 
   /** x51 — streaming-dedup THROUGHPUT: x29's operator and watermark on

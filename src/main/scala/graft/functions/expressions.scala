@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -370,56 +370,6 @@ object SpanCut {
     }
     UTF8String.fromString(sb.toString)
   }
-}
-
-/** Morton (Z-order) key of two non-negative long columns: the low 16
-  * bits of each input, bit-interleaved (a's bits at even positions) —
-  * a space-filling-curve key whose SORT ORDER clusters rows that are
-  * close in BOTH dimensions, so a range/sort layout on the key gives
-  * multi-dimensional data skipping from one-dimensional file and
-  * row-group min/max statistics (the Delta/Iceberg OPTIMIZE ZORDER
-  * capability, as a plain deterministic expression). Inputs are
-  * clamped into [0, 2^16): out-of-range dimension values saturate
-  * rather than wrap — a saturated key still sorts adjacent to its
-  * neighbors, while wraparound would teleport it across the curve. */
-case class ZOrder2(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (left.dataType == LongType && right.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"zorder2 needs two bigint arguments, got ${left.dataType}, ${right.dataType}")
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    ZOrder2.interleave(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.ZOrder2.interleave($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ZOrder2 =
-    copy(left = newLeft, right = newRight)
-}
-
-object ZOrder2 {
-  /** Saturating 16-bit clamp + bit interleave (a even, b odd bits). */
-  def interleave(a: Long, b: Long): Long = {
-    val ca = math.min(math.max(a, 0L), 0xffffL)
-    val cb = math.min(math.max(b, 0L), 0xffffL)
-    var out = 0L
-    var i = 0
-    while (i < 16) {
-      out |= ((ca >> i) & 1L) << (2 * i)
-      out |= ((cb >> i) & 1L) << (2 * i + 1)
-      i += 1
-    }
-    out
-  }
-
-  def apply(a: Column, b: Column): Column =
-    GraftShims.column(ZOrder2(GraftShims.expression(a), GraftShims.expression(b)))
 }
 
 /** All 16 MinHash signatures `min over ids of (a_k*x + b_k) mod P` in a
@@ -1345,8 +1295,7 @@ object BpeApplyCount {
 }
 
 /** SQL registration so the spark.sql-built queries can call the codegen
-  * expressions by name. Idempotent; call before any spark.sql text that
-  * references them. */
+  * expressions by name. */
 object GraftFunctions {
   private def litInt(e: Expression, fn: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)  => v
@@ -1409,9 +1358,16 @@ object GraftFunctions {
     }
   }
 
+  /** Registers every function and installs
+    * [[graft.plans.ComputeOncePerRow]] on the session; idempotent.
+    * `SparkEntry.queries` calls it before every query it builds. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.keys.foreach(n => reg.createOrReplaceTempFunction(n, checkedBuilder(n), "scala_udf"))
+    builders.keys.filterNot(n => reg.functionExists(FunctionIdentifier(n)))
+      .foreach(n => reg.createOrReplaceTempFunction(n, checkedBuilder(n), "scala_udf"))
+    val rule = graft.plans.ComputeOncePerRow
+    if (!spark.experimental.extraOptimizations.contains(rule))
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
   }
 }
 

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Tables
-import graft.functions.GraftFunctions
 import graft.functions.TextPrimitives._
 
 /** Near-duplicate detection suite for the training-data pipeline:
@@ -164,7 +163,6 @@ object DedupQueries {
     * table reads it directly, so registration stays session-side even
     * when the pair manifests themselves are stored-artifact reads. */
   private[queries] def registerIds(spark: SparkSession, dir: String): Unit = {
-    GraftFunctions.register(spark)
     // deliberately NOT loadSpread: the ids table is persisted right
     // after the shingle kernel, and measured at sf0.1 the extra
     // round-robin shuffle + 32-partition cache materialization costs
@@ -428,7 +426,6 @@ object DedupQueries {
     * keep the never-all-pairs shape pinned on the plan that actually
     * mines. */
   private[graft] def containmentPairsPlan(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     // the mining WITH chain references ids four times (ex feeds df and
     // cand, plus both verify sides) — a SQL-WITH consumer, so a lazy
@@ -490,15 +487,9 @@ object DedupQueries {
     // spread the cache read for the block explode + self-join, and use
     // inline subqueries for the same cache-substitution reason as d3
     Tables.spread(spark, spark.table("ids")).createOrReplaceTempView("ids_spread")
-    // explode-barrier on the fingerprint: the join-key isnotnull
-    // constraint substituted a plain `simhash30(ids) AS sim` alias into
-    // a scan filter, re-running the kernel per row per side; with sim
-    // as generator output the inferred isnotnull stays above the
-    // Generate and reads the materialized value
     val blocks = s"""(SELECT doc_id, sim, explode(transform(sequence(0, 4), p ->
-                   named_struct('bi', p, 'bv', shiftright(sim, p * 6) & 63))) AS b
-                 FROM (SELECT doc_id, sim FROM ids_spread
-                       LATERAL VIEW explode(array(simhash30(ids))) ts AS sim))"""
+                   named_struct('bi', p, 'bv', (sim >> p * 6) & 63))) AS b
+                 FROM (SELECT doc_id, simhash30(ids) AS sim FROM ids_spread))"""
     spark.sql(s"""
       SELECT i AS doc_id_a, j AS doc_id_b,
              CAST(bit_count(sa ^ sb) AS BIGINT) AS ham
@@ -592,7 +583,6 @@ object DedupQueries {
     * variant-collapse case (which the generated corpus lacks) is
     * asserted in DedupClusterSpec. */
   def d15NormalizedExact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql("""
       SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies
@@ -682,7 +672,6 @@ object DedupQueries {
     * (amortized exactly like d1's persisted ids); intra-batch dedup
     * composes by running l1/d1 over the accepted set afterwards. */
   def d6IncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     // plain load, not loadSpread — the materialization barrier right
     // below is what parallelism would buy, and the single-task shingle
     // kernel measured cheaper than a spread's extra shuffle (d1's
@@ -743,7 +732,6 @@ object DedupQueries {
     * a span boilerplate. Docs under 5 tokens have no spans and are
     * excluded by both dialects. */
   def d9SpanDedup(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     // round 11: the duplicated positions come from the STORED mask
     // manifest ([[spanMask]]) — n_spans is a per-row expression on the
@@ -751,15 +739,10 @@ object DedupQueries {
     // per-doc mask-row count; the detection itself runs once per
     // corpus version, not once per counting view
     spanMask(spark, dir).createOrReplaceTempView("d11_mask")
-    // split behind a one-row explode barrier: the `size >= 5` gate
-    // otherwise re-tokenized every row a second time in the scan
-    // filter (no cross-conjunct CSE in Filter codegen)
     spark.sql("""
       WITH g AS (SELECT doc_id,
-                   CAST(size(gram_hashes(w, 5)) AS BIGINT) AS n_spans
-                 FROM documents
-                 LATERAL VIEW explode(array(split(text, ' '))) tw AS w
-                 WHERE size(w) >= 5),
+                   CAST(size(gram_hashes(split(text, ' '), 5)) AS BIGINT) AS n_spans
+                 FROM documents WHERE size(split(text, ' ')) >= 5),
       mc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup
              FROM d11_mask GROUP BY doc_id)
       SELECT g.doc_id, g.n_spans, coalesce(mc.n_dup, CAST(0 AS BIGINT)) AS n_dup
@@ -787,7 +770,6 @@ object DedupQueries {
     * implication in the output demonstrates row by row. */
   def d10BloomDedup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "events").createOrReplaceTempView("events")
     // coalesce BEFORE concatenation: concat_ws would silently drop a
     // NULL event_type (hashing a shorter string) where the oracle's ||
@@ -830,7 +812,6 @@ object DedupQueries {
     * The detection shuffles only (id, pos, hash) rows; text never
     * moves; all stored cells are longs. */
   private def spanMask(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val fp = graft.core.ArtifactStore.fingerprint(dir, Seq("documents.parquet"),
       Seq("d11mask=v1:gram=5"))
     graft.core.ArtifactStore.getOrBuild(spark, "d11_mask_v1", fp, dir, d11MaskBuilds) { _ =>
@@ -876,7 +857,6 @@ object DedupQueries {
     * column has one consistent definition. Oracle: the mask rule
     * restated over DuckDB's unnest + NOT EXISTS interval test. */
   def d12SpanCut(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     // the STORED mask manifest (round 11) — the cut job reads the
     // artifact instead of re-running the detection; the mask view's

@@ -159,10 +159,11 @@ object FunctionQueries {
   /** The KMV input hash, Spark dialect (`^` = xor). */
   private[graft] def kmvHashSpark(x: String): String = {
     val h1 = s"((48271 * $x + 11) % 1000000007)"
-    // shiftright(), not the `>>` operator: Spark 4.1's parser rejects
-    // `>>` anywhere after a LATERAL VIEW clause in the same statement
-    // (p3's explode barrier trips it); the function spells the
-    // identical ShiftRight expression
+    // shiftright(), not `>>`: Spark 4.1's lexer reads `>>` as two `>`
+    // once an array(/map(/struct( call appears earlier in the same
+    // statement (those keywords open a complex-type nesting level that
+    // only a `>` closes), and this fragment is spliced into statements
+    // it does not control
     s"(48271 * ($h1 ^ shiftright($h1, 16)) + 11) % 1000000007"
   }
 

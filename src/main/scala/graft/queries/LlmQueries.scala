@@ -181,18 +181,13 @@ object LlmQueries {
     * boolean. Docs under 3 tokens have no 3-grams and are clean by
     * definition on both engines. */
   def l9Decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     // shingle kernel INLINE in the explodes (round 18): with ids as a
     // projected column, InferFiltersFromGenerate + pushdown re-ran the
     // kernel twice more per row inside the scan filter (the s3/d3
     // disease); a non-trivial generator child skips the inference
-    // ...and split itself behind a one-row explode barrier: the
-    // pushed-down `size(w) >= 3` gate otherwise re-tokenized every row
-    // a second time in each consumer's scan filter
     spark.sql("""
-      WITH toks AS (SELECT doc_id, w FROM documents
-                    LATERAL VIEW explode(array(split(text, ' '))) tw AS w),
+      WITH toks AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
       eval_g AS (SELECT DISTINCT explode(shingle_hashes(w)) AS g FROM toks
                  WHERE size(w) >= 3 AND doc_id % 97 = 0),
       corpus_g AS (SELECT doc_id, explode(shingle_hashes(w)) AS g FROM toks
@@ -238,18 +233,12 @@ object LlmQueries {
     * sums with one division at the end, so the 6dp round is cosmetic,
     * not load-bearing. */
   def l15DataCard(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
-    // fp behind a one-row explode barrier: the d⋈fpc join-key
-    // constraint infers isnotnull(fp) and substitutes the poly_hash
-    // kernel into a scan filter on BOTH scans (2 kernel evals per row
-    // per side); as generator output the inferred isnotnull stays
-    // above the Generate and reads the materialized value
     spark.sql(s"""
       WITH d AS (SELECT doc_id, source, lang, n_chars,
-                   CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens, fp
-                 FROM documents
-                 LATERAL VIEW explode(array(${graft.functions.TextPrimitives.rollingHashSpark("text")})) tf AS fp),
+                   CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens,
+                   ${graft.functions.TextPrimitives.rollingHashSpark("text")} AS fp
+                 FROM documents),
       fpc AS (SELECT fp, COUNT(*) AS c FROM d GROUP BY fp)
       SELECT source,
         COUNT(*) AS n_docs,
@@ -284,16 +273,8 @@ object LlmQueries {
     * stratum)` — shared with p4's composed release pipeline. */
   private[queries] def curriculumCtes(sparkDialect: Boolean): String = {
     import graft.functions.TextPrimitives._
-    // Spark arm: split behind a one-row explode barrier — the
-    // pushed-down `n_tokens > 0` gate otherwise re-tokenizes every row
-    // a second time in the scan filter (no cross-conjunct CSE in
-    // Filter codegen). DuckDB materializes CTEs, so its arm keeps the
-    // plain spelling.
-    val w = if (sparkDialect) "w" else "string_split(text, ' ')"
+    val w = if (sparkDialect) "split(text, ' ')" else "string_split(text, ' ')"
     val len = if (sparkDialect) s"size($w)" else s"length($w)"
-    val from = if (sparkDialect)
-      "FROM documents LATERAL VIEW explode(array(split(text, ' '))) tw AS w"
-    else "FROM documents"
     val stop = if (sparkDialect) stopHitsSpark(w, stopwords("en"))
                else stopHitsDuck(w, stopwords("en"))
     val punct = if (sparkDialect)
@@ -310,7 +291,7 @@ object LlmQueries {
                 CAST($len AS BIGINT) AS n_tokens,
                 CAST($stop AS DOUBLE) AS stop_hits,
                 CAST($punct AS DOUBLE) AS punct
-              $from)
+              FROM documents)
         WHERE n_tokens > 0),
       h AS (SELECT CAST(floor(s * 50) AS BIGINT) AS b, COUNT(*) AS c
             FROM sc GROUP BY CAST(floor(s * 50) AS BIGINT)),
@@ -331,7 +312,6 @@ object LlmQueries {
   }
 
   def l16CurriculumSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"""
       WITH ${curriculumCtes(sparkDialect = true)}
@@ -403,7 +383,6 @@ object LlmQueries {
     * leak into the hash. Scan-shaped: one fused per-row loop, no
     * shuffle but the presentation sort. */
   def l13Quantize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     spark.sql("""
       SELECT vec_id, q.scale AS scale, q.q_sum AS q_sum,
@@ -432,7 +411,6 @@ object LlmQueries {
     * under 3 tokens have no 3-grams and are excluded identically on
     * both engines. */
   def l14LmScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     // shingle kernel INLINE in the explodes (round 18, the l9/s3
     // recipe); n_types is recovered as COUNT(*) after the left join —
@@ -440,12 +418,8 @@ object LlmQueries {
     // DISTINCT, so each (doc, h) row survives the join exactly once
     // and the group size IS size(g). Kernel evaluations per corpus
     // row: was 4 (size + explode + 2 inferred), now 1.
-    // ...and split itself behind a one-row explode barrier: the
-    // pushed-down `size(w) >= 3` gate otherwise re-tokenized every row
-    // a second time in each consumer's scan filter
     spark.sql("""
-      WITH toks AS (SELECT doc_id, lang, w FROM documents
-                    LATERAL VIEW explode(array(split(text, ' '))) tw AS w),
+      WITH toks AS (SELECT doc_id, lang, split(text, ' ') AS w FROM documents),
       vocab AS (SELECT DISTINCT explode(shingle_hashes(w)) AS v FROM toks
                 WHERE size(w) >= 3 AND lang = 'en' AND doc_id % 7 = 0),
       corpus AS (SELECT doc_id, explode(shingle_hashes(w)) AS h FROM toks
@@ -476,7 +450,6 @@ object LlmQueries {
     * (25–250 docs/source). */
   def l17DomainCap(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     val scored = spark.sql(
       s"WITH ${TextQueries.qualityCteSpark} SELECT doc_id, source, score FROM scored")
@@ -546,7 +519,6 @@ object LlmQueries {
     * fingerprint a fused kernel — no shuffle before the presentation
     * sort; at 100 TB this runs at scan speed like t1–t9. */
   def l23RepeatCollapse(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"""
       WITH t AS (SELECT doc_id, filter(split(text, ' '), w -> w <> '') AS w FROM documents),
@@ -579,7 +551,6 @@ object LlmQueries {
     * column never shuffles. */
   def l20WeightedSample(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     val prioritized = spark.sql(s"""
       WITH ${TextQueries.qualityCteSpark}
@@ -661,7 +632,6 @@ object LlmQueries {
     s"CAST((${FunctionQueries.kmvHashDuck(id)}) % 8 AS BIGINT) AS shard"
 
   def l18SubwordPack(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents")
       .selectExpr("doc_id",
         "subword_count(lower(text)) AS n_tokens",
@@ -951,13 +921,8 @@ object LlmQueries {
     * corpus twice (pair + left counts) — both id/count-width. */
   def l27BigramQuality(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    // tokenization behind a one-row explode barrier: the pushed-down
-    // `size(w) >= 2` gate otherwise re-ran split + the non-empty
-    // lambda filter a second time per row in each consumer's scan
-    // filter (toks feeds both the ref slice and the corpus branch)
     val toks = Tables.loadSpread(spark, dir, "documents")
-      .select(col("doc_id"),
-        explode(expr("array(filter(split(text, ' '), x -> x <> ''))")).as("w"))
+      .select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("w"))
       .filter(size(col("w")) >= 2)
     val bg = toks.select(col("doc_id"),
       explode(expr("zip_with(slice(w, 1, size(w) - 1), slice(w, 2, size(w) - 1), (a, b) -> concat(a, ' ', b))")).as("pair"))

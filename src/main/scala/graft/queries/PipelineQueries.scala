@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.functions.GraftFunctions
 import graft.functions.TextPrimitives._
 
 /** p1 — the end-to-end training-data pipeline the individual operators
@@ -60,32 +59,21 @@ object PipelineQueries {
       .select(lit("corpus").as("kind"), lit("all").as("key"), col("n1"), col("n2"))
 
   def p1TrainingPipeline(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
-    // Each per-row kernel (split, stop_hits, the rounded score with its
-    // regexp_replace pass) sits behind a one-row explode barrier:
-    // plain projection aliases get substituted into the pushed-down
-    // quality filter, which re-ran split 4x, stop_hits and the regex
-    // pass 2x per row (Filter codegen has no cross-conjunct CSE). A
-    // predicate referencing generator output stays above its Generate,
-    // so each kernel now runs exactly once per surviving row — and
-    // pred_lang reuses the SAME stop-hit count instead of a fresh
-    // split+stop_hits pass.
+    val w = "split(text, ' ')"
     spark.sql(s"""
       WITH survivors AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text),
       d AS (SELECT documents.* FROM documents JOIN survivors USING (doc_id)),
-      scored AS (SELECT doc_id, CAST(size(w) AS BIGINT) AS n_tokens, sh, text, score
-        FROM d
-        LATERAL VIEW explode(array(split(text, ' '))) tw AS w
-        LATERAL VIEW explode(array(${stopHitsSpark("w", stopwords("en"))})) ts AS sh
-        LATERAL VIEW explode(array(
-          round(0.5 * CAST(sh AS DOUBLE) / size(w)
-              + 0.3 * least(1.0, size(w) / 100.0)
+      scored AS (SELECT doc_id, lang, text, n_chars,
+          CAST(size($w) AS BIGINT) AS n_tokens,
+          round(0.5 * CAST(${stopHitsSpark(w, stopwords("en"))} AS DOUBLE) / size($w)
+              + 0.3 * least(1.0, size($w) / 100.0)
               + 0.2 * (1.0 - CAST(char_length(regexp_replace(text, '[A-Za-z0-9 ]', '')) AS DOUBLE)
-                             / CAST(n_chars AS DOUBLE)), 6))) tsc AS score
-        WHERE size(w) > 0)
+                             / CAST(n_chars AS DOUBLE)), 6) AS score
+        FROM d WHERE size($w) > 0)
       SELECT doc_id, n_tokens, score,
-        CASE WHEN sh > 0 THEN 'en' ELSE 'unknown' END AS pred_lang,
+        CASE WHEN ${stopHitsSpark(w, stopwords("en"))} > 0
+             THEN 'en' ELSE 'unknown' END AS pred_lang,
         ${rollingHashSpark("text")} AS fp
       FROM scored
       WHERE score >= $qualityThreshold
@@ -118,21 +106,13 @@ object PipelineQueries {
     * and only the final rollup (sources × 3 strata) aggregates — the
     * report is the biggest thing built after the scans. */
   def p4CorpusRelease(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"""
       WITH ${LlmQueries.curriculumCtes(sparkDialect = true)},
       survivors AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text),
       rep AS (SELECT doc_id FROM (
-                -- explode-barrier: a plain `split AS w` / `repeat_stats AS rs`
-                -- alias gets substituted into this pushed-down gate, re-running
-                -- repeat_stats 2x and split 5x per row (no cross-conjunct CSE
-                -- in Filter codegen); predicates on generator output stay
-                -- above the Generate, so each kernel runs once per row
-                SELECT doc_id, CAST(size(w) AS BIGINT) AS n_tokens, rs
-                FROM documents
-                LATERAL VIEW explode(array(split(text, ' '))) tw AS w
-                LATERAL VIEW explode(array(repeat_stats(w))) tr AS rs)
+                SELECT doc_id, CAST(size(w) AS BIGINT) AS n_tokens, repeat_stats(w) AS rs
+                FROM (SELECT doc_id, split(text, ' ') AS w FROM documents))
               WHERE $repGateSpark),
       rel AS (SELECT s.doc_id, s.stratum FROM sampled s
               JOIN survivors USING (doc_id) JOIN rep USING (doc_id))
@@ -144,24 +124,14 @@ object PipelineQueries {
   }
 
   def p3CurationPipeline(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"""
       WITH survivors AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text),
       d AS (SELECT documents.* FROM documents JOIN survivors USING (doc_id)),
-      -- explode-barrier on the tokenization (and on repeat_stats below):
-      -- a plain `split AS w` alias gets substituted into every consumer's
-      -- pushed-down gate (`size(w) >= 3`, the repetition thresholds),
-      -- re-running split up to 5x and repeat_stats 2x per row (Filter
-      -- codegen has no cross-conjunct CSE); predicates on generator
-      -- output stay above the Generate, so each kernel runs once per
-      -- row per consumer
-      toks AS (SELECT doc_id, w FROM d
-               LATERAL VIEW explode(array(split(text, ' '))) tw AS w),
+      toks AS (SELECT doc_id, split(text, ' ') AS w FROM d),
       rep AS (SELECT doc_id, n_tokens FROM (
-                SELECT doc_id, CAST(size(w) AS BIGINT) AS n_tokens, rs
-                FROM toks
-                LATERAL VIEW explode(array(repeat_stats(w))) tr AS rs)
+                SELECT doc_id, CAST(size(w) AS BIGINT) AS n_tokens, repeat_stats(w) AS rs
+                FROM toks)
               WHERE $repGateSpark),
       eval_g AS (SELECT DISTINCT explode(shingle_hashes(w)) AS g FROM toks
                  WHERE size(w) >= 3 AND doc_id % 97 = 0),
@@ -195,7 +165,6 @@ object PipelineQueries {
     * column is read once and never shuffles — every join in the
     * composition carries ids. */
   def p5RefreshPacks(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     val scored = spark.sql(s"""
       WITH survivors AS (SELECT MIN(doc_id) AS doc_id FROM (

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Tables
-import graft.functions.GraftFunctions
 import graft.functions.TextPrimitives._
 
 /** Text-analysis operators for the training-data pipeline (north star):
@@ -17,10 +16,8 @@ import graft.functions.TextPrimitives._
   */
 object TextQueries {
 
-  private def docs(spark: SparkSession, dir: String): Unit = {
-    GraftFunctions.register(spark)
+  private def docs(spark: SparkSession, dir: String): Unit =
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
-  }
 
   /** t1 — language ID: stopword-hit argmax over {en,de,es,fr} plus a
     * CJK-codepoint check for zh, deterministic tie-break by CASE order.
@@ -49,23 +46,19 @@ object TextQueries {
     * n_tokens > 0. ONE spelling shared by t2 and l17's per-domain cap
     * so the formula cannot drift between them; [[qualityCteDuck]] is
     * its oracle twin under the same contract. */
-  private[queries] val qualityCteSpark: String =
-    // split sits behind a one-row explode barrier: the pushed-down
-    // `n_tokens > 0` gate otherwise re-tokenizes every row a second
-    // time in the scan filter (Filter codegen has no cross-conjunct
-    // CSE); a predicate referencing generator output stays above the
-    // Generate, so the tokenization runs once per row
+  private[queries] val qualityCteSpark: String = {
+    val w = "split(text, ' ')"
     s"""scored AS (SELECT doc_id, source, n_tokens,
           round(0.5 * stop_hits / n_tokens
               + 0.3 * least(1.0, n_tokens / 100.0)
               + 0.2 * (1.0 - punct / CAST(n_chars AS DOUBLE)), 6) AS score
         FROM (SELECT doc_id, source, n_chars,
-                CAST(size(w) AS BIGINT) AS n_tokens,
-                CAST(${stopHitsSpark("w", stopwords("en"))} AS DOUBLE) AS stop_hits,
+                CAST(size($w) AS BIGINT) AS n_tokens,
+                CAST(${stopHitsSpark(w, stopwords("en"))} AS DOUBLE) AS stop_hits,
                 CAST(char_length(regexp_replace(text, '[A-Za-z0-9 ]', '')) AS DOUBLE) AS punct
-              FROM documents
-              LATERAL VIEW explode(array(split(text, ' '))) tw AS w)
+              FROM documents)
         WHERE n_tokens > 0)"""
+  }
 
   private[queries] val qualityCteDuck: String = {
     val w = "string_split(text, ' ')"
@@ -168,11 +161,6 @@ object TextQueries {
     * boolean is cross-engine stable by construction. */
   def t7Repetition(spark: SparkSession, dir: String): DataFrame = {
     docs(spark, dir)
-    // split behind a one-row explode barrier: the pushed-down
-    // `n_tokens >= 2` gate otherwise re-tokenized every row a second
-    // time in the scan filter (Filter codegen has no cross-conjunct
-    // CSE); the kernel itself was never duplicated — rs feeds only
-    // projections
     spark.sql("""
       SELECT doc_id, n_tokens, top_word_frac, dup_bigram_frac,
         (top_word_frac <= 0.2 AND dup_bigram_frac <= 0.2) AS keep_doc
@@ -182,8 +170,7 @@ object TextQueries {
           round(1.0 - rs[1] / CAST(n_tokens - 1 AS DOUBLE), 6) AS dup_bigram_frac
         FROM (SELECT doc_id, CAST(size(w) AS BIGINT) AS n_tokens,
                      repeat_stats(w) AS rs
-              FROM documents
-              LATERAL VIEW explode(array(split(text, ' '))) tw AS w)
+              FROM (SELECT doc_id, split(text, ' ') AS w FROM documents))
         WHERE n_tokens >= 2)
       ORDER BY doc_id""")
   }
@@ -240,12 +227,6 @@ object TextQueries {
     * the boolean is cross-engine stable by construction. */
   def t9CharDiversity(spark: SparkSession, dir: String): DataFrame = {
     docs(spark, dir)
-    // The kernel sits behind a one-row explode barrier: a plain
-    // projection alias gets substituted into the pushed-down
-    // `n_cp > 0` filter (Filter codegen has no cross-conjunct CSE, so
-    // char_stats ran twice per row); a predicate referencing generator
-    // output cannot be pushed below the Generate, so `cs` is computed
-    // exactly once per row.
     spark.sql("""
       SELECT doc_id, n_cp, n_distinct_cp, max_cp_count, simpson,
              (n_distinct_cp >= 10 AND simpson <= 0.2) AS keep_doc
@@ -255,8 +236,7 @@ object TextQueries {
                      / (CAST(n_cp AS DOUBLE) * CAST(n_cp AS DOUBLE)), 6) AS simpson
         FROM (SELECT doc_id, cs[0] AS n_cp, cs[1] AS n_distinct_cp,
                      cs[2] AS max_cp_count, cs[3] AS sum_c2
-              FROM documents
-              LATERAL VIEW explode(array(char_stats(text))) t AS cs)
+              FROM (SELECT doc_id, char_stats(text) AS cs FROM documents))
         WHERE n_cp > 0)
       ORDER BY doc_id""")
   }

@@ -759,7 +759,6 @@ object StreamingQueries {
 
   def p2StreamPipeline(spark: SparkSession, dir: String): DataFrame =
     StreamRun(spark, "p2", 4, "append") {
-      graft.functions.GraftFunctions.register(spark)
       p2Transform(fileStream(spark, docFeedFor(spark, dir), 1))
     }.rows.orderBy("doc_id")
 

@@ -17,6 +17,7 @@ private[graft] object ChaosHarness {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.register(spark)
     spark
   }
 
@@ -157,7 +158,6 @@ object ChaosP2Runner {
   def main(args: Array[String]): Unit = {
     val Array(master, execCp, marker, feed, out, ckpt) = args
     val spark = ChaosHarness.session(master, execCp, "chaos_p2")
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, udf}
     val kill = udf { (_: Long) =>
       if (new java.io.File(marker).mkdir()) Runtime.getRuntime.halt(137)
@@ -207,7 +207,6 @@ object ChaosP34Runner {
     // probe count so the victim holds live tasks + shuffle files)
     ChaosHarness.killWhen(execPids.head, marker, "chaos_p34")(
       () => tasksStarted >= probeTasks + 4)
-    graft.functions.GraftFunctions.register(spark)
     graft.queries.PipelineQueries.p3CurationPipeline(spark, sfDir)
       .write.mode("overwrite").parquet(outP3)
     graft.queries.PipelineQueries.p4CorpusRelease(spark, sfDir)

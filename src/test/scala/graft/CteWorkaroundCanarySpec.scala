@@ -29,6 +29,7 @@ object CteCanaryRunner {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.register(spark)
     try {
       // round 11: resemblancePairs itself became a stored-artifact READ
       // (no CTE chain in its plan) — the canary must target the CTE-

@@ -14,6 +14,7 @@ object D13ScaleProbe {
   def main(args: Array[String]): Unit = {
     val cores = args.headOption.map(_.toInt).getOrElse(4)
     val spark = graft.core.GraftSession.local(cores, "d13probe")
+    graft.functions.GraftFunctions.register(spark)
     def arm(dir: String): Unit = {
       val abs = new java.io.File(dir).getAbsolutePath
       spark.conf.set("spark.graft.artifacts.dir",

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Fnv1a32, GraftFunctions, PolyHash, TextPrimitives, Vectors}
+import graft.functions.{Fnv1a32, PolyHash, TextPrimitives, Vectors}
 
 /** The codegen expressions must be bit-identical to their portable SQL
   * spellings (that's what makes the DuckDB oracle valid for queries that
@@ -13,7 +13,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("PolyHash == builtin aggregate spelling on random strings") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(1)
     val strs = Seq.fill(200)(rnd.alphanumeric.take(rnd.nextInt(50)).mkString) :+ "" :+ "a"
     val df = strs.toDF("s").selectExpr(
@@ -50,7 +49,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
       .select($"raw", $"want", graft.functions.NfcNormalize($"raw").as("got"))
     assert(df.filter($"got" =!= $"want").count() == 0)
     // length drop visible to downstream operators (the t8 signal)
-    GraftFunctions.register(spark)
     val d = Seq("éé").toDF("s")
       .selectExpr("char_length(s) AS a", "char_length(" +
         "nfc_normalize(s)) AS b")
@@ -74,7 +72,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("SimHash30 majority-bit semantics") {
-    GraftFunctions.register(spark)
     // features: two of three share bits {0,2}; majority keeps exactly those
     val got = Seq(Seq(5L, 5L, 2L)).toDF("ids")
       .selectExpr("simhash30(ids) AS s").as[Long].head()
@@ -86,7 +83,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("ShingleHashes == array_distinct(transform(shingles, poly_hash)) on real docs") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .createOrReplaceTempView("documents")
     val diff = spark.sql(s"""
@@ -100,7 +96,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("RepetitionStats == builtin mode/distinct-bigram spellings on real docs + edges") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .createOrReplaceTempView("documents")
     // the builtin ref spelling is O(n²) per doc (count each distinct
@@ -123,7 +118,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("RepetitionStats == independent Scala counts on random small-alphabet docs (ScalaCheck)") {
-    GraftFunctions.register(spark)
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     // small alphabet + repetition-heavy lengths so collisions and runs
     // actually occur; the reference is a from-scratch Scala count, not
@@ -145,7 +139,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("MinHash16 == per-permutation array_min spelling") {
-    GraftFunctions.register(spark)
     val perms = TextPrimitives.minhashAB.zipWithIndex.map { case ((a, b), k) =>
       s"array_min(transform(ids, x -> ($a*x + $b) % ${TextPrimitives.P}))"
     }.mkString("array(", ", ", ")")
@@ -212,7 +205,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
         SELECT array_sort(array_distinct(transform(vars, v -> xxhash64(v)))) AS ref,
                deletion_nbh_hashes(p) AS fast
         FROM vs) WHERE ref != fast"""
-    graft.functions.GraftFunctions.register(spark)
     spark.sql("SELECT substring(text, 1, 16) AS p FROM documents")
       .createOrReplaceTempView("dnh_real")
     assert(spark.sql(refSql("dnh_real")).head().getLong(0) == 0,
@@ -470,7 +462,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("GramHashes == builtin transform(slice) spelling, positional, short-array empty") {
-    GraftFunctions.register(spark)
     val docs = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .selectExpr("split(text, ' ') AS w").where("size(w) >= 5")
     val df = docs.selectExpr(
@@ -488,7 +479,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("SpanCut == builtin filter(NOT exists interval) spelling; overlap-merge and edge masks") {
-    GraftFunctions.register(spark)
     // real corpus: mask every doc's d11 spans (or an arbitrary synthetic
     // mask where none exist) and compare against the interpreted spelling
     val docs = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
@@ -602,7 +592,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Int8QuantStats == builtin higher-order spelling on real embeddings + edges") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .createOrReplaceTempView("embeddings")
     // the portable spelling: four interpreted traversals with the SAME
@@ -643,7 +632,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("BpeTokenCount == size(regexp_extract_all(...)) on real documents + edges") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .createOrReplaceTempView("documents")
     val diff = spark.sql(s"""
@@ -679,7 +667,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("SubwordCount == independent greedy reference on real documents + edges") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .createOrReplaceTempView("documents")
     import spark.implicits._
@@ -726,7 +713,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("CharTrigrams == builtin transform(sequence, substring(lower)) spelling") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .createOrReplaceTempView("documents")
     val diff = spark.sql("""
@@ -743,7 +729,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("StopHits == builtin size(filter(...)) spelling on real documents") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .createOrReplaceTempView("documents")
     val set = TextPrimitives.stopwords("en")
@@ -756,7 +741,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("StrideSampleTokens == filter(transform(split(...))) spelling on real docs + edges") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .createOrReplaceTempView("documents")
     def refExpr(col: String, stride: Int): String =
@@ -790,7 +774,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("SQL registration: kmv_distinct and lsh_band_sigs callable from spark.sql") {
-    GraftFunctions.register(spark)
     val est = spark.sql(
       "SELECT kmv_distinct((48271 * id + 11) % 1000000007, 64) FROM range(40)")
       .head().getLong(0)
@@ -814,7 +797,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
         intercept[IllegalArgumentException](LshBandSigs(emb, bands, bits, dims))
       }
     assert(LshBandSigs(emb, 1, 64, 2).dataType != null)
-    GraftFunctions.register(spark)
     val e = intercept[Throwable](spark.sql(
       "SELECT lsh_band_sigs(CAST(array(1.0, -2.0) AS ARRAY<FLOAT>), 4, 65, 2)").collect())
     assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
@@ -822,7 +804,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("integer literal arguments: a BIGINT outside the Int range is refused, not truncated") {
-    GraftFunctions.register(spark)
     assert(spark.sql("SELECT kmv_distinct(id, 64L) FROM range(40)").head().getLong(0) == 40L)
     // 4294967298 = 2^32 + 2 used to run as k = 2
     val e = intercept[Throwable](
@@ -886,7 +867,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("CharStats == builtin explode/count spelling on real docs + unicode edges") {
-    GraftFunctions.register(spark)
     graft.core.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .createOrReplaceTempView("documents")
     // builtin restatement: split to characters, count per char, derive

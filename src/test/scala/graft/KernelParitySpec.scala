@@ -133,7 +133,6 @@ class KernelParitySpec extends AnyFunSuite with SparkSuite {
 
   (sqlCases ++ columnCases).toSeq.sortBy(_._1).foreach { case (name, f) =>
     test(s"$name: interpreted rows == codegen-only rows (fallback off)") {
-      GraftFunctions.register(spark)
       val slow = run(interpreted, f)
       val fast = run(codegenOnly, f)
       assert(slow.nonEmpty)
@@ -142,7 +141,6 @@ class KernelParitySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("projection kernels compile to a static companion call in the generated code") {
-    GraftFunctions.register(spark)
     withConfs(codegenOnly: _*) {
       val code = org.apache.spark.sql.execution.debug.codegenString(
         base.select(expr("simhash30(ids)"), expr("lsh_band_sigs(v, 3, 5, 4)"),
@@ -173,7 +171,6 @@ class KernelParitySpec extends AnyFunSuite with SparkSuite {
     ("NearestCells", projCol(NearestCells(col("v3"), cents, 2)), "embedding has 3 dims")
   ).foreach { case (name, f, msg) =>
     test(s"$name: a length/dims mismatch throws in both modes") {
-      GraftFunctions.register(spark)
       Seq(interpreted, codegenOnly).foreach { confs =>
         val e = intercept[Throwable](withConfs(confs: _*)(f(mismatch).collect()))
         assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&

@@ -410,8 +410,8 @@ class PlansSpec extends AnyFunSuite with SparkSuite {
     // no explode + shuffled per-doc aggregates: the only Exchange is
     // the presentation ORDER BY's range partitioning
     assert("Exchange".r.findAllMatchIn(p).size == 1, p.take(3000))
-    // exactly ONE Generate — the one-row explode barrier that keeps
-    // the pushed-down n_tokens gate from re-running split per row;
+    // exactly ONE Generate — the one-row explode ComputeOncePerRow puts
+    // under the pushed-down n_tokens gate so split runs once per row;
     // a second Generate would mean a real per-token explode crept in
     assert("Generate".r.findAllMatchIn(p).size == 1, p.take(3000))
   }
@@ -839,41 +839,20 @@ class PlansSpec extends AnyFunSuite with SparkSuite {
     assert(p.toLowerCase.contains("charstats") || p.contains("char_stats"), p.take(2000))
     // no per-character explode + shuffled per-(doc, char) aggregate
     assert("Exchange".r.findAllMatchIn(p).size == 1, p.take(3000))
-    // exactly ONE Generate — the one-row explode barrier that keeps
-    // the pushed-down n_cp gate from re-running char_stats per row
+    // exactly ONE Generate — the one-row explode ComputeOncePerRow puts
+    // under the pushed-down n_cp gate so char_stats runs once per row
     assert("Generate".r.findAllMatchIn(p).size == 1, p.take(3000))
   }
 
   test("explode barriers hold: no per-row kernel or tokenization inside a scan Filter") {
-    // Round 18 (optimization round 2): predicate pushdown substitutes
-    // projection aliases into Filter conditions, and Filter codegen has
-    // no cross-conjunct CSE — so a gate like `n_tokens >= 2 AND
-    // rs[0]/n_tokens <= 0.2` re-ran split 5x and repeat_stats 2x per
-    // scanned row. Each site now computes the expensive expression as
-    // a one-row explode (Generate) whose output a predicate cannot be
-    // pushed below. This pins the property for every fixed site: no
-    // custom kernel call and no split(text tokenization may appear
-    // inside any Filter condition line of the executed plan.
-    val fixed = Seq("t2_quality_score", "t7_repetition", "t9_char_diversity",
-      "l9_decontaminate", "l14_lm_score", "l15_data_card",
-      "l16_curriculum_sample", "l17_domain_cap", "l20_weighted_sample",
-      "l27_bigram_quality", "p1_training_pipeline", "p3_curation_pipeline",
-      "p4_corpus_release", "p5_refresh_packs", "d2_simhash", "d9_span_dedup")
-    val kernels = Seq("charstats(", "repetitionstats(", "stophits(",
-      "simhash30(", "polyhash(", "gramhashes(", "shinglehashes(", "split(text")
-    for (q <- fixed) {
-      val p = plan(q)
-      // d2's executed plan embeds the ids ARTIFACT BUILD subtree (the
-      // idsCte `size(w) >= 3` gate) through the persisted view's child
-      // plan — a build-once site deliberately left plain because
-      // CteWorkaroundCanarySpec pins that exact CTE chain; d2's own
-      // pinned property is the simhash30/kernel half only
-      val checked = if (q == "d2_simhash") kernels.filterNot(_ == "split(text")
-                    else kernels
-      val filterLines = p.linesIterator.filter(_.contains("Filter ")).mkString("\n")
-      val hits = checked.filter(k => filterLines.toLowerCase.contains(k))
-      assert(hits.isEmpty, s"$q re-runs ${hits.mkString(",")} inside a Filter:\n" +
-        filterLines.take(2000))
+    // graft.plans.ComputeOncePerRow computes each costly expression once
+    // per row (in a one-row explode under the Filter): on every declared
+    // key, no Filter evaluates a costly call twice, or one that the
+    // operator directly above it also evaluates
+    val bad = SparkEntry.queries.keys.toSeq.sorted.flatMap { q =>
+      CostlyCalls.repeated(SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan)
+        .map(hit => s"$q: $hit")
     }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 }

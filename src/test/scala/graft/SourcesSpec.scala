@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{AppendLogStore, CsvModes}
+import graft.sources.AppendLogStore
 
 /** Source-layer semantics: the append-log store must reproduce the
   * reference's create/append/get/merge behavior (§2.2 command table,
@@ -143,13 +143,4 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("naive vs proper CSV disagree exactly on quoted fields (probe 3.9)") {
-    val dir = Files.createTempDirectory("csv")
-    Files.write(dir.resolve("probe.csv"), "\"x,y\",b,c,d,e\n".getBytes)
-    val naive = CsvModes.readNaive(spark, dir.toString)
-      .select(col("fields")).as[Seq[String]].head()
-    assert(naive == Seq("\"x", "y\"", "b", "c", "d", "e")) // 6 naive fields
-    val proper = CsvModes.readProper(spark, dir.toString).head()
-    assert(proper.toSeq == Seq("x,y", "b", "c", "d", "e")) // 5 real fields
-  }
 }

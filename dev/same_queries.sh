@@ -13,6 +13,8 @@
 #   - oracle text: each key's SQL with runs of whitespace outside
 #     single-quoted literals collapsed to one space;
 #   - plans: `.explain("formatted")` text with expression ids (#12),
+#     the numbers of Spark's common-expression aliases (_common_expr_2,
+#     from a JVM-wide counter, so they depend on what planned before),
 #     exchange ids (plan_id=3), RDD ids (RDD[502]), the source lines
 #     of RDD call sites (Materialize.scala:46), object hashes (@1a2b),
 #     lambda class names and the side's scratch directory masked.
@@ -102,6 +104,7 @@ def mask(plan, side):
     plan = plan.replace(f"{work}/{side}", "<work>")
     plan = re.sub(r"\$\$Lambda[$/\w.]*", "$$Lambda", plan)
     plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"_common_expr_\d+", "_common_expr_", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[]", plan)
     plan = re.sub(r"\.scala:\d+", ".scala:", plan)

@@ -24,8 +24,10 @@ object SparkEntry {
     ReferenceQueries.r5GroupCount(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Each builder
-    * first registers the graft functions and the optimizer rule on its
-    * session, so no key's plan depends on which key ran before it. */
+    * first installs the engine's Catalyst layer on its session
+    * ([[GraftFunctions.register]]; a caller may pass a session that did
+    * not come from `GraftSession.local`), so no key's plan depends on
+    * which key ran before it. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     (ReferenceQueries.queries ++ ExtensionQueries.queries ++
       LlmQueries.queries ++ StreamingQueries.queries ++

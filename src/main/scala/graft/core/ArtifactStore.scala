@@ -92,7 +92,7 @@ object ArtifactStore {
     def walk(f: java.io.File, rel: String): Seq[String] =
       if (f.isDirectory)
         // listFiles is null on an IO/permission error — fail soft to
-        // "no children" like Compaction's walk, never NPE
+        // "no children", never NPE
         Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName).toSeq
           .flatMap(c => walk(c, s"$rel/${c.getName}"))
       else Seq(s"$rel:${f.length}:${f.lastModified}")

@@ -66,7 +66,10 @@ object Tables {
     spread(spark, load(spark, sfDir, name))
 }
 
-/** Session factory with the settings every entry point shares.
+/** Session factory with the settings every entry point shares, and
+  * with the engine's Catalyst layer installed
+  * ([[graft.functions.GraftFunctions.register]]), so every session it
+  * builds plans a query the way a declared key is planned.
   * local[N] for tests; on a real cluster the master/memory flags come
   * from spark-submit and everything else here still applies.
   */
@@ -81,6 +84,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.register(spark)
     spark
   }
 }

@@ -1305,8 +1305,7 @@ object GraftFunctions {
   }
 
   /** Every registered SQL function: name → (accepted argument counts,
-    * builder). [[register]] and [[graft.plans.GraftExtensions]] both
-    * read this table through [[checkedBuilder]]. */
+    * builder). [[register]] reads this table through [[checkedBuilder]]. */
   private val builders: Map[String, (Range, Seq[Expression] => Expression)] = Map(
     "poly_hash" -> (1 to 1, e => PolyHash(e(0))),
     "simhash30" -> (1 to 1, e => SimHash30(e(0))),
@@ -1348,7 +1347,7 @@ object GraftFunctions {
     * does not accept — with the function, the expected and the given
     * count in the message — instead of dropping extra arguments or
     * failing on a missing one with a bare index error. */
-  private[graft] def checkedBuilder(name: String): Seq[Expression] => Expression = {
+  private def checkedBuilder(name: String): Seq[Expression] => Expression = {
     val (arity, build) = builders(name)
     val expected = if (arity.size == 1) s"${arity.start}" else s"${arity.start} to ${arity.end}"
     exprs => {
@@ -1358,16 +1357,21 @@ object GraftFunctions {
     }
   }
 
-  /** Registers every function and installs
-    * [[graft.plans.ComputeOncePerRow]] on the session; idempotent.
-    * `SparkEntry.queries` calls it before every query it builds. */
+  /** The engine's whole Catalyst layer, installed on `spark`: every
+    * function of the builder table, the [[graft.plans.ComputeOncePerRow]]
+    * optimizer rule and the [[graft.plans.TopKPerKeyStrategy]] planner
+    * strategy. Idempotent. `GraftSession.local` calls it on every
+    * session it builds, and `SparkEntry.queries` before every key, since
+    * its caller may pass a session of its own. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.keys.filterNot(n => reg.functionExists(FunctionIdentifier(n)))
       .foreach(n => reg.createOrReplaceTempFunction(n, checkedBuilder(n), "scala_udf"))
+    val ex = spark.experimental
     val rule = graft.plans.ComputeOncePerRow
-    if (!spark.experimental.extraOptimizations.contains(rule))
-      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+    if (!ex.extraOptimizations.contains(rule)) ex.extraOptimizations = ex.extraOptimizations :+ rule
+    val strategy = graft.plans.TopKPerKeyStrategy
+    if (!ex.extraStrategies.contains(strategy)) ex.extraStrategies = ex.extraStrategies :+ strategy
   }
 }
 

@@ -64,16 +64,12 @@ class AppendLogStore(spark: SparkSession, root: String, tsCol: String = "ts") {
   /** Committed log segments right now — the snapshot unit of
     * [[compact]]. A segment counts only once its `_SUCCESS` marker
     * exists: an in-flight concurrent append (no marker yet) is neither
-    * read nor deleted. Flat `part-*` files directly under `log/` (the
-    * layout a pre-segment version of this store wrote) are read and
-    * compacted too, so an existing store migrates transparently. */
+    * read nor deleted. */
   private def logSegments: Seq[org.apache.hadoop.fs.Path] =
     if (!fs.exists(hPath(logPath))) Seq.empty
     else fs.listStatus(hPath(logPath)).toSeq
-      .filter(st =>
-        (st.isDirectory && st.getPath.getName.startsWith("append_") &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))) ||
-        (st.isFile && st.getPath.getName.startsWith("part-")))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("append_") &&
+        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
       .map(_.getPath)
       .sortBy(_.getName)
 

@@ -234,7 +234,7 @@ object StreamingQueries {
     * load into join state first, then the purchases stream through
     * the buffered state. Serves StreamJoinThroughputSpec — the
     * 4-batch demo feeds measure the per-trigger fixed-cost floor
-    * (StreamingFloorProbe), x51 measures keyed-dedup state
+    * (PLANS.md, "Retired probe mains"), x51 measures keyed-dedup state
     * throughput, and this feed completes the streaming cost model
     * with rows/s through the FOUR join state stores. */
   private[graft] def joinThroughputFeedFor(spark: SparkSession, dir: String): String =

@@ -48,7 +48,6 @@ object D13FourthDecadeProbe {
   def main(args: Array[String]): Unit = {
     val cores = args.headOption.map(_.toInt).getOrElse(32)
     val spark = graft.core.GraftSession.local(cores, "d13probe4")
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
 
     val src = new java.io.File("target/sf10eq").getAbsolutePath

@@ -1,8 +1,7 @@
 package graft
 
-/** Test-scope instrument (like StreamingFloorProbe, never shipped in
-  * the library): times the d13 containment-pair BUILD across the
-  * three measured decades — the round-12 probe that attributed the
+/** Test-scope instrument (never shipped in the library): times the
+  * d13 containment-pair BUILD across the three measured decades — the round-12 probe that attributed the
   * third-decade superlinearity to hash-ordered prefixes (50M
   * candidates for 25.6k verified pairs; the array-carrying verify
   * join stops broadcasting at sf10eq) and now re-measures the
@@ -14,7 +13,6 @@ object D13ScaleProbe {
   def main(args: Array[String]): Unit = {
     val cores = args.headOption.map(_.toInt).getOrElse(4)
     val spark = graft.core.GraftSession.local(cores, "d13probe")
-    graft.functions.GraftFunctions.register(spark)
     def arm(dir: String): Unit = {
       val abs = new java.io.File(dir).getAbsolutePath
       spark.conf.set("spark.graft.artifacts.dir",

@@ -1,46 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.functions.GraftFunctions
-import graft.plans.GraftExtensions
 
 /** A registered kernel called with the wrong number of arguments must
   * fail with an error that names the function, the expected count and
-  * the given count — through `GraftFunctions.register` and through the
-  * functions `GraftExtensions` injects. */
+  * the given count. */
 class FunctionArgCountSpec extends AnyFunSuite with SparkSuite {
 
   /** The messages of `sql`'s failure and of every cause under it. */
-  private def failure(session: SparkSession, sql: String): String = {
-    val e = intercept[Exception](session.sql(sql).collect())
+  private def failure(sql: String): String = {
+    val e = intercept[Exception](spark.sql(sql).collect())
     Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).mkString(" | ")
   }
 
   test("an extra argument is refused, not silently dropped") {
-    GraftFunctions.register(spark)
-    val m = failure(spark, "SELECT poly_hash('text', 1)")
+    val m = failure("SELECT poly_hash('text', 1)")
     assert(m.contains("poly_hash expects 1 argument(s), got 2"), m)
   }
 
   test("a missing argument names the function instead of failing on an index") {
-    GraftFunctions.register(spark)
-    val m = failure(spark, "SELECT cosine_similarity(array(CAST(1.0 AS FLOAT)))")
+    val m = failure("SELECT cosine_similarity(array(CAST(1.0 AS FLOAT)))")
     assert(m.contains("cosine_similarity expects 2 argument(s), got 1"), m)
   }
 
   test("a function with optional arguments reports its accepted range") {
-    GraftFunctions.register(spark)
-    val m = failure(spark, "SELECT lsh_band_sigs(array(CAST(1.0 AS FLOAT)), 2)")
+    val m = failure("SELECT lsh_band_sigs(array(CAST(1.0 AS FLOAT)), 2)")
     assert(m.contains("lsh_band_sigs expects 3 to 4 argument(s), got 2"), m)
-    val m5 = failure(spark, "SELECT lsh_band_sigs(array(CAST(1.0 AS FLOAT)), 2, 4, 64, 1)")
+    val m5 = failure("SELECT lsh_band_sigs(array(CAST(1.0 AS FLOAT)), 2, 4, 64, 1)")
     assert(m5.contains("lsh_band_sigs expects 3 to 4 argument(s), got 5"), m5)
   }
 
   test("accepted counts still resolve") {
-    GraftFunctions.register(spark)
     assert(spark.sql("SELECT poly_hash('hello')").collect().head.getLong(0) == 418513571L)
     val v = "array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))"
     assert(math.abs(spark.sql(s"SELECT cosine_similarity($v, $v)").collect().head.getDouble(0) - 1.0) < 1e-12)
@@ -48,24 +39,5 @@ class FunctionArgCountSpec extends AnyFunSuite with SparkSuite {
     // arities must resolve
     assert(spark.sql(s"SELECT lsh_band_sigs($v, 2, 4)").schema.length == 1)
     assert(spark.sql(s"SELECT lsh_band_sigs($v, 2, 4, 2)").schema.length == 1)
-  }
-
-  test("the extension-injected functions check the count too") {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[4]")
-      .appName("FunctionArgCountSpec")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val m = failure(ext, "SELECT fnv1a32('a', 'b')")
-      assert(m.contains("fnv1a32 expects 1 argument(s), got 2"), m)
-      assert(ext.sql("SELECT fnv1a32('')").collect().head.getLong(0) == 2166136261L)
-    } finally {
-      // later suites must not inherit the extensions session as default
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
   }
 }

@@ -8,9 +8,10 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The stream-stream JOIN throughput row (round 12): x51 gives the
-  * keyed-dedup state path a real rows/s number and StreamingFloorProbe
-  * pins the per-trigger fixed cost, but the join state path (x31/x32)
-  * had only floor-dominated demo feeds. This drives x31's EXACT join
+  * keyed-dedup state path a real rows/s number and the retired
+  * streaming-floor probe (PLANS.md) pinned the per-trigger fixed cost,
+  * but the join state path (x31/x32) had only floor-dominated demo
+  * feeds. This drives x31's EXACT join
   * definition over the 10× two-source feed — every view loads into
   * buffered join state in batch 1, every purchase streams through it
   * in batch 2 — so wall time is dominated by rows through the four

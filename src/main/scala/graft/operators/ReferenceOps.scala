@@ -120,7 +120,12 @@ object ReferenceOps {
     * Reference resolves ts collisions by map-overwrite (last writer wins,
     * nondeterministic); engine uses explicit arg-min on `tieBreak` so the
     * merge is deterministic and permutation-invariant (SURVEY §7 risk 4).
+    * One range shuffle on ts serves both steps: it clusters each ts in
+    * one partition for the dedup window, and it already is the
+    * ordered distribution the final sort needs, so the plan holds one
+    * exchange, not a hash shuffle plus a range shuffle.
     */
   def tsOrderedMerge(tsCol: String, tieBreak: Seq[Column])(df: DataFrame): DataFrame =
-    dedupFirst(Seq(tsCol), tieBreak)(df).orderBy(col(tsCol) +: tieBreak: _*)
+    dedupFirst(Seq(tsCol), tieBreak)(df.repartitionByRange(col(tsCol)))
+      .orderBy(col(tsCol) +: tieBreak: _*)
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.ReferenceOps
 
@@ -29,29 +30,60 @@ import graft.operators.ReferenceOps
   * stance — this class owns only the VISIBLE semantics: append buffering
   * and ordered convergent merge.
   *
-  * Scale: appends are blind writes (no read-modify-write, no lock);
-  * merge is one `dropDuplicates`-shaped shuffle over the log partition
-  * being read. A 100 TB table with a small hot log pays the merge only
-  * on the log, never rewriting base until `compact`.
+  * Scale: appends are blind writes (no read-modify-write, no lock), and
+  * a read pays the merge only on the log, never rewriting base until
+  * `compact`. Three invariants keep a read's fixed cost to one scan and
+  * one shuffle:
+  *  - the table schema is fixed at `create` (a store opened on an
+  *    existing root takes it from base's footer once), so reads and
+  *    appends start no schema-inference job;
+  *  - each append commits ONE data file, so a read runs one map task
+  *    per split, not one per appended partition;
+  *  - the merge is one range shuffle on ts that serves both the dedup
+  *    and the ascending order ([[ReferenceOps.tsOrderedMerge]]).
   */
 class AppendLogStore(spark: SparkSession, root: String, tsCol: String = "ts") {
 
   private def basePath = s"$root/base"
   private def logPath = s"$root/log"
 
+  /** The table schema: recorded by [[create]], or read from base once
+    * per instance. Every write goes through a check against it, so it
+    * never changes. */
+  @volatile private var fixed: StructType = null
+  private def schema: StructType = {
+    if (fixed == null) {
+      recoverBaseSwap()
+      fixed = spark.read.parquet(basePath).schema
+    }
+    fixed
+  }
+
   /** `create local hydfs` — fails if the table already exists. */
-  def create(df: DataFrame): Unit =
+  def create(df: DataFrame): Unit = {
     df.write.mode(SaveMode.ErrorIfExists).parquet(basePath)
+    fixed = df.schema
+  }
 
   /** `append local hydfs` — buffered blind write; rows must carry the
     * writer timestamp column. Each append commits its OWN log segment
     * directory (`log/append_<uuid>/`): concurrent writers never share a
     * commit scope (a single shared append-mode write would race on the
     * committer's `_temporary` dir), which is what makes the reference's
-    * multiappend — N simultaneous clients, no lock — safe here. */
+    * multiappend — N simultaneous clients, no lock — safe here. One
+    * data file per append: a HyDFS append is one client file, and every
+    * extra file would be one more map task on every later read (the
+    * frame's own upstream also runs in one task, which suits a
+    * client-file-sized append; a bulk load belongs in `create`). The
+    * rows must have the table's column names and types (nullability
+    * aside), or the append throws before writing. */
   def append(df: DataFrame): Unit = {
     require(df.columns.contains(tsCol), s"append rows need a '$tsCol' column")
-    df.write.mode(SaveMode.ErrorIfExists)
+    // a frame the store cannot read back would fail every later read
+    def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    require(shape(df.schema) == shape(schema),
+      s"append rows ${df.schema.simpleString} do not match the table's ${schema.simpleString}")
+    df.coalesce(1).write.mode(SaveMode.ErrorIfExists)
       .parquet(s"$logPath/append_${java.util.UUID.randomUUID()}")
   }
 
@@ -84,10 +116,10 @@ class AppendLogStore(spark: SparkSession, root: String, tsCol: String = "ts") {
 
   private def mergedOver(logFiles: Seq[org.apache.hadoop.fs.Path],
                          tieBreak: Seq[String]): DataFrame = {
-    val base = spark.read.parquet(basePath)
+    val base = spark.read.schema(schema).parquet(basePath)
     val all =
       if (logFiles.isEmpty) base
-      else base.unionByName(spark.read.parquet(logFiles.map(_.toString): _*))
+      else base.union(spark.read.schema(schema).parquet(logFiles.map(_.toString): _*))
     ReferenceOps.tsOrderedMerge(tsCol, tieBreak.map(col))(all)
   }
 

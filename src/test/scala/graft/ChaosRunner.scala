@@ -232,15 +232,8 @@ object ChaosP34Runner {
 object ChaosArtifactRunner {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, artDir) = args
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("chaos_artifact")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.artifacts.dir", artDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(4, "chaos_artifact")
+    spark.conf.set("spark.graft.artifacts.dir", artDir)
     graft.queries.AnnQueries.d8SemanticDedup(spark, sfDir).collect()
     spark.stop()
   }
@@ -260,15 +253,8 @@ object ChaosArtifactRunner {
 object ChaosArtifactRaceRunner {
   def main(args: Array[String]): Unit = {
     val Array(artDir, syncDir, tag) = args
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("chaos_artifact_race")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.artifacts.dir", artDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(2, "chaos_artifact_race")
+    spark.conf.set("spark.graft.artifacts.dir", artDir)
     import spark.implicits._
     val builds = new java.util.concurrent.atomic.AtomicLong(0)
     val pid = ProcessHandle.current().pid()

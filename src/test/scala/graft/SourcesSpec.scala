@@ -143,4 +143,22 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("append refuses a frame the store cannot read back; earlier rows stay readable") {
+    val root = Files.createTempDirectory("als_schema").toString
+    val store = new AppendLogStore(spark, root)
+    store.create(Seq((1L, "x")).toDF("ts", "payload"))
+    store.append(Seq((2L, "y")).toDF("ts", "payload"))
+    val before = store.read(Seq("payload")).as[(Long, String)].collect().toSeq
+    assert(before == Seq((1L, "x"), (2L, "y")))
+    // a different column type, then an extra column
+    intercept[IllegalArgumentException](store.append(Seq((3L, 7L)).toDF("ts", "payload")))
+    intercept[IllegalArgumentException](store.append(Seq((4L, "z", 1)).toDF("ts", "payload", "extra")))
+    assert(store.read(Seq("payload")).as[(Long, String)].collect().toSeq == before)
+    // a store opened on the same root takes the schema from base
+    val reopened = new AppendLogStore(spark, root)
+    intercept[IllegalArgumentException](reopened.append(Seq((3L, 7L)).toDF("ts", "payload")))
+    reopened.append(Seq((3L, "w")).toDF("ts", "payload"))
+    assert(reopened.read(Seq("payload")).as[(Long, String)].collect().toSeq == before :+ ((3L, "w")))
+  }
+
 }
